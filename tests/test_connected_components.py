@@ -96,17 +96,3 @@ def test_session_conf_never_mutated_by_distributed_rounds(spark):
     assert got == {("a", "a"), ("b", "a"), ("c", "a")}
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
-
-def test_round_width_guards_non_numeric_conf():
-    """ADVICE r4 #3: a managed platform may set the session width to a
-    non-numeric value ('auto'); the width helper must fall back to
-    defaultParallelism instead of raising."""
-    from video_duplicate_finder_python_spark.operators.connected_components import (
-        _round_width,
-    )
-
-    assert _round_width("64", 72_000, 8) == 1
-    assert _round_width("64", 1_000_000, 8) == 5
-    assert _round_width("64", 100_000_000, 8) == 64   # ceiling: session width
-    assert _round_width("auto", 100_000_000, 8) == 8  # ceiling: fallback
-    assert _round_width(None, 72_000, 8) == 1

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from video_duplicate_finder_python_spark.config import DedupConfig
 
 
@@ -161,24 +163,73 @@ def test_stage_metrics_emitted(pipeline_result):
     }
 
 
-def test_merged_candidates_equal_legacy_per_source(spark, corpus, pipeline_result):
-    """The round-6 single-shuffle candidate stage must be a pure plan
-    optimization: identical verified pairs (including per-pair source
-    tags) and identical clusters vs the legacy per-source DAG."""
-    from video_duplicate_finder_python_spark import DedupConfig, DedupPipeline
+def test_verified_pair_sources_match_signature_collisions(
+    spark, corpus, pipeline_result, tmp_path
+):
+    """Every verified pair carries exactly the tags of the candidate
+    spaces it collides in, and every colliding pair is verified. The tags
+    are recomputed in the driver from the durable signatures checkpoint:
+    ``minhash`` = a shared band hash (explode_bands), ``simhash`` = a
+    shared 16-bit pigeonhole chunk at Hamming <= simhash_hamming_max,
+    ``suffix`` = a shared CDC fingerprint. No bucket may be capped, so a
+    missing tag cannot hide behind a skew drop. The durable run must also
+    reproduce the shared in-memory run's pairs and clusters."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    from video_duplicate_finder_python_spark import DedupPipeline
     from video_duplicate_finder_python_spark.corpus import pages_spark_df
+    from video_duplicate_finder_python_spark.operators.lsh import explode_bands
 
-    legacy = DedupPipeline(
-        spark, DedupConfig(merged_candidates=False)
-    ).run(pages_spark_df(spark, corpus))
+    cfg = DedupConfig()
+    res = DedupPipeline(spark, cfg, checkpoint_dir=str(tmp_path)).run(
+        pages_spark_df(spark, corpus)
+    )
+    counters = res.metrics["candidates"]["counters"]
+    assert counters and set(counters.values()) == {0}, counters
 
-    def pair_map(res):
+    sigs = spark.read.parquet(str(tmp_path / "signatures"))
+    buckets: dict[tuple, set] = defaultdict(set)
+    for r in explode_bands(sigs, cfg).collect():
+        buckets[("minhash", r["band_id"], r["band_hash"])].add(r["url"])
+    simhash = {}
+    width = cfg.simhash_bits // cfg.simhash_chunks
+    for r in sigs.select("url", "simhash", "fingerprints").collect():
+        sim = r["simhash"] & ((1 << 64) - 1)
+        simhash[r["url"]] = sim
+        for j in range(cfg.simhash_chunks):
+            chunk = (sim >> (j * width)) & ((1 << width) - 1)
+            buckets[("simhash", j, chunk)].add(r["url"])
+        for fp in r["fingerprints"]:
+            buckets[("suffix", fp)].add(r["url"])
+
+    expected: dict[tuple, set] = defaultdict(set)
+    for key, members in buckets.items():
+        for a, b in combinations(sorted(members), 2):
+            if key[0] == "simhash" and (
+                bin(simhash[a] ^ simhash[b]).count("1") > cfg.simhash_hamming_max
+            ):
+                continue
+            expected[(a, b)].add(key[0])
+
+    got = {(r["url_a"], r["url_b"]): set(r["sources"]) for r in res.pairs.collect()}
+    assert {"minhash", "simhash", "suffix"} <= set().union(*got.values())
+    assert got == dict(expected)
+
+    def pair_map(pr):
         return {
             (r["url_a"], r["url_b"]): (
                 tuple(sorted(r["sources"])), r["is_dup"], r["jaccard"]
             )
-            for r in res.pairs.collect()
+            for r in pr.pairs.collect()
         }
 
-    assert pair_map(legacy) == pair_map(pipeline_result)
-    assert _cluster_map(legacy.clusters) == _cluster_map(pipeline_result.clusters)
+    assert pair_map(res) == pair_map(pipeline_result)
+    assert _cluster_map(res.clusters) == _cluster_map(pipeline_result.clusters)
+
+
+def test_empty_candidate_sources_rejected():
+    """A config with no candidate source has no candidate stage to build;
+    it is rejected at construction, not after the signature stage ran."""
+    with pytest.raises(ValueError, match="candidate_sources"):
+        DedupConfig(candidate_sources=())

@@ -243,11 +243,13 @@ def test_singleton_groups_excluded_before_group_shuffle(spark):
     assert [(r["url_a"], r["url_b"]) for r in got] == [("u00", "u01")]
 
 
-def test_suffix_array_only_config_runs_under_merged_default(spark):
-    """candidate_sources=("suffix_array",) with the round-6 default
-    merged_candidates=True must route to the per-source path instead of
-    crashing on an empty signature-source union (regression: IndexError
-    at plan-build time). The planted shared span must still cluster."""
+def test_suffix_array_only_config_runs_through_candidate_tail(spark):
+    """candidate_sources=("suffix_array",) enables no signature-derived
+    source, so the candidate stage must skip the bucket shuffle and start
+    its tail from the suffix-array pairs instead of crashing on an empty
+    (src, key) union (regression: IndexError at plan-build time). The
+    planted shared span must still cluster, and the only drop counter is
+    the suffix array's."""
     from video_duplicate_finder_python_spark.config import DedupConfig
     from video_duplicate_finder_python_spark.plans.pipeline import DedupPipeline
 
@@ -266,7 +268,9 @@ def test_suffix_array_only_config_runs_under_merged_default(spark):
         candidate_sources=("suffix_array",),
         suffix_group_expr="parse_url(url, 'HOST')",
     )
-    assert cfg.merged_candidates  # the default this test guards
     res = DedupPipeline(spark, cfg).run(pages)
     members = {r["url"] for r in res.clusters.collect()}
     assert members == {f"https://solo.example/{i}" for i in range(4)}
+    assert res.metrics["candidates"]["counters"] == {
+        "suffix_array_dropped_members": 0
+    }

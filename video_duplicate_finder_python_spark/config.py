@@ -47,14 +47,6 @@ class DedupConfig:
     # recall is scoped to the group key, and enabling it unions a 4th pair
     # source into the same verify → CC tail (SURVEY §7 step 8)
     candidate_sources: tuple = ("minhash", "simhash", "suffix")
-    # One shuffle for all signature-derived sources (round 6): the
-    # minhash-band / simhash-chunk / CDC-fingerprint rows are unioned into
-    # a single (src, key) space and ranked/joined/deduped ONCE — 3 window
-    # shuffles + 3 per-source dedup shuffles + 1 union-groupBy collapse
-    # into 1 window + 1 join + 1 groupBy, and the eager hot-key sizes pass
-    # runs once instead of per source. False = the per-source legacy DAG
-    # (kept for A/B and for callers that consume sources separately).
-    merged_candidates: bool = True
     suffix_group_expr: str = "parse_url(url, 'HOST')"  # SQL expr, group key
     suffix_max_docs_per_group: int = 4096   # pre-shuffle doc cap (counted)
     suffix_max_chars_per_group: int = 8_000_000  # pre-shuffle char cap
@@ -74,14 +66,13 @@ class DedupConfig:
     # --- determinism ---
     seed: int = 42
 
-    # --- parallelism hints ---
-    shuffle_partitions: int = 32
-
     KNOWN_SOURCES = ("minhash", "simhash", "suffix", "suffix_array")
 
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perm:
             raise ValueError("bands * rows_per_band must equal num_perm")
+        if not self.candidate_sources:
+            raise ValueError("candidate_sources must name at least one source")
         unknown = set(self.candidate_sources) - set(self.KNOWN_SOURCES)
         if unknown:
             raise ValueError(f"unknown candidate sources: {sorted(unknown)}")

@@ -1,6 +1,4 @@
 from .text import extract_text_bytes, extract_text_col, extract_text_udf
-from .shingles import shingle_hashes_col
-from .signatures import make_signature_udf
 from .fingerprint import cdc_fingerprints, cdc_fingerprints_udf
 from .lcs import longest_common_substring_len
 
@@ -8,8 +6,6 @@ __all__ = [
     "extract_text_bytes",
     "extract_text_col",
     "extract_text_udf",
-    "shingle_hashes_col",
-    "make_signature_udf",
     "cdc_fingerprints",
     "cdc_fingerprints_udf",
     "longest_common_substring_len",

@@ -7,8 +7,9 @@ of a composite hash *string* per file, each document gets typed columns —
 
 All math is NumPy over the whole Arrow batch: the 128-perm MinHash is one
 ``(perms × shingles)`` broadcasted multiply-add + min per doc, the SimHash
-is a bit-matrix majority vote. No per-row Python hashing — shingle hashes
-arrive pre-computed (JVM xxhash64, see shingles.py).
+is a bit-matrix majority vote. Shingle hashes come from the same UDF's
+batch-factorized NumPy shingling (``batch_shingle_hashes`` below), so the
+text crosses the JVM→Arrow boundary once.
 
 MinHash family: h_i(x) = (a_i * x + b_i) mod 2^64 (wraparound), keep the
 top 31 bits of the minimum → int32. The (a·x+b) multiply-shift family over
@@ -114,28 +115,6 @@ def simhash_of(shingles: np.ndarray) -> int:
     # distinct powers of two: the sum IS the bitwise OR, exact in uint64
     packed = int((maj.astype(np.uint64) << _SIM_SHIFTS).sum(dtype=np.uint64))
     return packed - (1 << 64) if packed >= (1 << 63) else packed
-
-
-def make_signature_udf(seed: int, num_perm: int):
-    """Build the struct-returning pandas UDF (minhash, simhash, n_shingles)
-    over a pre-computed shingle-hash array column."""
-    a_params, b_params = minhash_params(seed, num_perm)
-
-    @F.pandas_udf(SIGNATURE_SCHEMA)
-    def signature_udf(shingles: pd.Series) -> pd.DataFrame:
-        minhashes: list[np.ndarray] = []
-        simhashes: list[int] = []
-        counts: list[int] = []
-        for row in shingles:
-            h = np.asarray(row if row is not None else [], dtype=np.int64).view(np.uint64)
-            minhashes.append(minhash_of(h, a_params, b_params))
-            simhashes.append(simhash_of(h))
-            counts.append(int(h.size))
-        return pd.DataFrame(
-            {"minhash": minhashes, "simhash": simhashes, "n_shingles": counts}
-        )
-
-    return signature_udf
 
 
 # --------------------------------------------------------------------------

@@ -1,8 +1,5 @@
 from .exact import content_hash_col, exact_duplicate_groups
 from .expand import expand_pairs_through_reps
-from .lsh import minhash_band_candidates
-from .simhash_candidates import simhash_candidates
-from .substring import substring_candidates
 from .verify import verify_candidates
 from .connected_components import connected_components
 
@@ -10,9 +7,6 @@ __all__ = [
     "content_hash_col",
     "exact_duplicate_groups",
     "expand_pairs_through_reps",
-    "minhash_band_candidates",
-    "simhash_candidates",
-    "substring_candidates",
     "verify_candidates",
     "connected_components",
 ]

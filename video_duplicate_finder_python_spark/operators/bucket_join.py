@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .shuffle_width import narrowed_width
+
 
 def bucket_pairs(
     df: DataFrame,
@@ -130,26 +132,16 @@ def bucket_pairs(
     ):
         salt_threshold = None
 
-    # Scale-adaptive shuffle width (the guide's §2.2 "fewer, larger
-    # partitions" + §2.4 shared exchange; same rule CC's _round_width
-    # applies to its star rounds): a keyed input whose size bound says the
-    # session width would make near-empty partitions gets ONE explicit
-    # repartition on the bucket keys sized to the data — the ranking
-    # window, the pair self-join and the singleton filter all reuse that
-    # partitioning, so no further exchange is inserted, and every
-    # downstream map-task count shrinks with it (the M×R shuffle-block
-    # matrix is the measured fixed cost here: a 64-wide exchange of 116k
-    # rows cost 0.86 s on this host against 0.20 s at width 8). Inputs big
-    # enough to fill the session width are untouched — the width is
-    # derived from the input bound, never from the local core count.
+    # Scale-adaptive shuffle width (operators/shuffle_width.py): a keyed
+    # input whose size bound says the session width would make near-empty
+    # partitions gets ONE explicit repartition on the bucket keys sized to
+    # the data — the ranking window, the pair self-join and the singleton
+    # filter all reuse that partitioning, so no further exchange is
+    # inserted, and every downstream map-task count shrinks with it.
+    # Inputs big enough to fill the session width are untouched.
     if bucket_rows_bound is not None and bucket_rows_bound > 0:
-        spark = df.sparkSession
-        try:
-            ceiling = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            ceiling = spark.sparkContext.defaultParallelism
-        width = min(ceiling, bucket_rows_bound // 2000 + 1)
-        if width < ceiling:
+        width = narrowed_width(df.sparkSession, bucket_rows_bound, 2000)
+        if width is not None:
             df = df.repartition(width, *key_cols)
 
     def rank_unsalted(part: DataFrame, cap: int) -> DataFrame:
@@ -173,8 +165,7 @@ def bucket_pairs(
         # over-threshold keys is pigeonhole-bounded by rows/threshold and
         # truncated at max_collected_hot+1). The total then derives the
         # width for the ranking window / pair self-join: a small input
-        # gets one narrow keyed repartition both reuse (the M×R
-        # shuffle-block matrix is the measured fixed cost, see
+        # gets one narrow keyed repartition both reuse (see
         # bucket_rows_bound above); a full-width input keeps the exact
         # prior plan. An earlier r7 shape ran a SEPARATE df.count()
         # before the sizes pass — one whole extra pass over the banded
@@ -195,12 +186,8 @@ def bucket_pairs(
         ).first()
         n_rows = int(stats["_n"] or 0)
         hot_rows = list(stats["_hot"] or [])
-        try:
-            ceiling = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            ceiling = df.sparkSession.sparkContext.defaultParallelism
-        width = min(ceiling, n_rows // 50_000 + 1)
-        if width < ceiling:
+        width = narrowed_width(df.sparkSession, n_rows, 50_000)
+        if width is not None:
             df = df.repartition(width, *key_cols)
         hot_keys = sizes.where(F.col("_bsz") > salt_threshold).select(*key_cols)
         if not hot_rows:

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .shuffle_width import shuffle_width
+
 
 def _large_star(edges: DataFrame, n_parts: int) -> DataFrame:
     # the trailing dedup is load-bearing for throughput: without it the
@@ -37,8 +39,8 @@ def _large_star(edges: DataFrame, n_parts: int) -> DataFrame:
     # 34.9s without at local[1]). Every shuffle in the round is pinned to
     # n_parts via explicit repartition — the round width is a property of
     # THIS plan (sized to the edge count), never of the session conf
-    # (round-4 verdict #7: mutating spark.sql.shuffle.partitions leaked
-    # the narrowed width to concurrent jobs). The repartition(u) output
+    # (round-4 verdict #7: mutating the session's shuffle-partitions conf
+    # leaked the narrowed width to concurrent jobs). The repartition(u) output
     # satisfies both the groupBy("u") and the join("u") distributions, so
     # the exchange count matches the conf-mutation shape.
     sym = edges.union(
@@ -161,30 +163,13 @@ def connected_components(
     # session's shuffle_partitions was sized for, and each round issues
     # ~6 shuffles — at the default width that is hundreds of near-empty
     # tasks per round whose fixed scheduling cost dominates the stage
-    # (measured 57.9s → 26.2s on a 72k-edge set at local[1]). The width is
-    # applied with explicit per-plan repartition inside the star rounds —
-    # the session conf is read (guardedly) as a ceiling but NEVER mutated,
-    # so concurrent jobs on the same session are untouched (round-4
-    # verdict #7 / ADVICE #3). Large edge sets keep the session width.
-    spark = edges.sparkSession
-    n_parts = _round_width(
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        digest[0],
-        spark.sparkContext.defaultParallelism,
-    )
+    # (measured 57.9s → 26.2s on a 72k-edge set at local[1]): one
+    # partition per ~250k edges (operators/shuffle_width.py), applied with
+    # explicit per-plan repartition inside the star rounds so the session
+    # conf is never mutated (round-4 verdict #7). Large edge sets keep the
+    # session width.
+    n_parts = shuffle_width(edges.sparkSession, digest[0], 250_000)
     return _cc_rounds(e, digest, max_iter, local_finish_edges, n_parts)
-
-
-def _round_width(conf_value, n_edges: int, fallback: int) -> int:
-    """Shuffle width for the star rounds: one partition per ~250k edges,
-    ceilinged by the session width. A non-numeric session conf (e.g.
-    'auto' on managed platforms) falls back to defaultParallelism instead
-    of raising (ADVICE r4 #3)."""
-    try:
-        ceiling = int(conf_value)
-    except (TypeError, ValueError):
-        ceiling = fallback
-    return max(1, min(ceiling, n_edges // 250_000 + 1))
 
 
 def _cc_rounds(

@@ -26,7 +26,7 @@ does:
 - the fingerprint source closes the recall class the band probe alone
   misses: a batch doc sharing a >= ``substring_min_len`` verbatim span
   with a store doc at LOW overall Jaccard (the pipeline's "suffix"
-  source, operators/substring.py) — verified through the same
+  source, functions/fingerprint.py) — verified through the same
   anchored-span check `verify_candidates` runs for the batch pipeline;
 - skew-safe boilerplate guard with NO window: candidate degree per new
   doc (store matches AND within-batch matches, across all sources)

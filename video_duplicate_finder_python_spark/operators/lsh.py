@@ -1,4 +1,4 @@
-"""MinHash-LSH band hashing → groupBy candidate generation (SURVEY O5/O6).
+"""MinHash-LSH band hashing (SURVEY O5/O6).
 
 The principled generalization of the reference's md5[:8] bucketing
 (/root/reference/src/core/comparator.py:52-63): the 128-perm MinHash is
@@ -9,8 +9,10 @@ probability 1-(1-s^8)^16 — ≈0.95 at s=0.8, →1 for exact duplicates — whi
 is what makes dup-pair recall ≥0.99 achievable *after* the exact class is
 handled separately (operators/exact.py).
 
-Band explode is a literal column array — no shuffle until the single
-groupBy-driven self-join in bucket_pairs.
+Band explode is a literal column array — no shuffle. The pipeline keys
+the band rows as ``(src="minhash", key=band_hash)`` into the one candidate
+bucket shuffle it shares with the SimHash chunks and CDC fingerprints
+(plans/pipeline.py:_candidates → bucket_join.bucket_pairs).
 """
 
 from __future__ import annotations
@@ -19,7 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
-from .bucket_join import bucket_pairs
 
 
 def explode_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -35,34 +36,3 @@ def explode_bands(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     return signatures.select(
         "url", F.explode(F.array(*band_structs)).alias("_band")
     ).select("url", "_band.band_id", "_band.band_hash")
-
-
-def minhash_band_candidates(
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    persist: bool = False,
-    dedup: bool = True,
-) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-    """→ ``(pairs(url_a, url_b), dropped_metric, cached)``.
-    ``persist``/``cached`` semantics per bucket_join.bucket_pairs.
-
-    A pair can collide in several bands; ``dedup=True`` keeps one row
-    (SURVEY O6's global dropDuplicates). The pipeline keeps the default
-    ``dedup=True``: a near-dup pair collides in up to ``bands`` bands, so
-    deduping inside each source shrinks the downstream union-groupBy
-    shuffle by that multiplicity — measured cheaper on duplicate-heavy web
-    corpora than funneling the raw collision rows into the final groupBy
-    (plans/pipeline.py:_candidates). Pass ``dedup=False`` only when a
-    caller's own downstream aggregation already deduplicates."""
-    bands = explode_bands(signatures, cfg)
-    pairs, dropped, cached = bucket_pairs(
-        bands,
-        key_cols=["band_id", "band_hash"],
-        max_bucket_size=cfg.max_bucket_size,
-        persist=persist,
-        salt_threshold=cfg.skew_salt_threshold,
-        n_salts=cfg.skew_n_salts,
-    )
-    if dedup:
-        pairs = pairs.dropDuplicates(["url_a", "url_b"])
-    return pairs, dropped, cached

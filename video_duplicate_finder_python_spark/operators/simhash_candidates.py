@@ -1,12 +1,13 @@
-"""SimHash pigeonhole candidates + Hamming filter (secondary recall source).
+"""SimHash pigeonhole chunks (secondary recall source).
 
 The web-text analog of the reference's per-frame Hamming scoring
 (/root/reference/src/core/hasher.py:110-124), done at scale: the 64-bit
 SimHash is split into ``simhash_chunks`` equal chunks; by pigeonhole, any
 pair within Hamming distance ``chunks - 1`` shares at least one exact
 chunk, so grouping on (chunk_id, chunk_value) has *guaranteed* recall for
-hamming <= 3 at 4 chunks. The exact Hamming distance is then a JVM-side
-``bit_count(a ^ b)`` — no UDF anywhere in this operator.
+hamming <= 3 at 4 chunks. The pipeline buckets the chunk rows in its one
+candidate shuffle and filters the pairs on the exact Hamming distance, a
+JVM-side ``bit_count(a ^ b)`` (plans/pipeline.py:_candidates) — no UDF.
 """
 
 from __future__ import annotations
@@ -15,7 +16,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
-from .bucket_join import bucket_pairs
 
 
 def explode_chunks(
@@ -23,10 +23,10 @@ def explode_chunks(
 ) -> DataFrame:
     """Append ``(chunk_id, chunk_value)`` rows for the ``n_chunks`` equal
     bit-slices of ``sig_col`` — the pigeonhole explode shared by the
-    production candidate source below and the cross-engine-verifiable
-    twin (functions/simhash_sql.py), so the chunk math can never drift
-    between them. Literal column array, no shuffle; all input columns
-    are carried through."""
+    pipeline's candidate rows (explode_simhash_chunks below), media dedup
+    and the cross-engine-verifiable twin (functions/simhash_sql.py), so
+    the chunk math can never drift between them. Literal column array, no
+    shuffle; all input columns are carried through."""
     width = bits // n_chunks
     mask = (1 << width) - 1
     chunk_structs = [
@@ -55,37 +55,3 @@ def explode_simhash_chunks(signatures: DataFrame, cfg: DedupConfig) -> DataFrame
         cfg.simhash_bits,
         cfg.simhash_chunks,
     )
-
-
-def simhash_candidates(
-    signatures: DataFrame,
-    cfg: DedupConfig,
-    persist: bool = False,
-    dedup: bool = True,
-) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-    """→ ``(pairs(url_a, url_b, hamming), dropped_metric, cached)``.
-    The pipeline keeps the default ``dedup=True`` — a pair can collide in
-    several pigeonhole chunks, and per-source dedup shrinks the union
-    shuffle (measured; see lsh.minhash_band_candidates)."""
-    chunked = explode_simhash_chunks(signatures, cfg)
-
-    pairs, dropped, cached = bucket_pairs(
-        chunked,
-        key_cols=["chunk_id", "chunk_value"],
-        carry_cols=["simhash"],
-        max_bucket_size=cfg.max_bucket_size,
-        persist=persist,
-        salt_threshold=cfg.skew_salt_threshold,
-        n_salts=cfg.skew_n_salts,
-    )
-    out = (
-        pairs.withColumn(
-            "hamming",
-            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))),
-        )
-        .where(F.col("hamming") <= cfg.simhash_hamming_max)
-        .select("url_a", "url_b", "hamming")
-    )
-    if dedup:
-        out = out.dropDuplicates(["url_a", "url_b"])
-    return out, dropped, cached

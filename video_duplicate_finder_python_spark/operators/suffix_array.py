@@ -1,7 +1,7 @@
 """Per-group generalized suffix-array substring-duplicate pass (SURVEY §2
 gap list; the north rule names the suffix-array pass explicitly).
 
-Complements the CDC fingerprint path (operators/substring.py): CDC is the
+Complements the CDC fingerprint path (functions/fingerprint.py): CDC is the
 corpus-wide, no-recall-hole candidate generator; this operator is the
 *within-group exhaustive* one — inside a group it finds EVERY pair of
 documents sharing a verbatim substring of at least ``min_len`` characters

@@ -7,10 +7,12 @@ Stage graph (each node an idempotent checkpoint, see sources/checkpoint.py):
 
     pages ─ extract ─→ docs ─ exact ─→ rep_docs ──→ signatures
                                  │        │               │
-                                 │        │     ┌─────────┼──────────┐
-                                 │        │ minhash-LSH  simhash  CDC-substr
-                                 │        └── suffix-array (opt-in)  │
-                                 │              └─────────┼──────────┘
+                                 │        │   (src, key) rows: minhash bands,
+                                 │        │   simhash chunks, CDC fingerprints
+                                 │        │               │
+                                 │        │      ONE bucket shuffle
+                                 │        └── suffix-array (opt-in)
+                                 │                        │
                                  │                   candidates
                                  │                        │
                                  └── exact_edges ──→   verify ─→ pairs
@@ -20,16 +22,21 @@ Stage graph (each node an idempotent checkpoint, see sources/checkpoint.py):
                                                clusters(url, cluster_id)
 
 ``cfg.candidate_sources`` selects the pair sources (default: minhash +
-simhash + CDC-substring). The per-group generalized suffix-array pass
+simhash + CDC-substring). The signature-derived sources share one keyed
+row space and one ``bucket_pairs`` shuffle; each pair keeps the tags of
+every source it collided in. The per-group generalized suffix-array pass
 (operators/suffix_array.py, SURVEY §7 step 8) is the opt-in 4th source:
 it reads rep_docs directly (it needs text, not signatures), groups by
 ``cfg.suffix_group_expr``, and its pairs carry an exact-LCS hint that
-verify trusts without re-deriving the span.
+verify trusts without re-deriving the span. Its pairs join the same
+cross-source groupBy, so a suffix-array-only config runs the same tail
+without the bucket shuffle.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from hashlib import blake2b
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,9 +49,9 @@ from ..operators.signature_stage import compute_signatures
 from ..operators.bucket_join import bucket_pairs
 from ..operators.connected_components import connected_components
 from ..operators.exact import exact_edges_from, exact_representatives
-from ..operators.lsh import minhash_band_candidates
-from ..operators.simhash_candidates import simhash_candidates
-from ..operators.substring import substring_candidates
+from ..operators.lsh import explode_bands
+from ..operators.shuffle_width import narrowed_width, shuffle_width
+from ..operators.simhash_candidates import explode_simhash_chunks
 from ..operators.suffix_array import suffix_array_candidates
 from ..operators.verify import verify_candidates
 from ..sources.checkpoint import CheckpointManager
@@ -182,37 +189,23 @@ class DedupPipeline:
         # a few docs per task the fixed per-task Arrow/UDF setup dominates
         # — measured 1.31 s at 64 partitions vs 0.66 s at 32 for 4.8k docs.
         # Never below defaultParallelism (all cores busy when data allows),
-        # never above the 2x oversplit, reduced only when the materialized
+        # never above the session width, reduced only when the materialized
         # rep_docs row count says tasks would be tiny (~256 docs/task).
-        par = self.spark.sparkContext.defaultParallelism
-        n_part = max(par * 2, self.cfg.shuffle_partitions)
-        rep_metrics = self.ckpt.metrics.get("rep_docs")
-        if rep_metrics is not None and rep_metrics.rows_out > 0:
-            n_part = min(n_part, max(par, rep_metrics.rows_out // 256 + 1))
+        n_part = max(
+            self.spark.sparkContext.defaultParallelism,
+            shuffle_width(self.spark, self._known_rows("rep_docs"), 256),
+        )
         return compute_signatures(
             rep_docs.repartition(n_part),
             self.cfg,
             keep_cols=["url", "content_hash", "group_size"],
         )
 
-    def _narrow_width(self, n_rows: int | None, rows_per_part: int = 2000) -> int | None:
-        """Scale-adaptive shuffle width for a stage whose input row count
-        is KNOWN from the previous stage's materialized metrics (same rule
-        as connected_components._round_width and bucket_join's
-        bucket_rows_bound): one partition per ~rows_per_part rows,
-        ceilinged by the session width. Returns None when the data already
-        fills the session width — callers then leave the plan untouched,
-        so a 100 TB corpus never sees a narrowed shuffle. The M×R
-        shuffle-block matrix is the measured cost this avoids: a 64-wide
-        exchange of 116k rows cost 0.86 s on this host vs 0.20 s at 8."""
-        if n_rows is None or n_rows <= 0:
-            return None
-        try:
-            ceiling = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            ceiling = self.spark.sparkContext.defaultParallelism
-        width = min(ceiling, n_rows // rows_per_part + 1)
-        return width if width < ceiling else None
+    def _known_rows(self, stage: str) -> int | None:
+        """Row count of a materialized stage (its metrics, no job); None
+        when unknown or empty."""
+        m = self.ckpt.metrics.get(stage)
+        return m.rows_out if m is not None and m.rows_out > 0 else None
 
     def _cand_profiles(
         self,
@@ -260,10 +253,10 @@ class DedupPipeline:
             .join(signatures.select("url", "simhash"), "url")
         )
 
-    # candidate-source registry: tag → (drop-counter label, builder).
-    # "suffix" is the corpus-wide CDC-fingerprint source; "suffix_array"
-    # the opt-in per-group generalized suffix array (reads rep_docs, not
-    # signatures — it needs the text itself).
+    # candidate-source tag → drop-counter label. "suffix" is the
+    # corpus-wide CDC-fingerprint source; "suffix_array" the opt-in
+    # per-group generalized suffix array (reads rep_docs, not signatures —
+    # it needs the text itself).
     _DROP_LABEL = {
         "minhash": "lsh",
         "simhash": "simhash",
@@ -271,18 +264,16 @@ class DedupPipeline:
         "suffix_array": "suffix_array",
     }
 
-    def _keyed_candidate_rows(self, signatures: DataFrame) -> DataFrame:
+    def _keyed_candidate_rows(self, signatures: DataFrame) -> DataFrame | None:
         """Union of every signature-derived candidate space as
-        ``(url, src, key, sig)`` rows — the merged-candidates input. Keys
+        ``(url, src, key, sig)`` rows — the bucket-shuffle input. Keys
         from different spaces live in one long column, separated by the
         ``src`` tag (which is part of the bucket key downstream):
         minhash → the band hash (band id already seeds it), simhash →
         xxhash64(chunk_id, chunk_value), suffix → the CDC fingerprint.
         ``sig`` carries the 64-bit SimHash for simhash rows (the
-        post-join Hamming filter needs it) and is NULL elsewhere."""
-        from ..operators.lsh import explode_bands
-        from ..operators.simhash_candidates import explode_simhash_chunks
-
+        post-join Hamming filter needs it) and is NULL elsewhere. None
+        when no signature-derived source is enabled."""
         cfg = self.cfg
         null_sig = F.lit(None).cast("long")
         parts = []
@@ -313,63 +304,71 @@ class DedupPipeline:
                     null_sig.alias("sig"),
                 )
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, parts) if parts else None
 
-    def _candidates_merged(
+    def _candidates(
         self, signatures: DataFrame, rep_docs: DataFrame
     ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-        """One bucket shuffle for all signature-derived sources (round 6):
-        vs the per-source shape, 3 ranking windows + 3 per-source dedup
-        shuffles collapse into 1 window + 1 pair join, the final groupBy
-        dedups across sources AND within-source multiplicity in the same
-        pass, and the eager hot-key statistic is computed once over the
-        union instead of once per source. Same tags, same caps, same
-        salting — the bucket key is (src, key) so spaces never mix."""
+        """→ (candidates, drops_df, cached_handles).
+
+        One bucket shuffle for all signature-derived sources: their rows
+        share one ``(src, key)`` space, so there is 1 ranking window + 1
+        pair join, the final groupBy dedups across sources AND
+        within-source multiplicity in the same pass, and the eager hot-key
+        statistic is computed once over the union. The bucket key is
+        ``(src, key)``, so spaces never mix; caps and salting apply per
+        bucket. The bucket table is persisted so the skew-drop counters
+        come from ONE job over cached partitions, not a re-run of the
+        explode + window shuffle."""
         cfg = self.cfg
-        rows = self._keyed_candidate_rows(signatures)
         # every (src, key) bucket holds at most one row per signature row
         # (band hashes are band-seeded, chunk keys chunk-id-seeded, CDC
         # fingerprints distinct per doc), so the materialized signature
         # stage's row count upper-bounds every bucket — when it cannot
         # reach the salt threshold, bucket_pairs skips the eager hot-key
         # job outright (see bucket_rows_bound there)
-        sig_metrics = self.ckpt.metrics.get("signatures")
-        bound = sig_metrics.rows_out if sig_metrics is not None else None
-        pairs, dropped, caches = bucket_pairs(
-            rows,
-            key_cols=["src", "key"],
-            carry_cols=["sig"],
-            keep_keys=["src"],
-            dropped_group_by=["src"],
-            max_bucket_size=cfg.max_bucket_size,
-            persist=True,
-            salt_threshold=cfg.skew_salt_threshold,
-            n_salts=cfg.skew_n_salts,
-            bucket_rows_bound=bound,
-        )
-        hamming_ok = (F.col("src") != F.lit("simhash")) | (
-            F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-            <= cfg.simhash_hamming_max
-        )
-        tagged = pairs.where(hamming_ok).select(
-            "url_a",
-            "url_b",
-            F.col("src").alias("source"),
-            F.lit(None).cast("int").alias("lcs_hint"),
-        )
-        label_map = F.create_map(
-            *[F.lit(x) for kv in self._DROP_LABEL.items() for x in kv]
-        )
-        drops_df = dropped.select(
-            label_map[F.col("src")].alias("src"),
-            F.col("dropped_bucket_members").alias("n"),
-        )
+        bound = self._known_rows("signatures")
+        tagged: list[DataFrame] = []
+        drops: list[DataFrame] = []
+        caches: list[DataFrame] = []
+        rows = self._keyed_candidate_rows(signatures)
+        if rows is not None:
+            pairs, dropped, caches = bucket_pairs(
+                rows,
+                key_cols=["src", "key"],
+                carry_cols=["sig"],
+                keep_keys=["src"],
+                dropped_group_by=["src"],
+                max_bucket_size=cfg.max_bucket_size,
+                persist=True,
+                salt_threshold=cfg.skew_salt_threshold,
+                n_salts=cfg.skew_n_salts,
+                bucket_rows_bound=bound,
+            )
+            hamming_ok = (F.col("src") != F.lit("simhash")) | (
+                F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+                <= cfg.simhash_hamming_max
+            )
+            tagged.append(
+                pairs.where(hamming_ok).select(
+                    "url_a",
+                    "url_b",
+                    F.col("src").alias("source"),
+                    F.lit(None).cast("int").alias("lcs_hint"),
+                )
+            )
+            label_map = F.create_map(
+                *[F.lit(x) for kv in self._DROP_LABEL.items() for x in kv]
+            )
+            drops.append(
+                dropped.select(
+                    label_map[F.col("src")].alias("src"),
+                    F.col("dropped_bucket_members").alias("n"),
+                )
+            )
         if "suffix_array" in cfg.candidate_sources:
             sa_pairs, sa_dropped, sa_caches = suffix_array_candidates(rep_docs, cfg)
-            tagged = tagged.unionByName(
+            tagged.append(
                 sa_pairs.select(
                     "url_a",
                     "url_b",
@@ -377,85 +376,26 @@ class DedupPipeline:
                     F.col("lcs_hint").cast("int").alias("lcs_hint"),
                 )
             )
-            drops_df = drops_df.unionByName(
+            drops.append(
                 sa_dropped.select(
                     F.lit(self._DROP_LABEL["suffix_array"]).alias("src"),
                     F.col("dropped_bucket_members").alias("n"),
                 )
             )
             caches.extend(sa_caches)
+        union = reduce(DataFrame.unionByName, tagged)
         # the cross-source dedup groupBy: at a known-small input, pin its
         # exchange to the same data-derived width as the bucket shuffle
         # (the partial-aggregation it forgoes only collapsed per-pair
         # band/chunk multiplicity — a handful of rows per pair)
-        width = self._narrow_width(bound)
+        width = narrowed_width(self.spark, bound, 2000)
         if width is not None:
-            tagged = tagged.repartition(width, "url_a", "url_b")
-        cands = tagged.groupBy("url_a", "url_b").agg(
+            union = union.repartition(width, "url_a", "url_b")
+        cands = union.groupBy("url_a", "url_b").agg(
             F.collect_set("source").alias("sources"),
             F.max("lcs_hint").alias("lcs_hint"),
         )
-        return cands, drops_df, caches
-
-    def _candidates(
-        self, signatures: DataFrame, rep_docs: DataFrame
-    ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-        """→ (candidates, drops_df, cached_handles).
-
-        Dispatches to the merged single-shuffle shape by default
-        (``cfg.merged_candidates``); the legacy per-source shape below is
-        kept for A/B comparison and for callers that consume the sources
-        separately. In the legacy shape each source's windowed bucket
-        table is persisted so the skew-drop counters come from ONE extra
-        job over cached partitions instead of N jobs that each re-ran the
-        band-explode + window shuffle (the round-1 shape executed the most
-        expensive lineage up to 4×)."""
-        cfg = self.cfg
-        # the merged shape needs >=1 signature-derived source to seed the
-        # (src, key) union; a suffix_array-only (or empty) config routes
-        # to the per-source loop, which handles it
-        if cfg.merged_candidates and {"minhash", "simhash", "suffix"} & set(
-            cfg.candidate_sources
-        ):
-            return self._candidates_merged(signatures, rep_docs)
-        # per-source dedup=True is deliberate: a near-dup pair collides in
-        # up to `bands` bands (and `chunks` simhash chunks), so deduping
-        # inside each source shrinks the union-groupBy shuffle by that
-        # multiplicity — measured cheaper than funneling the raw collision
-        # rows into the final groupBy on duplicate-heavy web corpora
-        builders = {
-            "minhash": lambda: minhash_band_candidates(signatures, cfg, persist=True),
-            "simhash": lambda: simhash_candidates(signatures, cfg, persist=True),
-            "suffix": lambda: substring_candidates(signatures, cfg, persist=True),
-            "suffix_array": lambda: suffix_array_candidates(rep_docs, cfg),
-        }
-        unioned = drops_df = None
-        caches: list[DataFrame] = []
-        for name in cfg.candidate_sources:
-            pairs, dropped, cached = builders[name]()
-            hint = (
-                F.col("lcs_hint")
-                if "lcs_hint" in pairs.columns
-                else F.lit(None).cast("int")
-            )
-            tagged = pairs.select(
-                "url_a",
-                "url_b",
-                F.lit(name).alias("source"),
-                hint.alias("lcs_hint"),
-            )
-            drop = dropped.select(
-                F.lit(self._DROP_LABEL[name]).alias("src"),
-                F.col("dropped_bucket_members").alias("n"),
-            )
-            unioned = tagged if unioned is None else unioned.unionByName(tagged)
-            drops_df = drop if drops_df is None else drops_df.unionByName(drop)
-            caches.extend(cached)
-        cands = unioned.groupBy("url_a", "url_b").agg(
-            F.collect_set("source").alias("sources"),
-            F.max("lcs_hint").alias("lcs_hint"),
-        )
-        return cands, drops_df, caches
+        return cands, reduce(DataFrame.unionByName, drops), caches
 
     # -- cancellation (SURVEY O19) ---------------------------------------------
     JOB_GROUP = "vdf-dedup-pipeline"
@@ -525,7 +465,7 @@ class DedupPipeline:
         def collect_drops() -> dict:
             # one job over the persisted bucket tables (vs three re-runs of
             # the band/window lineages in the round-1 shape). Zero-init:
-            # the merged path's grouped metric emits no row for a source
+            # the bucket shuffle's grouped metric emits no row for a source
             # with no drops, and a healthy corpus should still record 0
             # explicitly for every enabled source.
             out = {
@@ -556,10 +496,7 @@ class DedupPipeline:
         verify_cache: list[DataFrame] = []
 
         def build_pairs() -> DataFrame:
-            cand_metrics = self.ckpt.metrics.get("candidates")
-            width = self._narrow_width(
-                cand_metrics.rows_out if cand_metrics is not None else None
-            )
+            width = narrowed_width(self.spark, self._known_rows("candidates"), 2000)
             out = verify_candidates(
                 candidates,
                 self._cand_profiles(candidates, rep_docs, signatures, width),
