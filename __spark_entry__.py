@@ -75,7 +75,7 @@ def _with_shingle_strings(df: DataFrame, text_col: str, out: str = "s") -> DataF
     """Distinct 5-word shingles as strings (mirrors the SQL oracle exactly).
     Tokens are materialized into a column first — passing the split()
     expression into the transform() lambda makes Catalyst re-tokenize per
-    shingle index (see functions/shingles.py)."""
+    shingle index."""
     df = df.withColumn("_tk", F.split(F.col(text_col), " "))
     sliding = F.transform(
         F.sequence(F.lit(1), F.size("_tk") - F.lit(4)),
@@ -793,7 +793,7 @@ def q_substring_dup_clusters(spark, sf_dir):
     # #1): planted twin pairs share ONLY a ~900-char verbatim span
     # (Jaccard ≈ 0.42), so clustering them requires the CDC-fingerprint
     # candidates + anchored-common-span verification path
-    # (functions/fingerprint.py, operators/substring.py) — the class LSH
+    # (functions/fingerprint.py, operators/verify.py) — the class LSH
     # can't catch. Oracle: base-corpus jaccard closure UNION the planted
     # twin clusters (twins touch nothing else by construction).
     res = _run_pipeline(spark, sf_dir, "substring")

@@ -75,7 +75,7 @@ def main(argv: list[str] | None = None) -> None:
     store = spark.read.parquet(args.store)
 
     cfg = DedupConfig()
-    pairs, overflow, cached = probe_near_dups(
+    pairs, overflow, _ = probe_near_dups(
         store,
         new_docs,
         cfg,
@@ -99,8 +99,6 @@ def main(argv: list[str] | None = None) -> None:
         n_overflow = spark.read.parquet(args.overflow_output).count()
     else:
         n_overflow = overflow.count()
-    for c in cached:
-        c.unpersist()
 
     print(
         "VDF_PROBE_SUMMARY "

@@ -341,8 +341,8 @@ def main() -> None:
 
     # 10. semdedup (r7 shape): the assignment is one Arrow-batched UDF
     #     (behind the lazy-checkpoint boundary, so asserted on the
-    #     assign_cells plan directly); the default pair kernel is the
-    #     per-cell gemm (FlatMapGroupsInPandas over the cell groups);
+    #     assign_cells plan directly); the pair kernel is the per-cell
+    #     gemm (FlatMapGroupsInPandas over the cell groups);
     #     nowhere a row-at-a-time BatchEvalPython
     import numpy as np
 
@@ -364,8 +364,11 @@ def main() -> None:
         assign_plan,
     )
     # the edge pass is consumed inside connected_components (driver
-    # finish at this size), so assert the kernel on the edges subplan
-    # the default path builds, not on the final members plan
+    # finish at this size), so assert the kernel on the edges subplan,
+    # not on the final members plan
+    from video_duplicate_finder_python_spark.operators.bucket_join import (
+        capped_buckets,
+    )
     from video_duplicate_finder_python_spark.operators.semdedup import (
         _cell_pair_edges,
     )
@@ -375,12 +378,16 @@ def main() -> None:
         "embedding",
         "centroid_id",
     )
+    kept, _, _ = capped_buckets(
+        cells_df, ["centroid_id"], id_col="vid", carry_cols=["embedding"],
+        max_bucket_size=1024,
+    )
     edge_plan = (
-        _cell_pair_edges(cells_df, eps=0.05)
+        _cell_pair_edges(kept, eps=0.05)
         ._jdf.queryExecution().executedPlan().toString()
     )
     check(
-        "semdedup: default pair kernel is the per-cell gemm "
+        "semdedup: the pair kernel is the per-cell gemm "
         "(FlatMapGroupsInPandas), no row-at-a-time BatchEvalPython",
         "FlatMapGroupsInPandas" in edge_plan
         and "BatchEvalPython" not in edge_plan,

@@ -221,3 +221,26 @@ def test_recrawl_batch_url_shadows_store_row(spark, store):
         "https://new.example/twin",
     }
     assert r.is_new_other and r.is_dup and r.jaccard == 1.0
+
+
+def test_probe_leaves_no_cached_frames(spark):
+    """The probe persists nothing: its reused intermediates are lazy
+    localCheckpoint cuts, which never enter the session's cache manager.
+    After its actions and unpersisting whatever handles it returns, the
+    cache manager is empty."""
+    spark.catalog.clearCache()  # earlier fixtures may hold cached frames
+    old = spark.createDataFrame(
+        [(f"https://old.example/{i}", _doc([f"c{i}a", f"c{i}b", "base"])) for i in range(6)],
+        "url string, text string",
+    )
+    store = compute_signatures(old, CFG, keep_cols=["url", "text"])
+    new_docs = spark.createDataFrame(
+        [("https://new.example/copy", _doc(["c0a", "c0b", "base"]))],
+        "url string, text string",
+    )
+    pairs, overflow, caches = probe_near_dups(store, new_docs, CFG)
+    assert pairs.where("is_dup").count() >= 1
+    assert overflow.count() == 0
+    for c in caches:
+        c.unpersist()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -233,3 +233,16 @@ def test_empty_candidate_sources_rejected():
     it is rejected at construction, not after the signature stage ran."""
     with pytest.raises(ValueError, match="candidate_sources"):
         DedupConfig(candidate_sources=())
+
+
+def test_run_leaves_no_cached_frames(spark, corpus):
+    """DedupPipeline.run unpersists every frame it persists (the bucket
+    tables of the candidate stage); its stage cuts are localCheckpoints,
+    which never enter the session's cache manager."""
+    from video_duplicate_finder_python_spark import DedupPipeline
+    from video_duplicate_finder_python_spark.corpus import pages_spark_df
+
+    spark.catalog.clearCache()  # earlier fixtures may hold cached frames
+    res = DedupPipeline(spark, DedupConfig()).run(pages_spark_df(spark, corpus))
+    assert res.clusters.count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

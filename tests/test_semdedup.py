@@ -51,16 +51,19 @@ def _corpus(seed=99, n_groups=4, group_size=4, n_distinct=40):
     return rows, truth_groups
 
 
-def _twin(rows, cents, eps=EPS):
-    """Driver-side replica: same float32->float64 value path, same
-    left-fold cosine as Spark's aggregate(), same keep policy."""
+def _twin(rows, cents, eps=EPS, cap=None):
+    """Driver-side replica: same float32->float64 value path, same keep
+    policy, a sequential left-fold cosine (the planted margins keep every
+    pair far from the eps boundary, where the engine's per-cell gemm
+    could differ in the last ulps). ``cap``: compare only each cell's
+    ``cap`` lowest-vec_id members, as ``max_cell_compare`` does."""
     ids = [r[0] for r in rows]
     mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
     sims = _l2_normalize(mat) @ np.asarray(cents, dtype=np.float64).T
     cid = sims.argmax(axis=1)
     cent_sim = sims[np.arange(len(ids)), cid]
 
-    def cos(a, b):  # Spark cosine_col: sequential double fold
+    def cos(a, b):  # sequential double fold
         dot = na = nb = 0.0
         for x, y in zip(a, b):
             dot += x * y
@@ -83,6 +86,7 @@ def _twin(rows, cents, eps=EPS):
     for i, c in zip(range(len(ids)), cid):
         by_cell.setdefault(int(c), []).append(i)
     for cell in by_cell.values():
+        cell = sorted(cell, key=lambda i: ids[i])[:cap]
         for a in range(len(cell)):
             for b in range(a + 1, len(cell)):
                 i, j = cell[a], cell[b]
@@ -166,49 +170,30 @@ def test_assign_cells_schema(spark, rows_and_truth):
     assert (pdf.cent_sim <= 1.0 + 1e-9).all()
 
 
-def test_arrow_kernel_matches_jvm(spark, rows_and_truth):
-    """Every pair kernel ('jvm' fold, 'arrow' einsum, 'cell' per-cell
-    gemm — the r7 default) must make the same grouping/keeper decisions
-    — planted margins keep all three far from the eps boundary where
-    last-ulp summation differences could flip a pair."""
-    rows, _ = rows_and_truth
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    cents = train_ivf_centroids(df, n_centroids=8, train_size=256, seed=7)
-    out = {}
-    for kernel in ("jvm", "arrow", "cell"):
-        members, dropped, cached = semdedup(
-            df, cents, eps=EPS, persist=True, pair_kernel=kernel
-        )
-        out[kernel] = {
-            r.vec_id: (r.cluster_id, r.is_kept) for r in members.collect()
-        }
-        for c in cached:
-            c.unpersist()
-    assert out["jvm"] == out["arrow"] == out["cell"]
-    with pytest.raises(ValueError):
-        semdedup(df, cents, pair_kernel="simd")
-
-
 def test_cell_kernel_overcap_routing_matches(spark, rows_and_truth):
-    """With max_cell_compare forced below the biggest cell size, the
-    'cell' kernel must route that cell through the capped/salted bucket
-    path and still make the same decisions as 'arrow' at the same cap
-    (both see identical kept-member sets and identical dropped counts)."""
+    """With max_cell_compare forced below the cell sizes, every cell is
+    cut to its 16 lowest-vec_id members before the per-cell gemm: the
+    decisions equal the twin's at the same cap, and every member beyond
+    the cap is counted as dropped."""
     rows, _ = rows_and_truth
+    # rotate the ids so planted groups sit on both sides of each cell's cap
+    rows = [((v + 20) % len(rows), e) for v, e in rows]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     cents = train_ivf_centroids(df, n_centroids=2, train_size=256, seed=7)
-    out = {}
-    drops = {}
-    for kernel in ("arrow", "cell"):
-        members, dropped, cached = semdedup(
-            df, cents, eps=EPS, persist=True, pair_kernel=kernel,
-            max_cell_compare=16,
-        )
-        out[kernel] = {
-            r.vec_id: (r.cluster_id, r.is_kept) for r in members.collect()
-        }
-        drops[kernel] = int(dropped.first()[0] or 0)
-        for c in cached:
-            c.unpersist()
-    assert out["arrow"] == out["cell"]
-    assert drops["arrow"] == drops["cell"] and drops["cell"] > 0
+    members, dropped, cached = semdedup(
+        df, cents, eps=EPS, persist=True, max_cell_compare=16
+    )
+    got = {r.vec_id: (r.cluster_id, r.is_kept) for r in members.collect()}
+    n_dropped = int(dropped.first()[0] or 0)
+    for c in cached:
+        c.unpersist()
+
+    twin = _twin(rows, cents, cap=16)
+    assert twin != _twin(rows, cents), "the cap must change the decisions"
+    assert got == {v: (cl, kept) for v, (cl, _, kept) in twin.items()}
+    cid = (
+        _l2_normalize(np.stack([np.asarray(r[1], dtype=np.float64) for r in rows]))
+        @ np.asarray(cents, dtype=np.float64).T
+    ).argmax(axis=1)
+    sizes = np.bincount(cid)
+    assert n_dropped == int(np.maximum(sizes - 16, 0).sum()) > 0

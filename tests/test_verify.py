@@ -49,7 +49,6 @@ def test_partial_texts_keep_needs_lcs_rows_with_null_lcs(spark):
     )
     out = verify_candidates(candidates, profiles, cfg, texts=texts)
     rows = {(r["url_a"], r["url_b"]): r for r in out.collect()}
-    out._vdf_cached.unpersist()
 
     assert set(rows) == {("a", "b"), ("c", "d")}, "no candidate row may vanish"
     ab = rows[("a", "b")]
@@ -68,6 +67,5 @@ def test_no_texts_frame_skips_substring_confirmation(spark):
     profiles = _profiles(spark, [("a", [1, 2], 0), ("b", [3, 4], 0)])
     out = verify_candidates(candidates, profiles, cfg, texts=None)
     rows = out.collect()
-    out._vdf_cached.unpersist()
     assert len(rows) == 1
     assert rows[0]["lcs_len"] is None and rows[0]["is_dup"] is False

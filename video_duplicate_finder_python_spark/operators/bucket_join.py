@@ -41,7 +41,7 @@ from pyspark.storagelevel import StorageLevel
 from .shuffle_width import narrowed_width
 
 
-def bucket_pairs(
+def capped_buckets(
     df: DataFrame,
     key_cols: list[str],
     id_col: str = "url",
@@ -51,27 +51,28 @@ def bucket_pairs(
     salt_threshold: int | None = None,
     n_salts: int = 16,
     max_collected_hot: int = 64,
-    keep_keys: list[str] | None = None,
     dropped_group_by: list[str] | None = None,
     bucket_rows_bound: int | None = None,
 ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-    """Emit candidate pairs from rows sharing ``key_cols``.
+    """Rank every bucket sharing ``key_cols`` and keep at most
+    ``max_bucket_size`` members of each (the ``id_col``-ordered prefix,
+    per salt for hot buckets).
 
-    Returns ``(pairs, dropped, cached)`` where ``pairs`` has columns
-    ``url_a, url_b`` (``url_a < url_b``) plus ``<c>_a / <c>_b`` for every
-    carry column, ``dropped`` is a 1-row DataFrame with the count of
+    Returns ``(kept, dropped, cached)`` where ``kept`` holds the
+    surviving members of every non-singleton bucket (``key_cols``,
+    ``id_col`` and ``carry_cols``, plus the internal ``_rn``/``_cap``
+    rank columns), ``dropped`` is a 1-row DataFrame with the count of
     bucket members beyond the cap (a skew metric, SURVEY.md §4), and
     ``cached`` is the list of persisted handles the caller must
     ``unpersist()`` after running both actions (empty when
-    ``persist=False``).
+    ``persist=False``). ``bucket_pairs`` self-joins ``kept``; a per-group
+    kernel (SemDeDup's per-cell gemm) consumes it whole, so its work per
+    bucket is bounded by the cap squared.
 
-    ``keep_keys``: key columns to RETAIN in the pairs output (e.g. a
-    source tag when several candidate spaces share one call — the
-    merged-candidates path); they are equal on both sides of a pair by
-    construction, so they come back un-suffixed. ``dropped_group_by``:
-    group the dropped-members metric by these key columns instead of the
-    default single global count (callers must treat absent groups as 0 —
-    an empty groupBy emits no rows, unlike the global aggregate).
+    ``dropped_group_by``: group the dropped-members metric by these key
+    columns instead of the default single global count (callers must
+    treat absent groups as 0 — an empty groupBy emits no rows, unlike the
+    global aggregate).
 
     ``salt_threshold``: buckets larger than this are ranked per
     ``(key, salt)`` instead of per key (see module docstring) so no single
@@ -97,7 +98,7 @@ def bucket_pairs(
     candidates stage at local[4] even with zero hot keys.
 
     ``persist=True`` caches the ranked bucket table (MEMORY_AND_DISK) so
-    that running the ``pairs`` action and the ``dropped`` action doesn't
+    that running the ``kept`` consumer and the ``dropped`` action doesn't
     execute the explode+window shuffle twice — Spark does not reuse shuffle
     output across separately-triggered jobs. With ``salt_threshold`` also
     set, the *input* ``df`` is persisted first, so the eager hot-key sizes
@@ -240,7 +241,34 @@ def bucket_pairs(
         dropped = over_cap.select(
             F.count(F.lit(1)).alias("dropped_bucket_members")
         )
+    return kept, dropped, caches
 
+
+def bucket_pairs(
+    df: DataFrame,
+    key_cols: list[str],
+    id_col: str = "url",
+    carry_cols: list[str] | None = None,
+    keep_keys: list[str] | None = None,
+    **cap_kwargs,
+) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
+    """Emit candidate pairs from rows sharing ``key_cols``.
+
+    Returns ``(pairs, dropped, cached)``: ``pairs`` has columns ``url_a,
+    url_b`` (``url_a < url_b``) plus ``<c>_a / <c>_b`` for every carry
+    column, over the members ``capped_buckets`` keeps (``cap_kwargs`` are
+    its cap, salt, persist and width options); ``dropped`` and ``cached``
+    are its outputs unchanged.
+
+    ``keep_keys``: key columns to RETAIN in the pairs output (e.g. a
+    source tag when several candidate spaces share one call — the
+    merged-candidates path); they are equal on both sides of a pair by
+    construction, so they come back un-suffixed.
+    """
+    carry_cols = carry_cols or []
+    kept, dropped, caches = capped_buckets(
+        df, key_cols, id_col=id_col, carry_cols=carry_cols, **cap_kwargs
+    )
     left = kept.select(
         *key_cols,
         F.col(id_col).alias("url_a"),

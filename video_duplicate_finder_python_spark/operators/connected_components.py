@@ -21,7 +21,8 @@ Node ids are the url strings themselves and the final cluster id is the
 lexicographic min url of the component — the deterministic analog of the
 reference's first-seen integer group id, and the exact semantics the oracle
 (oracle.py) asserts. The result is independent of partitioning and
-parallelism (asserted across levels by scripts/scaling_bench.py).
+parallelism (asserted across levels by ``scripts/scaling.py run``,
+which refuses to report when cluster members differ).
 """
 
 from __future__ import annotations

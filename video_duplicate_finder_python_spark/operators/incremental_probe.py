@@ -40,11 +40,10 @@ does:
   recomputed ONLY for the matched url set (tiny by construction);
   within-batch (new×new) duplicates ride the same verify pass.
 
-Cache ownership follows the house pattern (plans/pipeline.py:492-494):
-the returned ``cached`` list holds every persisted handle this call
-created (batch signatures, the candidate tables, verify's internal
-cache) — the caller must ``unpersist()`` them after running its actions,
-or a long-running stream accumulates cached frames without bound.
+Nothing is persisted: every reused intermediate is cut with a lazy
+``localCheckpoint`` (plan-size note below), whose blocks the
+ContextCleaner frees once the frame is unreachable. ``unpersist()`` on
+such a frame is a no-op, so there are no handles for the caller to own.
 
 Plan-size note (r7): the probe's dataflow is a chain of diamonds — the
 candidate tables feed the degree guard, the pair union, the text fetch
@@ -54,13 +53,11 @@ candidate subtree in the final logical plan a combinatorial number of
 times. At sf0.1 the composed plan printed 26k lines and Catalyst
 analysis/planning dominated the wall (construction alone 5.2 s, the
 single action 8.5 s while every candidate computation measured < 0.4 s
-in isolation — scripts/profile_probe.py). The fix is the guide's
-plan-truncation rule: the three SMALL intermediates (batch signatures,
-store candidates, batch candidates) are cut with a lazy
-``localCheckpoint`` whose first action materializes them, after which
-every downstream appearance is a LogicalRDD leaf. The handles still
-join ``cached`` (unpersist on a checkpointed frame is a harmless no-op;
-the blocks are freed by the ContextCleaner when the handle is dropped).
+in isolation). The fix is the guide's plan-truncation rule: the SMALL
+intermediates (batch signatures, the merged candidate table, verify's
+scored frame) are cut with a lazy ``localCheckpoint`` whose first action
+materializes them, after which every downstream appearance is a
+LogicalRDD leaf.
 """
 
 from __future__ import annotations
@@ -79,7 +76,6 @@ def probe_near_dups(
     new_docs: DataFrame,
     cfg: DedupConfig,
     max_matches_per_doc: int = 1024,
-    persist: bool = True,
     substring: bool = True,
 ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
     """``store(url, minhash, simhash, text[, fingerprints], ...)`` (a
@@ -93,8 +89,9 @@ def probe_near_dups(
     length for fingerprint-source pairs that needed the substring check
     (NULL otherwise). ``overflow(new_url, n_matches)`` — batch docs whose
     candidate degree exceeded ``max_matches_per_doc`` (boilerplate guard;
-    no pairs are emitted for them). ``cached`` — persisted handles the
-    caller must unpersist after its actions.
+    no pairs are emitted for them). ``cached`` is always ``[]``: the
+    probe persists nothing (module docstring), and the third element is
+    kept so existing ``pairs, overflow, cached`` callers keep working.
 
     ``substring=True`` requires a ``fingerprints`` column on the store
     (every SignatureStore / compute_signatures output has one) and adds
@@ -107,7 +104,6 @@ def probe_near_dups(
             "(compute_signatures output); pass substring=False to probe "
             "with MinHash bands only"
         )
-    caches: list[DataFrame] = []
     # a url present in BOTH batch and store (streaming re-crawl: the probe
     # runs before the upsert) would make "other_url is a store url"
     # ambiguous — the same pair would appear against the store's OLD text
@@ -125,13 +121,11 @@ def probe_near_dups(
         # the materialization below would otherwise run the per-byte CDC
         # UDF pass Catalyst's column pruning normally removes
         sigs_new = sigs_new.drop("fingerprints")
-    if persist:
-        # the batch signature kernel feeds every candidate source (store
-        # probe + within-batch self-join) AND the verify profiles — a lazy
-        # localCheckpoint caches it AND truncates its subtree out of every
-        # downstream plan (see module docstring, plan-size note)
-        sigs_new = sigs_new.localCheckpoint(eager=False)
-        caches.append(sigs_new)
+    # the batch signature kernel feeds every candidate source (store
+    # probe + within-batch self-join) AND the verify profiles — a lazy
+    # localCheckpoint caches it AND truncates its subtree out of every
+    # downstream plan (see module docstring, plan-size note)
+    sigs_new = sigs_new.localCheckpoint(eager=False)
 
     # --- merged candidate space: ONE (src, key) row set per side, same
     # construction as the batch pipeline's merged candidates — the store's
@@ -193,12 +187,10 @@ def probe_near_dups(
         .groupBy("new_url", "other_url", "is_new_other")
         .agg(F.collect_set("src").alias("sources"))
     )
-    if persist:
-        # the candidate table is re-read by the degree guard, the pair
-        # union AND the profile fetch — truncate it too (it is tiny:
-        # bounded by batch size × max_matches_per_doc)
-        cand_all = cand_all.localCheckpoint(eager=False)
-        caches.append(cand_all)
+    # the candidate table is re-read by the degree guard, the pair union
+    # AND the profile fetch — truncate it too (it is tiny: bounded by
+    # batch size × max_matches_per_doc)
+    cand_all = cand_all.localCheckpoint(eager=False)
     cand_old = cand_all.where(~F.col("is_new_other")).drop("is_new_other")
     cand_new = cand_all.where(F.col("is_new_other")).drop("is_new_other")
 
@@ -259,11 +251,7 @@ def probe_near_dups(
         cfg,
         texts=profile_src.select("url", "text") if substring else None,
     )
-    vc = getattr(verified, "_vdf_cached", None)
-    if vc is not None:
-        caches.append(vc)
-
     pairs = oriented.join(verified.drop("sources"), ["url_a", "url_b"]).select(
         "new_url", "other_url", "is_new_other", "jaccard", "hamming", "lcs_len", "is_dup"
     )
-    return pairs, overflow, caches
+    return pairs, overflow, []

@@ -14,13 +14,14 @@ ships, so the new surface is just the glue:
   k-means on a bounded driver-side sample — the corpus never trains);
 - cell assignment + centroid similarity: one Arrow-batched pandas UDF
   (matrix product per batch, mirroring ``make_ivf_assign_udf``);
-- within-cell candidate pairs: ``bucket_join.bucket_pairs`` keyed on
-  ``centroid_id`` — the cap + salted ranking bound the quadratic blow-up
-  SemDeDup's own design accepts inside a cell (a mega-cell on a 10^12-doc
-  corpus is ranked per-salt, capped, and the spill is a counted metric,
-  never an OOM);
-- exact pair cosine: JVM ``zip_with``/``aggregate`` fold
-  (``operators/ann.cosine_col``) — no Python past the assignment stage;
+- within-cell capping: ``bucket_join.capped_buckets`` keyed on
+  ``centroid_id`` — the same rank/cap/salt code the text pipeline's
+  candidate buckets use, so a mega-cell on a 10^12-doc corpus keeps its
+  ``max_cell_compare`` lowest-id members (ranked per salt when it is
+  hot) and the spill is a counted metric, never an OOM;
+- pair cosine: ONE BLAS gemm per capped cell (``_cell_pair_edges``)
+  — each embedding crosses the JVM/Python boundary once, not once per
+  pair, and the per-task matrix is bounded by cap² × 8 B;
 - duplicate groups: the same two-phase connected components as the text
   pipeline, so transitively-linked duplicates collapse to ONE keeper
   (the paper's per-pair dedup can keep two members of a chained triple);
@@ -40,8 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .ann import _l2_normalize, cosine_col
-from .bucket_join import bucket_pairs
+from .ann import _l2_normalize
+from .bucket_join import capped_buckets
 from .connected_components import connected_components
 
 _ASSIGN_SCHEMA = T.StructType(
@@ -76,21 +77,20 @@ def assign_cells(embeddings: DataFrame, cents: np.ndarray) -> DataFrame:
     ).drop("_a")
 
 
-def _cell_pair_edges(cells: DataFrame, eps: float):
+def _cell_pair_edges(cells: DataFrame, eps: float) -> DataFrame:
     """Per-cell all-pairs cosine: ONE BLAS gemm per cell instead of a
-    pair-exploded kernel. The pair fan-out ships both embeddings per pair
+    pair-exploded kernel. A pair fan-out ships both embeddings per pair
     (2×64 float64 ≈ 1 KB × pairs — 3 GB through Arrow for 3.1M pairs at
     sf1.0, measured 14.1 s); grouping by cell ships each embedding ONCE
     (10 MB for the same input) and scores the cell with m @ m.T — the
     optimization guide's §8 rule (move heavy bytes once, decide with
-    dense math). Only called for cells whose size is within
-    ``max_cell_compare``, so the per-task matrix is bounded by
-    cap² × 8 B (8 MB at the 1024 default); over-cap cells take the
-    capped/salted bucket path instead. Emits exactly the edges the
-    pair kernel emits for those cells: every vid_a < vid_b with
-    cosine >= 1 - eps (gemm dot order can differ from the per-pair
-    kernels in the last ulps — same documented boundary caveat as
-    arrow-vs-jvm)."""
+    dense math). ``cells`` is ``capped_buckets`` output, so each cell
+    holds at most ``max_cell_compare`` members and the per-task matrix is
+    bounded by cap² × 8 B (8 MB at the 1024 default). Emits exactly the
+    pairs ``bucket_pairs`` emits for the same kept members: every
+    vid_a < vid_b with cosine >= 1 - eps (gemm dot order can differ from
+    a sequential fold in the last ulps, so a pair sitting exactly on the
+    eps boundary may flip)."""
     thr = 1.0 - eps
 
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -111,27 +111,6 @@ def _cell_pair_edges(cells: DataFrame, eps: float):
     ).applyInPandas(per_cell, schema="u string, v string")
 
 
-def _arrow_cosine_udf():
-    """Batched NumPy pair cosine: one einsum per Arrow batch. ~2× the JVM
-    fold at dim 64 (measured 9.6 → 4.9 s on 3M pairs at local[4]) and
-    memory-bandwidth-friendlier across cores — the remedy for the
-    fold-bound scaling the round-6 pairing surfaced
-    (BENCH/SEMDEDUP_SCALING_R6.md). Float summation ORDER differs from
-    the sequential fold, so scores can differ in the last ulps — pairs
-    sitting exactly on the eps boundary may flip vs the jvm kernel."""
-
-    @F.pandas_udf(T.DoubleType())
-    def cos_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.stack([np.asarray(v, dtype=np.float64) for v in a])
-        mb = np.stack([np.asarray(v, dtype=np.float64) for v in b])
-        dots = np.einsum("ij,ij->i", ma, mb)
-        na = np.einsum("ij,ij->i", ma, ma)
-        nb = np.einsum("ij,ij->i", mb, mb)
-        return pd.Series(dots / np.sqrt(na * nb))
-
-    return cos_udf
-
-
 def semdedup(
     embeddings: DataFrame,
     cents: np.ndarray,
@@ -139,7 +118,6 @@ def semdedup(
     max_cell_compare: int = 1024,
     salt_threshold: int | None = 65536,
     persist: bool = False,
-    pair_kernel: str = "cell",
 ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
     """→ ``(members, dropped, cached)``.
 
@@ -147,31 +125,14 @@ def semdedup(
     member of a semantic-duplicate group (vectors in no group are
     implicitly kept, same convention as operators/retention); exactly one
     ``is_kept`` row per cluster: lowest ``cent_sim``, vec_id tiebreak.
-    ``dropped`` counts cell members beyond ``max_cell_compare`` (cap
-    metric); ``cached`` are caller-owned persisted handles.
-
-    ``pair_kernel``:
-    - "cell" (default, late r7): cells within ``max_cell_compare`` are
-      scored with ONE BLAS gemm per cell (`_cell_pair_edges` — each
-      embedding crosses the boundary once instead of once per pair;
-      measured 14.1 s → ~1 s for the 3.1M-pair edge pass at sf1.0);
-      over-cap cells keep the exact capped/salted bucket path below,
-      scored with the arrow pair kernel, so the skew contract is
-      byte-identical where it matters.
-    - "arrow" (default earlier in r7 — the r6 scaling pairing measured
-      the JVM fold as the operator's bandwidth-bound bottleneck,
-      BENCH/SEMDEDUP_SCALING_R6.md): batched einsum over exploded pairs.
-    - "jvm": the sequential ``aggregate`` fold — bit-exact against the
-      NumPy twin and any left-fold oracle, and the equivalence twin the
-      tests pin (last-ulp score differences between all three kernels —
-      see _arrow_cosine_udf / _cell_pair_edges).
+    Only the ``max_cell_compare`` lowest-vec_id members of a cell are
+    compared (a per-salt quota of them for a cell above
+    ``salt_threshold``); ``dropped`` counts the cell members beyond that cap (cap
+    metric); ``cached`` are caller-owned persisted handles
+    (``capped_buckets``' ``persist``).
     """
-    if pair_kernel not in ("jvm", "arrow", "cell"):
-        raise ValueError(
-            f"pair_kernel must be 'jvm', 'arrow' or 'cell', got {pair_kernel!r}"
-        )
     assigned = assign_cells(embeddings, cents).select(
-        # zero-padded string id: bucket_pairs orders by it and CC min()s
+        # zero-padded string id: capped_buckets orders by it and CC min()s
         # it lexicographically — padding makes both match numeric order.
         # Width 20 covers every non-negative int64 (19 digits): Spark's
         # lpad TRUNCATES over-length inputs, so a narrower pad would
@@ -183,50 +144,20 @@ def semdedup(
         "centroid_id",
         "cent_sim",
     ).localCheckpoint(eager=False)
-    # the assignment UDF feeds three consumers (bucket sizes pass, the
+    # the assignment UDF feeds three consumers (cell sizes pass, the
     # ranking window, the keeper join) — the lazy checkpoint computes it
     # once and truncates its subtree out of every downstream plan (the
     # same plan-diamond rule as the probe, incremental_probe.py docstring)
-    cached0: list[DataFrame] = [assigned]
-
-    def bucketed_edges(df: DataFrame, kernel: str):
-        cand, dropped, cached = bucket_pairs(
-            df,
-            key_cols=["centroid_id"],
-            id_col="vid",
-            carry_cols=["embedding", "cent_sim"],
-            max_bucket_size=max_cell_compare,
-            persist=persist,
-            salt_threshold=salt_threshold,
-        )
-        if kernel == "arrow":
-            cos = _arrow_cosine_udf()(F.col("embedding_a"), F.col("embedding_b"))
-        else:
-            cos = cosine_col(F.col("embedding_a"), F.col("embedding_b"))
-        e = (
-            cand.withColumn("cos", cos)
-            .where(F.col("cos") >= F.lit(1.0 - eps))
-            .select(F.col("url_a").alias("u"), F.col("url_b").alias("v"))
-        )
-        return e, dropped, cached
-
-    if pair_kernel == "cell":
-        # route by cell size: within-cap cells take the per-cell gemm (no
-        # pair explosion, no cap drops by definition); over-cap cells —
-        # the skew class the cap/salt machinery exists for — take the
-        # bucket path unchanged. Cell count is bounded by len(cents), so
-        # the over-cap key set is a tiny broadcast.
-        sizes = assigned.groupBy("centroid_id").agg(
-            F.count(F.lit(1)).alias("_n")
-        )
-        big_keys = sizes.where(F.col("_n") > max_cell_compare).select("centroid_id")
-        small = assigned.join(F.broadcast(big_keys), "centroid_id", "left_anti")
-        big = assigned.join(F.broadcast(big_keys), "centroid_id", "left_semi")
-        big_edges, dropped, cached = bucketed_edges(big, "arrow")
-        edges = _cell_pair_edges(small, eps).unionByName(big_edges)
-    else:
-        edges, dropped, cached = bucketed_edges(assigned, pair_kernel)
-    clusters = connected_components(edges)  # (url, cluster_id)
+    kept, dropped, cached = capped_buckets(
+        assigned,
+        ["centroid_id"],
+        id_col="vid",
+        carry_cols=["embedding"],
+        max_bucket_size=max_cell_compare,
+        persist=persist,
+        salt_threshold=salt_threshold,
+    )
+    clusters = connected_components(_cell_pair_edges(kept, eps))  # (url, cluster_id)
 
     members = clusters.join(
         assigned.select(F.col("vid").alias("url"), "cent_sim"), "url"
@@ -244,4 +175,4 @@ def semdedup(
             (F.col("url") == F.col("_keep")).alias("is_kept"),
         )
     )
-    return out, dropped, cached0 + cached
+    return out, dropped, cached

@@ -14,9 +14,11 @@ Shape notes (both matter at 100 TB):
   candidates that FAILED the Jaccard test; only those pay the ~8 KB/doc
   shuffle and the anchored-common-span pandas UDF
   (functions/fingerprint.py:anchored_common_span_len).
-- the scalar scores are persisted before branching, so the fast/slow split
-  costs one execution of the scoring join, and what is persisted is the
-  scalar-only frame (~tens of bytes/pair), not shingle arrays or text.
+- the scalar scores are cut with a lazy ``localCheckpoint`` before
+  branching, so the fast/slow split costs one execution of the scoring
+  join, and what is kept is the scalar-only frame (~tens of bytes/pair),
+  not shingle arrays or text. Its blocks are freed by the ContextCleaner
+  once the frame is unreachable; there is no handle to unpersist.
 """
 
 from __future__ import annotations
@@ -163,7 +165,4 @@ def verify_candidates(
     ).select(
         "url_a", "url_b", "jaccard", "hamming", "lcs_len", "sources", "is_dup"
     )
-    # hand the persisted scalar frame to the caller for unpersist() once
-    # the stage is materialized (same ownership pattern as bucket_pairs)
-    out._vdf_cached = scored  # type: ignore[attr-defined]
     return out

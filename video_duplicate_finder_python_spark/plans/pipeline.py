@@ -493,31 +493,19 @@ class DedupPipeline:
                 c.unpersist()
 
         fp_pairs = self._fp("pairs", fp_cands, fp_exact)
-        verify_cache: list[DataFrame] = []
 
         def build_pairs() -> DataFrame:
             width = narrowed_width(self.spark, self._known_rows("candidates"), 2000)
-            out = verify_candidates(
+            return verify_candidates(
                 candidates,
                 self._cand_profiles(candidates, rep_docs, signatures, width),
                 cfg,
                 texts=rep_docs.select("url", "text"),
             )
-            cached = getattr(out, "_vdf_cached", None)
-            if cached is not None:
-                verify_cache.append(cached)
-            return out
 
-        try:
-            pairs = self._stage(
-                "pairs",
-                fp_pairs,
-                build_pairs,
-                ["candidates", "rep_docs", "signatures"],
-            )
-        finally:
-            for c in verify_cache:
-                c.unpersist()
+        pairs = self._stage(
+            "pairs", fp_pairs, build_pairs, ["candidates", "rep_docs", "signatures"]
+        )
 
         fp_clusters = self._fp("clusters", fp_pairs, fp_exact)
 

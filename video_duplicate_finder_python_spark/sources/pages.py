@@ -35,7 +35,7 @@ def spread_input(df: DataFrame) -> DataFrame:
     unchanged, so no corpus-wide shuffle is ever introduced at scale.
     Safe for every consumer in this engine: results are
     partitioning-invariant (asserted across parallelism levels by
-    scripts/scaling_bench.py and the pipeline test suite)."""
+    ``scripts/scaling.py run`` and the pipeline test suite)."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

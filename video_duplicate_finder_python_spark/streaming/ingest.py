@@ -407,7 +407,7 @@ class StreamingSignatureIngest:
             # (ever-growing) output dir
             from ..operators.incremental_probe import probe_near_dups
 
-            pairs, _overflow, probe_caches = probe_near_dups(
+            pairs, _overflow, _ = probe_near_dups(
                 self.store.read(), docs.select("url", "text"), self.cfg
             )
             dup = pairs.where("is_dup").persist()
@@ -416,8 +416,6 @@ class StreamingSignatureIngest:
                 f"{self.probe_dups_dir}/batch_id={int(batch_id)}"
             )
             dup.unpersist()
-            for c in probe_caches:
-                c.unpersist()
         # `not manifest` covers the truncated-store case: clear_all() on a
         # never-written store leaves an empty manifest with no schema file,
         # so the upsert branch would crash on read() → None
