@@ -6,8 +6,9 @@ Checks (exit 1 on violation):
 - pages scan never reads `html` when the query doesn't need it (ReadSchema)
 - ann_probe's only Python UDF is the |queries|-row probe UDF; the index
   side is scanned UDF-free and the probe side is broadcast
-- verify plan contains exactly one pandas-UDF node (single-pass LCS), not
-  the round-1 two-branch shape that ran the profiles join twice
+- verify plan (with a texts frame) contains exactly one span_udf node
+  (single-pass LCS), not the round-1 two-branch shape that ran the
+  profiles join twice
 - the candidate union's band explode happens without a pre-shuffle
   (no Exchange between the signatures scan and Generate)
 
@@ -175,13 +176,18 @@ def main() -> None:
     profiles = docs_df.withColumn(
         "shingles", make_shingles_udf(cfg.shingle_k)(F.col("text"))
     ).withColumn("simhash", F.lit(0).cast("long"))
+    # texts must be passed: without them the slow path has no span check,
+    # and a count of span_udf nodes would hold vacuously
     verify_plan = (
-        verify_candidates(cands, profiles, cfg)
-        ._jdf.queryExecution().optimizedPlan().toString()
+        verify_candidates(cands, profiles, cfg, texts=docs_df)
+        ._jdf.queryExecution().executedPlan().toString()
     )
+    span_nodes = [
+        n for n in node_subtrees(verify_plan, "ArrowEvalPython") if "span_udf(" in n
+    ]
     check(
-        "verify: one span_udf evaluation (no fast/slow double join)",
-        verify_plan.count("span_udf") <= 1,
+        "verify: exactly one span_udf node (no fast/slow double join)",
+        len(span_nodes) == 1,
         verify_plan,
     )
 

@@ -1,15 +1,20 @@
 """Incremental near-dup probe: new batch vs signature store in O(delta).
 
 Covers: exact new-vs-store dup, perturbed near-dup, within-batch
-(new x new) dup, unique no-ops, the boilerplate overflow guard, and the
-plan property (store side never shuffled — the batch bands broadcast)."""
+(new x new) dup, unique no-ops, the boilerplate overflow guard, the
+one-pass profile shingling, and the plan property (store side never
+shuffled — the batch bands broadcast)."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from video_duplicate_finder_python_spark import DedupConfig
+from video_duplicate_finder_python_spark.functions.signatures import make_shingles_udf
+from video_duplicate_finder_python_spark.operators import incremental_probe
 from video_duplicate_finder_python_spark.operators.incremental_probe import (
     probe_near_dups,
 )
@@ -34,7 +39,9 @@ def store(spark):
     return compute_signatures(df, CFG, keep_cols=["url", "text"]).persist()
 
 
-def test_probe_finds_expected_pairs(spark, store):
+def _fixture_batch(spark, store):
+    """An exact copy of a store doc, a ~1.7%-token perturbation of another,
+    a unique doc and a within-batch duplicate pair."""
     old0 = store.where("url = 'https://old.example/0'").collect()[0]["text"]
     old1 = store.where("url = 'https://old.example/1'").collect()[0]["text"]
     near = old1.split(" ")
@@ -47,7 +54,11 @@ def test_probe_finds_expected_pairs(spark, store):
         ("https://new.example/pair1", batch_dup),
         ("https://new.example/pair2", batch_dup),
     ]
-    new_docs = spark.createDataFrame(rows, "url string, text string")
+    return spark.createDataFrame(rows, "url string, text string")
+
+
+def test_probe_finds_expected_pairs(spark, store):
+    new_docs = _fixture_batch(spark, store)
     pairs, overflow, caches = probe_near_dups(store, new_docs, CFG)
     got = {
         (r.new_url, r.other_url, r.is_new_other): r
@@ -67,6 +78,42 @@ def test_probe_finds_expected_pairs(spark, store):
     )
     for c in caches:
         c.unpersist()
+
+
+def test_probe_shingles_each_profile_url_once(spark, store, monkeypatch):
+    """The verify profiles (the batch plus the matched store docs) are
+    shingled in one pass: both sides of the scoring join and the span
+    check read one materialized frame, so every profile url goes through
+    the shingle UDF exactly once, in one Arrow batch at this size. The
+    fixture's pairs are unchanged, every column of every row."""
+    sc = spark.sparkContext
+    rows, calls = sc.accumulator(0), sc.accumulator(0)
+
+    def counting_shingles_udf(k):
+        inner = make_shingles_udf(k).func
+
+        @F.pandas_udf(T.ArrayType(T.LongType(), False))
+        def shingles_udf(text: pd.Series) -> pd.Series:
+            rows.add(len(text))
+            calls.add(1)
+            return inner(text)
+
+        return shingles_udf
+
+    monkeypatch.setattr(incremental_probe, "make_shingles_udf", counting_shingles_udf)
+    new_docs = _fixture_batch(spark, store)
+    pairs, _, _ = incremental_probe.probe_near_dups(store, new_docs, CFG)
+    got = sorted(tuple(r) for r in pairs.collect())
+
+    assert got == [
+        ("https://new.example/exact", "https://old.example/0", False, 1.0, 0, None, True),
+        ("https://new.example/near", "https://old.example/1", False,
+         0.8524590163934426, 8, None, True),
+        ("https://new.example/pair1", "https://new.example/pair2", True, 1.0, 0, None, True),
+    ]
+    store_matches = {r[1] for r in got if not r[2]}
+    assert rows.value == new_docs.count() + len(store_matches)
+    assert calls.value == 1
 
 
 def test_overflow_guard(spark, store):

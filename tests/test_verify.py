@@ -6,9 +6,15 @@ from __future__ import annotations
 
 import random
 
+import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from video_duplicate_finder_python_spark.config import DedupConfig
+from video_duplicate_finder_python_spark.functions.fingerprint import (
+    anchored_common_span_len,
+)
+from video_duplicate_finder_python_spark.operators import verify
 from video_duplicate_finder_python_spark.operators.verify import verify_candidates
 
 
@@ -69,3 +75,61 @@ def test_no_texts_frame_skips_substring_confirmation(spark):
     rows = out.collect()
     assert len(rows) == 1
     assert rows[0]["lcs_len"] is None and rows[0]["is_dup"] is False
+
+
+def test_lcs_pairs_reach_span_udf_in_one_batch(spark, monkeypatch):
+    """A handful of pairs that need the LCS check, spread one per partition
+    over the scored frame, reach the span UDF as one Arrow batch (one
+    Python call, not one per partition), with lcs_len and is_dup equal to
+    the kernel run directly on the two texts."""
+    cfg = DedupConfig()
+    sc = spark.sparkContext
+    rows, calls = sc.accumulator(0), sc.accumulator(0)
+    make_span_udf = verify._make_span_udf
+
+    def counting_span_udf(window, mask_bits):
+        inner = make_span_udf(window, mask_bits).func
+
+        @F.pandas_udf(T.IntegerType())
+        def span_udf(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
+            rows.add(len(text_a))
+            calls.add(1)
+            return inner(text_a, text_b)
+
+        return span_udf
+
+    monkeypatch.setattr(verify, "_make_span_udf", counting_span_udf)
+    shared = _words(7, 130)
+    n_pairs = 6
+    texts = {}
+    for i in range(n_pairs):
+        # even pairs share a ~700-char span, odd pairs share nothing long
+        head = shared if i % 2 == 0 else _words(50 + i, 130)
+        texts[f"a{i}"] = head + " " + _words(100 + i, 40)
+        texts[f"b{i}"] = shared + " " + _words(200 + i, 40)
+    candidates = spark.createDataFrame(
+        [(f"a{i}", f"b{i}", ["suffix"]) for i in range(n_pairs)],
+        "url_a string, url_b string, sources array<string>",
+    ).repartition(n_pairs)
+    # disjoint shingle sets → jaccard 0 → every pair needs the LCS check
+    profiles = _profiles(
+        spark, [(u, [k], 0) for k, u in enumerate(sorted(texts))]
+    ).repartition(n_pairs)
+    out = verify_candidates(
+        candidates,
+        profiles,
+        cfg,
+        texts=spark.createDataFrame(sorted(texts.items()), ["url", "text"]),
+    )
+    got = {(r["url_a"], r["url_b"]): (r["lcs_len"], r["is_dup"]) for r in out.collect()}
+
+    want = {}
+    for i in range(n_pairs):
+        lcs = anchored_common_span_len(
+            texts[f"a{i}"], texts[f"b{i}"], cfg.cdc_window, cfg.cdc_mask_bits
+        )
+        want[(f"a{i}", f"b{i}")] = (lcs, lcs >= cfg.substring_min_len)
+    assert got == want
+    assert {dup for _, dup in want.values()} == {True, False}
+    assert rows.value == n_pairs
+    assert calls.value == 1

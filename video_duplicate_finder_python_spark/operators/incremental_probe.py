@@ -36,8 +36,11 @@ does:
   duplicates" is not an answerable question at bounded cost; the caller
   sees the url + match count instead of a silent quadratic explosion
   (within-batch pairs are dropped if EITHER endpoint overflows);
-- exact verification reuses ``verify_candidates`` with shingle profiles
-  recomputed ONLY for the matched url set (tiny by construction);
+- exact verification reuses ``verify_candidates`` on ONE profile frame
+  ``(url, text, simhash, shingles)`` for the batch plus the matched store
+  docs (tiny by construction), shingled in one pass and materialized:
+  both sides of the scoring join and the span check's texts read it, so
+  no url is shingled twice and the store is not re-read for texts;
   within-batch (new×new) duplicates ride the same verify pass.
 
 Nothing is persisted: every reused intermediate is cut with a lazy
@@ -54,10 +57,20 @@ times. At sf0.1 the composed plan printed 26k lines and Catalyst
 analysis/planning dominated the wall (construction alone 5.2 s, the
 single action 8.5 s while every candidate computation measured < 0.4 s
 in isolation). The fix is the guide's plan-truncation rule: the SMALL
-intermediates (batch signatures, the merged candidate table, verify's
-scored frame) are cut with a lazy ``localCheckpoint`` whose first action
-materializes them, after which every downstream appearance is a
-LogicalRDD leaf.
+intermediates (batch signatures, the merged candidate table, the verify
+profile frame, verify's scored frame) are cut with a lazy
+``localCheckpoint`` whose first action materializes them, after which
+every downstream appearance is a LogicalRDD leaf.
+
+Python-task note: every Python UDF task pays a fixed start-up cost
+(~0.17 CPU-s measured on pyspark 4.1 / Python 3.11, README "Scale
+design") that dwarfs the probe's kernels at batch sizes, so the Python
+stages are sized by the data, not by the upstream split count: the
+profile frame is shingled once behind an AQE ``REBALANCE`` and the span
+check gets its own (``verify_candidates``). At a 50-page batch the probe
+runs 4 Python tasks — 2 signature + 1 shingle + 1 span — where the
+un-materialized shape ran 14 (the shingle UDF once per scoring-join side
+and per upstream split).
 """
 
 from __future__ import annotations
@@ -216,10 +229,15 @@ def probe_near_dups(
         cand_new.withColumn("is_new_other", F.lit(True))
     )
 
-    # store text fetch for exactly the urls verify will touch: the batch,
-    # plus the matched store rows (broadcast left-semi — tiny after the
-    # cap). Shingles recomputed for this set only, same policy as the
-    # batch pipeline's verify stage.
+    # the verify profile frame (url, text, simhash, shingles) for exactly
+    # the urls verify will touch: the batch, plus the matched store rows
+    # (broadcast left-semi — tiny after the cap), shingled in ONE pass.
+    # Both sides of the scoring join and the span check's texts read it,
+    # so it is cut with a lazy localCheckpoint; the REBALANCE before the
+    # UDF lets AQE size the shingle stage to the bytes the batch and its
+    # matches actually hold (one Python task at a 50-page batch) instead
+    # of one task per upstream split. The exchange sits above the semi-join,
+    # so the store scan keeps its own splits and is never shuffled.
     matched_old = store.join(
         F.broadcast(
             cand.where(~F.col("is_new_other"))
@@ -229,10 +247,13 @@ def probe_near_dups(
         "url",
         "left_semi",
     ).select("url", "text", "simhash")
-    profile_src = sigs_new.select("url", "text", "simhash").unionByName(matched_old)
-    profiles = profile_src.withColumn(
-        "shingles", make_shingles_udf(cfg.shingle_k)(F.col("text"))
-    ).select("url", "shingles", "simhash")
+    profiles = (
+        sigs_new.select("url", "text", "simhash")
+        .unionByName(matched_old)
+        .hint("rebalance")
+        .withColumn("shingles", make_shingles_udf(cfg.shingle_k)(F.col("text")))
+        .localCheckpoint(eager=False)
+    )
 
     oriented = cand.select(
         "new_url",
@@ -247,9 +268,9 @@ def probe_near_dups(
     )
     verified = verify_candidates(
         candidates,
-        profiles,
+        profiles.select("url", "shingles", "simhash"),
         cfg,
-        texts=profile_src.select("url", "text") if substring else None,
+        texts=profiles.select("url", "text") if substring else None,
     )
     pairs = oriented.join(verified.drop("sources"), ["url_a", "url_b"]).select(
         "new_url", "other_url", "is_new_other", "jaccard", "hamming", "lcs_len", "is_dup"

@@ -12,8 +12,12 @@ Shape notes (both matter at 100 TB):
   text never enters the big candidates⋈profiles join. Texts are joined in
   a second pass restricted to the (tiny) subset of substring-source
   candidates that FAILED the Jaccard test; only those pay the ~8 KB/doc
-  shuffle and the anchored-common-span pandas UDF
-  (functions/fingerprint.py:anchored_common_span_len).
+  text transfer and the anchored-common-span pandas UDF
+  (functions/fingerprint.py:anchored_common_span_len). Those rows pass an
+  AQE ``REBALANCE`` before the UDF, so the span stage's task count follows
+  the bytes of text it checks, not the scored frame's partition count: a
+  handful of pairs is one Python task (each task has a fixed start-up
+  cost, README "Scale design"), a large slow set keeps its parallelism.
 - the scalar scores are cut with a lazy ``localCheckpoint`` before
   branching, so the fast/slow split costs one execution of the scoring
   join, and what is kept is the scalar-only frame (~tens of bytes/pair),
@@ -151,10 +155,12 @@ def verify_candidates(
         tx_b = t_small.select(F.col("url").alias("url_b"), F.col("text").alias("_tx_b"))
         # LEFT joins preserve every needs_lcs pair: a pair whose url is
         # absent from `texts` keeps its row with a NULL text → NULL
-        # lcs_len, instead of vanishing from the result entirely
+        # lcs_len, instead of vanishing from the result entirely. The
+        # REBALANCE sizes the span stage by text bytes (module docstring).
         slow = (
             needed.join(F.broadcast(tx_a), "url_a", "left")
             .join(F.broadcast(tx_b), "url_b", "left")
+            .hint("rebalance")
             .withColumn("lcs_len", span_udf(F.col("_tx_a"), F.col("_tx_b")))
             .drop("_tx_a", "_tx_b")
         )

@@ -33,7 +33,7 @@ import json
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -443,11 +443,23 @@ class StreamingSignatureIngest:
             keys = ["url", "content_hash"]
             delta = docs.join(old_touched.select(*keys), keys, "left_anti")
             kept = old_touched.join(delta.select("url"), "url", "left_anti")
+            # the delta count rides the upsert write (an Observation on
+            # the fresh side), not a separate count() job over the batch.
+            # fresh leads the union so the write runs in the batch's
+            # session, the one the Observation is registered with —
+            # foreachBatch hands over a frame of the stream's cloned
+            # session, and a write run by another session never
+            # completes the Observation
+            observed = Observation()
             fresh = compute_signatures(
-                delta, self.cfg, keep_cols=["url", "content_hash", "text"]
+                delta.observe(observed, F.count(F.lit(1)).alias("rows")),
+                self.cfg,
+                keep_cols=["url", "content_hash", "text"],
             )
-            delta_count = delta.count()
-            self.store.upsert_parts(kept.unionByName(fresh), touched)
+            self.store.upsert_parts(fresh.unionByName(kept), touched)
+            # an empty batch touches no partition, so nothing was written
+            # and nothing observed
+            delta_count = observed.get["rows"] if touched else 0
 
         stat = {
             "batch_id": int(batch_id),
