@@ -13,6 +13,7 @@ import time
 from pyspark.sql import functions as F
 
 from video_duplicate_finder_python_spark import DedupConfig, DedupPipeline, get_spark
+from video_duplicate_finder_python_spark.plans.pipeline import StageJobCounter
 from video_duplicate_finder_python_spark.session import warm_python_workers
 from video_duplicate_finder_python_spark.sources.pages import documents_as_pages
 
@@ -33,18 +34,25 @@ def make_session(cpus: int):
 
 
 def run_dedup_pipeline(spark, pages_df) -> dict:
-    """Full pipeline, in-memory materialization; returns timing + counts."""
+    """Full pipeline, in-memory materialization; returns timing + counts,
+    and ``stage_jobs``: the Spark jobs of each stage (``StageJobCounter``,
+    driver-side status reads, no job; ``<input>`` before the first stage,
+    ``output`` the clusters count)."""
     n_docs = pages_df.count()
+    jobs = StageJobCounter(spark)
     t0 = time.monotonic()
-    res = DedupPipeline(spark, DedupConfig()).run(pages_df)
+    res = DedupPipeline(spark, DedupConfig(), on_stage_start=jobs.mark).run(pages_df)
+    jobs.mark("output")
     n_clusters = res.clusters.count()
     wall = time.monotonic() - t0
+    jobs.mark("")
     return {
         "n_docs": n_docs,
         "n_cluster_members": n_clusters,
         "wall_s": round(wall, 3),
         "docs_per_sec": round(n_docs / wall, 2),
         "stage_wall_s": {k: round(v["wall_s"], 2) for k, v in res.metrics.items()},
+        "stage_jobs": jobs.jobs,
     }
 
 

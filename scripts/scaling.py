@@ -16,7 +16,9 @@ sample to SAMPLES.jsonl as soon as its child JVM returns. Ops and the
 span one sample times:
 
 - ``pipeline``: ``DedupPipeline.run`` + clusters count over ``size``
-  seeded synthetic pages (``bench_core.synth_corpus_parquet``);
+  seeded synthetic pages (``bench_core.synth_corpus_parquet``), the span
+  ``bench_core.run_dedup_pipeline`` times; each sample also records the
+  Spark jobs of every stage (``stage_jobs``);
 - ``probe``: one ``probe_near_dups`` call of a ``batch``-page batch (half
   byte-copies of store pages, half fresh pages) against a signature
   store of ``size`` synthetic pages, plus a count and a noop write of the
@@ -196,8 +198,8 @@ def build_inputs(op: str, size: int, batch: int, workdir: str, cpus: int) -> Non
 
 def measure(spark, op: str, size: int, batch: int, workdir: str) -> dict:
     """Run the op's timed span once; → ``n_docs`` (items the throughput
-    counts), ``wall_s`` and the op's invariant (+ stage walls for the
-    pipeline)."""
+    counts), ``wall_s`` and the op's invariant (+ stage walls and jobs for
+    the pipeline)."""
     if op == "pipeline":
         from bench_core import run_dedup_pipeline
 
@@ -358,19 +360,27 @@ pruned.
         }
         tot = {c: sum(smin[c].values()) for c in (lo, hi)}
 
-        def stage_rows(val) -> str:
+        def stage_rows(val, extra=lambda k: "") -> str:
             return "\n".join(
                 f"| {k} | {val(lo, k):.1f} | {val(hi, k):.1f} | "
-                f"{val(lo, k) / max(val(hi, k), 0.01):.2f}x |"
+                f"{val(lo, k) / max(val(hi, k), 0.01):.2f}x |{extra(k)}"
                 for k in stages
             )
 
-        md += f"""
-Per-stage wall seconds of the best whole sample at each level:
+        def jobs(k: str) -> str:
+            # samples taken before stage_jobs was recorded show "-"
+            cells = [str(best[c].get("stage_jobs", {}).get(k, "-")) for c in (lo, hi)]
+            return f" {cells[0]} | {cells[1]} |"
 
-| stage | local[{lo}] | local[{hi}] | speedup |
-|---|---|---|---|
-{stage_rows(lambda c, k: best[c]['stage_wall_s'][k])}
+        md += f"""
+Per-stage wall seconds and Spark jobs of the best whole sample at each
+level:
+
+| stage | local[{lo}] | local[{hi}] | speedup | jobs local[{lo}] | jobs local[{hi}] |
+|---|---|---|---|---|---|
+{stage_rows(lambda c, k: best[c]['stage_wall_s'][k], jobs)}
+| (before the first stage) | | | | {jobs("<input>")}
+| (clusters count) | | | | {jobs("output")}
 
 ## Contention diagnostic (per-stage minimum across all samples)
 

@@ -163,3 +163,29 @@ def test_rows_bound_above_threshold_keeps_salting(spark):
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "_salt" in plan
     assert int(dropped.first()[0] or 0) > 0
+
+
+def test_observed_drop_counts_match_dropped_frame(spark):
+    """``observe`` counts the over-cap members into an Observation filled
+    by the pair consumer's own action — per predicate, equal to the
+    ``dropped`` frame's counts. On an empty input AQE prunes the observed
+    self-join and no result arrives: ``observed_metrics`` says so (None)
+    instead of reporting a count, and the ``dropped`` frame still counts."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from video_duplicate_finder_python_spark.sources.checkpoint import observed_metrics
+
+    rows = [(1, f"u{i:03d}") for i in range(10)] + [(2, f"v{i}") for i in range(5)]
+    for data, want in ((rows, {"k1": 6, "k2": 1, "all": 7}), ([], None)):
+        df = spark.createDataFrame(data, "key long, url string")
+        obs = Observation()
+        preds = {"k1": F.col("key") == 1, "k2": F.col("key") == 2, "all": F.lit(True)}
+        pairs, dropped, cached = bucket_pairs(
+            df, key_cols=["key"], max_bucket_size=4, observe=(obs, preds)
+        )
+        assert cached == []
+        n_pairs = pairs.count()
+        assert n_pairs == (12 if data else 0)
+        assert observed_metrics(obs) == want
+        assert int(dropped.first()[0] or 0) == (want or {}).get("all", 0)

@@ -4,6 +4,8 @@ each merge branch of the reference union-find
 
 from __future__ import annotations
 
+import importlib
+
 from video_duplicate_finder_python_spark.operators.connected_components import (
     connected_components,
 )
@@ -96,3 +98,53 @@ def test_session_conf_never_mutated_by_distributed_rounds(spark):
     assert got == {("a", "a"), ("b", "a"), ("c", "a")}
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
+
+
+GRAPHS = {
+    "chain": [("a", "b"), ("b", "c"), ("c", "d")],
+    "two_pairs": [("a", "b"), ("c", "d")],
+    "star": [("m", "x1"), ("m", "x2"), ("m", "x3")],
+    "late_merge": [("a", "b"), ("x", "y"), ("b", "x")],
+    "loops_and_dups": [("a", "a"), ("a", "b"), ("b", "a"), ("a", "b")],
+    "long_path": [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(40)],
+}
+
+
+def test_known_edge_bound_finishes_in_driver_with_same_clusters(spark, monkeypatch):
+    """A caller-known row bound at or below ``local_finish_edges`` skips
+    the digest (no distinct shuffle, no count action) and finishes in the
+    driver; the clusters equal the pure distributed rounds' on every
+    fixture graph."""
+    cc = importlib.import_module(connected_components.__module__)
+    digests = []
+    real_digest = cc._edge_digest
+    monkeypatch.setattr(cc, "_edge_digest", lambda e: digests.append(1) or real_digest(e))
+    for name, edges in GRAPHS.items():
+        df = spark.createDataFrame(edges, ["u", "v"])
+        dist = {tuple(r) for r in connected_components(df, local_finish_edges=0).collect()}
+        digests.clear()
+        got = {
+            tuple(r)
+            for r in connected_components(
+                df, local_finish_edges=len(edges), edge_rows_bound=len(edges)
+            ).collect()
+        }
+        assert got == dist, name
+        assert digests == [], name
+
+
+def test_edge_bound_above_threshold_keeps_digest_path(spark, monkeypatch):
+    cc = importlib.import_module(connected_components.__module__)
+    digests = []
+    real_digest = cc._edge_digest
+    monkeypatch.setattr(cc, "_edge_digest", lambda e: digests.append(1) or real_digest(e))
+    edges = GRAPHS["late_merge"]
+    df = spark.createDataFrame(edges, ["u", "v"])
+    got = {
+        tuple(r)
+        for r in connected_components(
+            df, local_finish_edges=len(edges) - 1, edge_rows_bound=len(edges)
+        ).collect()
+    }
+    assert got == {("a", "a"), ("b", "a"), ("x", "a"), ("y", "a")}
+    assert digests == [1]

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 import pytest
 
 from video_duplicate_finder_python_spark.config import DedupConfig
@@ -246,3 +248,158 @@ def test_run_leaves_no_cached_frames(spark, corpus):
     res = DedupPipeline(spark, DedupConfig()).run(pages_spark_df(spark, corpus))
     assert res.clusters.count() > 0
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _run_both_modes(spark, pages, cfg, tmp_path) -> dict:
+    """Pipeline output per checkpoint mode: durable dir and in-memory."""
+    from video_duplicate_finder_python_spark import DedupPipeline
+
+    out = {}
+    for mode, ck in (("durable", str(tmp_path / "ck")), ("memory", None)):
+        res = DedupPipeline(spark, cfg, checkpoint_dir=ck).run(pages)
+        out[mode] = {
+            "counters": res.metrics["candidates"]["counters"],
+            "candidates": res.metrics["candidates"]["rows_out"],
+            "clusters": sorted(map(tuple, res.clusters.collect())),
+            "pairs": sorted(
+                (*r[:5], tuple(sorted(r["sources"])), r["is_dup"])
+                for r in res.pairs.collect()
+            ),
+        }
+    return out
+
+
+def test_forced_drop_counters_identical_across_checkpoint_modes(spark, corpus, tmp_path):
+    """The drop counters ride the candidates write as an Observation on
+    the ranked bucket rows. With a cap of 2 every source drops members;
+    the counts, clusters and pair rows are the same whether the stage is
+    written to parquet or cut in memory, and in both size regimes: at a
+    session width of 1 with broadcasts disabled no shuffle is narrowed
+    and verify fetches texts separately (the corpus-scale shapes). The
+    counts equal those of the former separate counting job."""
+    from video_duplicate_finder_python_spark.corpus import pages_spark_df
+
+    pages = pages_spark_df(spark, corpus)
+    cfg = DedupConfig(max_bucket_size=2)
+    got = _run_both_modes(spark, pages, cfg, tmp_path / "small")
+    with _session_conf(
+        spark,
+        {"spark.sql.shuffle.partitions": "1", "spark.sql.autoBroadcastJoinThreshold": "-1"},
+    ):
+        large = _run_both_modes(spark, pages, cfg, tmp_path / "large")
+    assert got["durable"] == got["memory"] == large["durable"] == large["memory"]
+    assert got["durable"]["counters"] == {
+        "lsh_dropped_members": 10,
+        "simhash_dropped_members": 3,
+        "substring_dropped_members": 133,
+    }
+
+
+@contextmanager
+def _session_conf(spark, conf: dict[str, str]):
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def _pages(spark, texts: list[str]):
+    from datetime import datetime
+
+    from video_duplicate_finder_python_spark.streaming.ingest import PAGES_SCHEMA
+
+    rows = [
+        (
+            f"https://x.example/{i}",
+            datetime(2025, 1, 1),
+            f"<html><body><p>{t}</p></body></html>".encode(),
+            t,
+            "en",
+        )
+        for i, t in enumerate(texts)
+    ]
+    return spark.createDataFrame(rows, PAGES_SCHEMA)
+
+
+@pytest.mark.parametrize(
+    "texts",
+    [
+        [],
+        ["a single page has no bucket to share with anybody at all"],
+        [" ".join(f"w{d}x{i}" for i in range(60)) for d in range(4)],
+    ],
+    ids=["empty", "one-page", "all-singleton"],
+)
+def test_drop_counters_on_degenerate_inputs(spark, tmp_path, texts):
+    """No non-singleton bucket (or no rows at all): AQE may prune the
+    observed node, and every enabled source still reports 0."""
+    got = _run_both_modes(spark, _pages(spark, texts), DedupConfig(), tmp_path)
+    for mode in ("durable", "memory"):
+        assert got[mode]["candidates"] == 0
+        assert got[mode]["counters"] == {
+            "lsh_dropped_members": 0,
+            "simhash_dropped_members": 0,
+            "substring_dropped_members": 0,
+        }
+        assert got[mode]["clusters"] == []
+
+
+def _long_pair_texts(n_pairs: int, words: int) -> list[str]:
+    """``n_pairs`` near-duplicate pairs of long pages (one word apart),
+    every pair on its own vocabulary, every token distinct in its page."""
+    out = []
+    for p in range(n_pairs):
+        base = [f"p{p}w{i % 997}x{i // 997}" for i in range(words)]
+        alt = list(base)
+        alt[words // 2] = "changed"
+        out += [" ".join(base), " ".join(alt)]
+    return out
+
+
+def test_long_texts_take_the_text_less_profiles(spark, tmp_path, monkeypatch):
+    """The pipeline broadcasts one profile frame WITH texts only when the
+    candidate docs' estimated profile bytes (2 docs per candidate pair ×
+    the mean text size × 5) fit the session's broadcast limit; a row
+    count alone does not bound it. Three pairs of ~180 KB pages stay far
+    inside the one-task candidate regime, yet at a 1 MB limit (scaled
+    down with the pages to keep the test small: 64 MB pages at the
+    default would do the same) they take the text-less shape, with the
+    same pairs and clusters. The ``text_bytes`` counter the estimate
+    reads is exact in both checkpoint modes."""
+    from pyspark.sql import functions as F
+
+    from video_duplicate_finder_python_spark import DedupPipeline
+    from video_duplicate_finder_python_spark.plans import pipeline as pipeline_mod
+
+    shapes = []
+    verify = pipeline_mod.verify_candidates
+
+    def spy(candidates, cand_profiles, *args, **kwargs):
+        shapes.append("text" in cand_profiles.columns)
+        return verify(candidates, cand_profiles, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline_mod, "verify_candidates", spy)
+    pages = _pages(spark, _long_pair_texts(3, 20_000))
+    text_bytes = (
+        DedupPipeline(spark)._extract(pages).agg(F.sum(F.octet_length("text"))).first()[0]
+    )
+    assert text_bytes > 6 * 150_000
+    runs = {}
+    for limit in ("64MB", "1MB"):
+        with _session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": limit}):
+            for mode, ck in (("durable", str(tmp_path / limit)), ("memory", None)):
+                res = DedupPipeline(spark, DedupConfig(), checkpoint_dir=ck).run(pages)
+                assert res.metrics["candidates"]["rows_out"] == 3
+                assert res.metrics["signatures"]["counters"] == {"text_bytes": text_bytes}
+                runs[limit, mode] = (
+                    sorted(map(tuple, res.clusters.collect())),
+                    sorted((*r[:5], tuple(sorted(r["sources"])), r["is_dup"]) for r in res.pairs.collect()),
+                )
+    assert shapes == [True, True, False, False]
+    first = runs["64MB", "durable"]
+    assert len(first[0]) == 6 and all(r[-1] for r in first[1])
+    assert all(v == first for v in runs.values())

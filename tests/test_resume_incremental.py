@@ -29,10 +29,45 @@ def test_rerun_resumes_every_stage_from_checkpoint(spark, ckdir):
     clusters1 = sorted(map(tuple, res1.clusters.collect()))
     assert not any(m["cached"] for m in res1.metrics.values())
 
+    # a full resume reads every stage with the schema its _metrics.json
+    # stores: the input digest is its only Spark job (no footer-inference
+    # job per cached stage)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(DedupPipeline.JOB_GROUP))
     res2 = DedupPipeline(spark, DedupConfig(), checkpoint_dir=ckdir).run(pages)
-    clusters2 = sorted(map(tuple, res2.clusters.collect()))
+    resume_jobs = set(tracker.getJobIdsForGroup(DedupPipeline.JOB_GROUP)) - before
     assert all(m["cached"] for m in res2.metrics.values()), res2.metrics
+    assert len(resume_jobs) == len(digest_jobs(spark, pages)), sorted(resume_jobs)
+    clusters2 = sorted(map(tuple, res2.clusters.collect()))
     assert clusters1 == clusters2
+    # the stored schema is the one inference would have found
+    for name in ("clusters", "pairs", "exact_edges"):
+        inferred = spark.read.parquet(f"{ckdir}/{name}").schema
+        assert getattr(res2, name).schema == inferred
+
+
+def digest_jobs(spark, pages) -> set[int]:
+    """Spark job ids that ``DedupPipeline.input_digest(pages)`` runs."""
+    tracker = spark.sparkContext.statusTracker()
+    spark.sparkContext.setJobGroup(DedupPipeline.JOB_GROUP, "digest")
+    before = set(tracker.getJobIdsForGroup(DedupPipeline.JOB_GROUP))
+    DedupPipeline.input_digest(pages)
+    return set(tracker.getJobIdsForGroup(DedupPipeline.JOB_GROUP)) - before
+
+
+def test_input_digest_recomputes_a_missing_observation(spark, monkeypatch):
+    """The digest's aggregates ride a no-op write as an Observation. When
+    no result arrives, the digest runs the aggregate in a job of its own:
+    a non-empty input never reads as the empty corpus's ``0:0``."""
+    from video_duplicate_finder_python_spark.plans import pipeline as pipeline_mod
+
+    pages = pages_spark_df(spark, generate_corpus(seed=5, n_docs=20))
+    want = DedupPipeline.input_digest(pages)
+    assert want.startswith("20:") and want != "20:0"
+    monkeypatch.setattr(pipeline_mod, "observed_metrics", lambda obs: None)
+    assert DedupPipeline.input_digest(pages) == want
+    monkeypatch.undo()
+    assert DedupPipeline.input_digest(pages.limit(0)) == "0:0"
 
 
 def test_changed_input_invalidates(spark, ckdir):

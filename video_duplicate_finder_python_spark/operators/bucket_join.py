@@ -34,7 +34,7 @@ the original single-window path, whose partitions are now bounded by
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -53,6 +53,7 @@ def capped_buckets(
     max_collected_hot: int = 64,
     dropped_group_by: list[str] | None = None,
     bucket_rows_bound: int | None = None,
+    observe: tuple[Observation, dict[str, Column]] | None = None,
 ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
     """Rank every bucket sharing ``key_cols`` and keep at most
     ``max_bucket_size`` members of each (the ``id_col``-ordered prefix,
@@ -96,6 +97,17 @@ def capped_buckets(
     always-broadcast shape re-scanned the banded input for the sizes
     aggregate AND both join branches — measured +19 s on the 300k-doc
     candidates stage at local[4] even with zero hot keys.
+
+    ``observe=(observation, {name: predicate})``: count the dropped
+    members into ``observation`` instead — one metric per name, counting
+    the over-cap rows that match its predicate (``F.lit(True)`` for all) —
+    so the counts ride the action that consumes ``kept`` and the
+    ``dropped`` frame need not run (the pipeline's candidates stage).
+    Read the result with ``sources.checkpoint.observed_metrics`` after
+    that action; it is None when AQE pruned the observed node (zero
+    ranked rows), and ``dropped`` then still counts. The observed node
+    sits on ``kept`` (above the cache when ``persist``), so each self-join
+    side carries an identical copy and Spark reports one.
 
     ``persist=True`` caches the ranked bucket table (MEMORY_AND_DISK) so
     that running the ``kept`` consumer and the ``dropped`` action doesn't
@@ -231,8 +243,14 @@ def capped_buckets(
     if persist:
         ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK)
         caches.append(ranked)
+    over = F.col("_rn") > F.col("_cap")
+    if observe is not None:
+        obs, preds = observe
+        ranked = ranked.observe(
+            obs, *[F.count_if(over & p).alias(n) for n, p in preds.items()]
+        )
     kept = ranked.filter(F.col("_rn") <= F.col("_cap"))
-    over_cap = ranked.filter(F.col("_rn") > F.col("_cap"))
+    over_cap = ranked.filter(over)
     if dropped_group_by:
         dropped = over_cap.groupBy(*dropped_group_by).agg(
             F.count(F.lit(1)).alias("dropped_bucket_members")
@@ -257,8 +275,8 @@ def bucket_pairs(
     Returns ``(pairs, dropped, cached)``: ``pairs`` has columns ``url_a,
     url_b`` (``url_a < url_b``) plus ``<c>_a / <c>_b`` for every carry
     column, over the members ``capped_buckets`` keeps (``cap_kwargs`` are
-    its cap, salt, persist and width options); ``dropped`` and ``cached``
-    are its outputs unchanged.
+    its cap, salt, persist, width and observe options); ``dropped`` and
+    ``cached`` are its outputs unchanged.
 
     ``keep_keys``: key columns to RETAIN in the pairs output (e.g. a
     source tag when several candidate spaces share one call — the

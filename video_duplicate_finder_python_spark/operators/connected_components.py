@@ -137,14 +137,27 @@ def _local_finish(e: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame, max_iter: int = 30, local_finish_edges: int = 500_000
+    edges: DataFrame,
+    max_iter: int = 30,
+    local_finish_edges: int = 500_000,
+    edge_rows_bound: int | None = None,
 ) -> DataFrame:
     """``edges(u, v)`` (undirected, any orientation) → ``clusters(url, cluster_id)``.
 
     Only nodes that appear in at least one edge are emitted (singletons have
     no row, matching the reference: files in no duplicate pair join no
     group). ``local_finish_edges=0`` forces the pure distributed loop.
+
+    ``edge_rows_bound``: an upper bound on ``edges``' row count the caller
+    already knows without a job (the pipeline sums its two materialized
+    edge stages' row counts). At or below ``local_finish_edges`` the edges
+    go straight to the driver finish: one collect of the raw edges (the
+    union-find absorbs duplicates and orientation), where the digest path
+    first runs a distinct shuffle and a count/hash action to learn the
+    same thing. A larger or unknown bound takes the digest path.
     """
+    if edge_rows_bound is not None and edge_rows_bound <= local_finish_edges:
+        return _local_finish(edges.where(F.col("u") != F.col("v")))
     # lazy localCheckpoint: the digest action right after materializes the
     # round's edges AND truncates lineage in the same job — eager=True
     # spent a second driver-blocking action per round, pure serial latency

@@ -35,11 +35,13 @@ without the bucket shuffle.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 from functools import reduce
 from hashlib import blake2b
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
@@ -54,7 +56,16 @@ from ..operators.shuffle_width import narrowed_width, shuffle_width
 from ..operators.simhash_candidates import explode_simhash_chunks
 from ..operators.suffix_array import suffix_array_candidates
 from ..operators.verify import verify_candidates
-from ..sources.checkpoint import CheckpointManager
+from ..sources.checkpoint import CheckpointManager, observed_metrics
+
+
+def _byte_size(conf: str) -> int:
+    """A Spark byte-size conf value (``64MB``, ``10485760b``, ``-1``) in
+    bytes; -1 (disabled) stays negative."""
+    m = re.fullmatch(r"(-?\d+)([kmgt]?)b?", conf.strip().lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {conf!r}")
+    return int(m[1]) << (10 * " kmgt".index(m[2] or " "))
 
 
 @dataclass
@@ -142,15 +153,24 @@ class DedupPipeline:
         length-preserving-rewrite residual. Byte-level staleness beyond
         this is the incremental path's job (content_hash anti-join,
         SURVEY O3)."""
-        row = pages.select(
+        # the two aggregates ride a no-op write as an Observation: one
+        # scan job, where an aggregate-then-first() ran a partial
+        # aggregation stage plus a final one. Same n:h value as that
+        # shape, so existing checkpoint fingerprints stay valid.
+        hashed = pages.select(
+            F.xxhash64("url", "warc_ts", F.length(F.col("html"))).alias("_h")
+        )
+        aggs = (
             F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.bit_xor(
-                    F.xxhash64("url", "warc_ts", F.length(F.col("html")))
-                ),
-                F.lit(0),
-            ).alias("h"),
-        ).first()
+            F.coalesce(F.bit_xor("_h"), F.lit(0)).alias("h"),
+        )
+        obs = Observation()
+        hashed.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+        row = observed_metrics(obs)
+        if row is None:
+            # no result (an input the planner proved empty prunes the
+            # observed node): the aggregate itself, in a job of its own
+            row = hashed.select(*aggs).first().asDict()
         return f"{row['n']}:{row['h']}"
 
     # -- stages ---------------------------------------------------------------
@@ -178,7 +198,7 @@ class DedupPipeline:
             extract_text_col(F.col("html")).alias("text"),
         ).withColumn("content_hash", content_hash_col(F.col("text")))
 
-    def _signatures(self, rep_docs: DataFrame) -> DataFrame:
+    def _signatures(self, rep_docs: DataFrame, obs: Observation) -> DataFrame:
         # compute-bound stage: spread rows evenly over all cores regardless
         # of upstream AQE coalescing (which sizes partitions for IO, not CPU).
         # shingle arrays are NOT kept: they would roughly double the
@@ -195,8 +215,16 @@ class DedupPipeline:
             self.spark.sparkContext.defaultParallelism,
             shuffle_width(self.spark, self._known_rows("rep_docs"), 256),
         )
+        # the signed texts' total bytes (the ``text_bytes`` counter, read
+        # by _profiles_fit_broadcast) ride the stage as an Observation
+        # BELOW its repartition: the write fills it, and so does the
+        # in-memory mode, whose lazy localCheckpoint runs the shuffle map
+        # stage itself (an observed node in the final stage would report
+        # 0 there)
         return compute_signatures(
-            rep_docs.repartition(n_part),
+            rep_docs.observe(
+                obs, F.sum(F.octet_length("text")).alias("text_bytes")
+            ).repartition(n_part),
             self.cfg,
             keep_cols=["url", "content_hash", "group_size"],
         )
@@ -207,6 +235,27 @@ class DedupPipeline:
         m = self.ckpt.metrics.get(stage)
         return m.rows_out if m is not None and m.rows_out > 0 else None
 
+    def _profiles_fit_broadcast(self) -> bool:
+        """Whether the candidate docs' profiles, texts included, fit the
+        session's broadcast limit (``spark.sql.autoBroadcastJoinThreshold``)
+        — an estimate from stage metrics, no job: at most
+        ``2 × candidates`` docs (and no more than rep_docs holds), each the
+        corpus-mean text size (the signatures stage's ``text_bytes``
+        counter) times 5 — the text plus its shingle array, one 8-byte hash
+        per space-separated token of >= 2 bytes, so <= 4 bytes per text
+        byte. False when any of these is unknown (e.g. a signatures stage
+        cached without the counter) or the limit is disabled."""
+        cands = self._known_rows("candidates")
+        docs = self._known_rows("rep_docs")
+        sig = self.ckpt.metrics.get("signatures")
+        text_bytes = sig.counters.get("text_bytes") if sig is not None else None
+        if cands is None or docs is None or text_bytes is None:
+            return False
+        limit = _byte_size(
+            self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
+        )
+        return min(2 * cands, docs) * 5 * text_bytes / docs <= limit
+
     def _cand_profiles(
         self,
         candidates: DataFrame,
@@ -214,22 +263,48 @@ class DedupPipeline:
         signatures: DataFrame,
         width: int | None = None,
     ) -> DataFrame:
-        """(url, shingles, simhash) for every url in a candidate pair —
-        deliberately WITHOUT text: verify joins texts separately for the
-        small substring-confirmation branch only.
+        """The verify profiles of every url in a candidate pair.
 
-        ``width`` (from the materialized candidates row count): when the
-        candidate set is provably small, the url-set dedup and the profile
-        joins run at a data-sized width, and the semi-joins against the
-        corpus-sized rep_docs/signatures broadcast the (tiny) url set so
-        the corpus side is never shuffled for it — the candidates-are-a-
-        tiny-fraction-of-the-corpus regime made explicit in the plan.
-        ``width=None`` (unknown/large) keeps the shuffled shape."""
+        When they fit a broadcast (``_profiles_fit_broadcast``): ONE
+        profile frame ``(url, text, simhash, shingles)``, the probe's shape
+        (operators/incremental_probe.py) — rep_docs semi-joined to the
+        broadcast candidate urls, simhash broadcast-joined from the
+        signatures semi-joined to the same urls, one AQE ``REBALANCE`` (one
+        Python task at a few hundred docs), the shingle UDF once, cut with
+        a lazy ``localCheckpoint``. It is returned broadcast-hinted: both
+        scoring-join sides read the same broadcast and its texts feed the
+        span check (verify carries them only for the pairs that need
+        them), so nothing is shuffled or read twice.
+
+        Otherwise ``(url, shingles, simhash)``, deliberately WITHOUT text
+        (at 10^5 candidate docs the texts are ~1 GB): verify fetches texts
+        separately for the small substring-confirmation branch only.
+        ``width`` (from the materialized candidates row count, the
+        ``narrowed_width`` rule): when the candidate set is provably small,
+        the url-set dedup and the profile joins run at a data-sized width,
+        and the semi-joins against the corpus-sized rep_docs/signatures
+        broadcast the url set so the corpus side is never shuffled for it
+        (measured at 50k docs/local[2], 7,320 candidates: pairs 9.6 s
+        against 12.7 s for the shuffled shape). ``width=None``
+        (unknown/large) keeps the shuffled shape."""
         cand_urls = (
             candidates.select(F.col("url_a").alias("url"))
             .union(candidates.select(F.col("url_b").alias("url")))
         )
         shingles_udf = make_shingles_udf(self.cfg.shingle_k)
+        if self._profiles_fit_broadcast():
+            # a semi-join's build side needs no distinct: a url repeated
+            # across pairs is one more entry in a small hash relation
+            urls_b = F.broadcast(cand_urls)
+            sims = signatures.select("url", "simhash").join(urls_b, "url", "left_semi")
+            return F.broadcast(
+                rep_docs.join(urls_b, "url", "left_semi")
+                .select("url", "text")
+                .join(F.broadcast(sims), "url")
+                .hint("rebalance")
+                .withColumn("shingles", shingles_udf(F.col("text")))
+                .localCheckpoint(eager=False)
+            )
         if width is not None:
             urls_b = F.broadcast(cand_urls.repartition(width, "url").distinct())
             cand_docs = rep_docs.join(urls_b, "url", "left_semi").select(
@@ -308,8 +383,8 @@ class DedupPipeline:
 
     def _candidates(
         self, signatures: DataFrame, rep_docs: DataFrame
-    ) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-        """→ (candidates, drops_df, cached_handles).
+    ) -> tuple[DataFrame, Callable[[], dict], list[DataFrame]]:
+        """→ (candidates, drop_counters, cached_handles).
 
         One bucket shuffle for all signature-derived sources: their rows
         share one ``(src, key)`` space, so there is 1 ranking window + 1
@@ -317,9 +392,14 @@ class DedupPipeline:
         within-source multiplicity in the same pass, and the eager hot-key
         statistic is computed once over the union. The bucket key is
         ``(src, key)``, so spaces never mix; caps and salting apply per
-        bucket. The bucket table is persisted so the skew-drop counters
-        come from ONE job over cached partitions, not a re-run of the
-        explode + window shuffle."""
+        bucket. The ranked bucket table is persisted, so both self-join sides
+        read one ranking. The drop counters are an ``Observation`` on it
+        (``capped_buckets``' ``observe``): the candidates write fills them,
+        and ``drop_counters()`` — to be called after that write — reads
+        them without a job. Every enabled source reports a counter, 0 when
+        nothing was dropped. When no result arrived (zero ranked rows:
+        AQE prunes the observed node) the counters come from the
+        ``dropped`` frame in a job of their own."""
         cfg = self.cfg
         # every (src, key) bucket holds at most one row per signature row
         # (band hashes are band-seeded, chunk keys chunk-id-seeded, CDC
@@ -329,10 +409,19 @@ class DedupPipeline:
         # job outright (see bucket_rows_bound there)
         bound = self._known_rows("signatures")
         tagged: list[DataFrame] = []
-        drops: list[DataFrame] = []
+        counters = {
+            f"{self._DROP_LABEL[s]}_dropped_members": 0 for s in cfg.candidate_sources
+        }
+        obs = Observation()
+        dropped = sa_dropped = None
         caches: list[DataFrame] = []
         rows = self._keyed_candidate_rows(signatures)
         if rows is not None:
+            preds = {
+                f"{self._DROP_LABEL[s]}_dropped_members": F.col("src") == F.lit(s)
+                for s in cfg.candidate_sources
+                if s != "suffix_array"
+            }
             pairs, dropped, caches = bucket_pairs(
                 rows,
                 key_cols=["src", "key"],
@@ -344,6 +433,7 @@ class DedupPipeline:
                 salt_threshold=cfg.skew_salt_threshold,
                 n_salts=cfg.skew_n_salts,
                 bucket_rows_bound=bound,
+                observe=(obs, preds),
             )
             hamming_ok = (F.col("src") != F.lit("simhash")) | (
                 F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
@@ -357,15 +447,6 @@ class DedupPipeline:
                     F.lit(None).cast("int").alias("lcs_hint"),
                 )
             )
-            label_map = F.create_map(
-                *[F.lit(x) for kv in self._DROP_LABEL.items() for x in kv]
-            )
-            drops.append(
-                dropped.select(
-                    label_map[F.col("src")].alias("src"),
-                    F.col("dropped_bucket_members").alias("n"),
-                )
-            )
         if "suffix_array" in cfg.candidate_sources:
             sa_pairs, sa_dropped, sa_caches = suffix_array_candidates(rep_docs, cfg)
             tagged.append(
@@ -374,12 +455,6 @@ class DedupPipeline:
                     "url_b",
                     F.lit("suffix_array").alias("source"),
                     F.col("lcs_hint").cast("int").alias("lcs_hint"),
-                )
-            )
-            drops.append(
-                sa_dropped.select(
-                    F.lit(self._DROP_LABEL["suffix_array"]).alias("src"),
-                    F.col("dropped_bucket_members").alias("n"),
                 )
             )
             caches.extend(sa_caches)
@@ -395,7 +470,25 @@ class DedupPipeline:
             F.collect_set("source").alias("sources"),
             F.max("lcs_hint").alias("lcs_hint"),
         )
-        return cands, reduce(DataFrame.unionByName, drops), caches
+
+        def drop_counters() -> dict:
+            out = dict(counters)
+            if dropped is not None:
+                got = observed_metrics(obs)
+                if got is None:
+                    got = {
+                        f"{self._DROP_LABEL[r['src']]}_dropped_members": r[1]
+                        for r in dropped.collect()
+                    }
+                out.update(got)
+            if sa_dropped is not None:
+                # the opt-in suffix-array source counts its drops in its
+                # own (small, per-group) job
+                n = sa_dropped.first()["dropped_bucket_members"]
+                out[f"{self._DROP_LABEL['suffix_array']}_dropped_members"] = int(n or 0)
+            return out
+
+        return cands, drop_counters, caches
 
     # -- cancellation (SURVEY O19) ---------------------------------------------
     JOB_GROUP = "vdf-dedup-pipeline"
@@ -455,41 +548,44 @@ class DedupPipeline:
         )
 
         fp_sigs = self._fp("signatures", fp_exact)
+        sig_obs = Observation()
+
+        def text_bytes() -> dict:
+            got = observed_metrics(sig_obs)
+            if got is None:
+                # no result: 0 only for a known-empty rep_docs, else unknown
+                return {} if self._known_rows("rep_docs") else {"text_bytes": 0}
+            return {"text_bytes": int(got["text_bytes"] or 0)}
+
         signatures = self._stage(
-            "signatures", fp_sigs, lambda: self._signatures(rep_docs), ["rep_docs"]
+            "signatures",
+            fp_sigs,
+            lambda: self._signatures(rep_docs, sig_obs),
+            ["rep_docs"],
+            counters=text_bytes,
         )
 
         fp_cands = self._fp("candidates", fp_sigs, fp_exact)
-        cands_lazy, drops_df, caches = self._candidates(signatures, rep_docs)
+        # built inside the stage, so a cached stage plans nothing (at scale
+        # the salted bucket shuffle runs an eager hot-key job while planning)
+        built: dict = {"caches": []}
 
-        def collect_drops() -> dict:
-            # one job over the persisted bucket tables (vs three re-runs of
-            # the band/window lineages in the round-1 shape). Zero-init:
-            # the bucket shuffle's grouped metric emits no row for a source
-            # with no drops, and a healthy corpus should still record 0
-            # explicitly for every enabled source.
-            out = {
-                f"{self._DROP_LABEL[s]}_dropped_members": 0
-                for s in cfg.candidate_sources
-            }
-            out.update(
-                {
-                    f"{r['src']}_dropped_members": int(r["n"] or 0)
-                    for r in drops_df.collect()
-                }
+        def build_candidates() -> DataFrame:
+            cands, built["counters"], built["caches"] = self._candidates(
+                signatures, rep_docs
             )
-            return out
+            return cands
 
         try:
             candidates = self._stage(
                 "candidates",
                 fp_cands,
-                lambda: cands_lazy,
+                build_candidates,
                 ["signatures", "rep_docs"],
-                counters=collect_drops,
+                counters=lambda: built["counters"](),
             )
         finally:
-            for c in caches:
+            for c in built["caches"]:
                 c.unpersist()
 
         fp_pairs = self._fp("pairs", fp_cands, fp_exact)
@@ -515,7 +611,12 @@ class DedupPipeline:
                     F.col("url_a").alias("u"), F.col("url_b").alias("v")
                 )
             )
-            return connected_components(edges)
+            # the two materialized stages' row counts bound the edge set
+            # (no job): a small one goes straight to the driver finish
+            n_exact = self.ckpt.metrics["exact_edges"].rows_out
+            n_pairs = self.ckpt.metrics["pairs"].rows_out
+            bound = n_exact + n_pairs if min(n_exact, n_pairs) >= 0 else None
+            return connected_components(edges, edge_rows_bound=bound)
 
         clusters = self._stage(
             "clusters", fp_clusters, build_clusters, ["pairs", "exact_edges"]
@@ -527,3 +628,27 @@ class DedupPipeline:
             exact_edges=exact_edges,
             metrics=self.ckpt.metrics_summary(),
         )
+
+
+class StageJobCounter:
+    """Spark jobs of ``DedupPipeline.JOB_GROUP`` per pipeline stage: pass
+    ``mark`` as ``on_stage_start``. Each ``mark(name)`` closes the running
+    span — its jobs are the group's job ids not seen before, read from the
+    status tracker on the driver, no job — and opens ``name``; ``first``
+    names the span before the first stage (the input digest). Call
+    ``mark`` once more after the run to close the last stage."""
+
+    def __init__(self, spark: SparkSession, first: str = "<input>"):
+        self._tracker = spark.sparkContext.statusTracker()
+        self._seen = self._ids()
+        self._current = first
+        self.jobs: dict[str, int] = {}
+
+    def _ids(self) -> set[int]:
+        return set(self._tracker.getJobIdsForGroup(DedupPipeline.JOB_GROUP))
+
+    def mark(self, stage: str) -> None:
+        now = self._ids()
+        self.jobs[self._current] = len(now - self._seen)
+        self._seen |= now
+        self._current = stage

@@ -11,6 +11,17 @@ reference's hash cache probe (database.py:93-130) and its delete-then-insert
 idempotent writes (database.py:196-209); leading-underscore metric files
 are invisible to Spark's parquet reader, so the directory stays a clean
 table.
+
+Job budget: a stage costs its write job(s) and nothing else. A freshly
+written stage is read back with the schema it was just written with
+(``spark.read.schema(...)``), and a cached stage with the schema stored in
+its ``_metrics.json``: ``spark.read.parquet`` without a schema runs a
+footer-inference Spark job (~0.1 CPU-s warm) per read. Row counts come
+from the parquet footers (no job), and the stage's ``counters`` callback
+runs AFTER the write, so a counter read from an ``Observation`` on the
+stage's own dataflow (the candidates stage's drop counts) is filled by the
+write instead of costing a job of its own. A meta written without the
+schema field (older checkpoints) falls back to inference.
 """
 
 from __future__ import annotations
@@ -21,7 +32,9 @@ from dataclasses import asdict, dataclass, field
 from pathlib import Path
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -34,6 +47,21 @@ class StageMetrics:
     lineage: list[str] = field(default_factory=list)
     partitions: list[dict] = field(default_factory=list)
     counters: dict = field(default_factory=dict)
+
+
+def observed_metrics(obs: Observation) -> dict | None:
+    """``obs.get`` after the action that ran the observed frame, or None
+    when no result arrived. The known cause is an action whose executed
+    plan no longer held the observed node: AQE (or the optimizer) replaces
+    a subtree over an empty input with an empty relation (e.g. a self-join
+    of zero bucket rows), the observation completes with an empty row, and
+    pyspark fails converting it. None is never a count: each caller
+    recomputes the value in a job of its own or treats it as unknown, so a
+    failed observation can cost a job but not change a result."""
+    try:
+        return obs.get
+    except Py4JJavaError:
+        return None
 
 
 class CheckpointManager:
@@ -83,15 +111,21 @@ class CheckpointManager:
             parts.append({"id": i, "rows": int(n)})
         return total, parts
 
-    def _partition_counts(self, path: str) -> tuple[int, list[dict]]:
+    def _partition_counts(self, path: str, out: DataFrame) -> tuple[int, list[dict]]:
         """Footer counts for local checkpoints; for a non-local ``base_dir``
         (hdfs://, s3a:// — the real deployment) pathlib can't see the
         files, so fall back to one Spark count() job over the just-written
-        (page-cached) checkpoint. On Iceberg the manifest row counts
-        replace both branches."""
+        (page-cached) checkpoint ``out``. On Iceberg the manifest row
+        counts replace both branches."""
         if Path(path).exists():
             return self._footer_partition_counts(path)
-        return self.spark.read.parquet(path).count(), []
+        return out.count(), []
+
+    def _read(self, path: str, schema: StructType | None) -> DataFrame:
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(path)
 
     # -- public ------------------------------------------------------------
     def stage(
@@ -108,7 +142,8 @@ class CheckpointManager:
             meta = self._read_meta(name)
             path = str(self.base_dir / name)
             if meta is not None and meta.get("fingerprint") == fingerprint:
-                df = self.spark.read.parquet(path)
+                schema = meta.get("schema")
+                df = self._read(path, StructType.fromJson(schema) if schema else None)
                 self.metrics[name] = StageMetrics(
                     stage=name,
                     fingerprint=fingerprint,
@@ -123,7 +158,6 @@ class CheckpointManager:
 
         t0 = time.monotonic()
         df = build()
-        extra = counters() if counters is not None else {}
 
         if self.base_dir is None:
             # lazy checkpoint + count: materialization and row counting in
@@ -135,8 +169,11 @@ class CheckpointManager:
         else:
             path = str(self.base_dir / name)
             df.write.mode("overwrite").parquet(path)
-            out = self.spark.read.parquet(path)
-            rows, parts = self._partition_counts(path)
+            out = self._read(path, df.schema)
+            rows, parts = self._partition_counts(path, out)
+        # after the write: observed counters are complete only once the
+        # action over the stage's dataflow has run
+        extra = counters() if counters is not None else {}
         wall = time.monotonic() - t0
 
         m = StageMetrics(
@@ -151,7 +188,8 @@ class CheckpointManager:
         )
         self.metrics[name] = m
         if self.base_dir is not None:
-            self._meta_path(name).write_text(json.dumps(asdict(m), indent=1))
+            meta = {**asdict(m), "schema": df.schema.jsonValue()}
+            self._meta_path(name).write_text(json.dumps(meta, indent=1))
         return out
 
     def metrics_summary(self) -> dict[str, dict]:
