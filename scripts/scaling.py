@@ -22,7 +22,7 @@ span one sample times:
 - ``probe``: one ``probe_near_dups`` call of a ``batch``-page batch (half
   byte-copies of store pages, half fresh pages) against a signature
   store of ``size`` synthetic pages, plus a count and a noop write of the
-  dup pairs;
+  dup pairs; each sample also records the span's Spark jobs (``jobs``);
 - ``semdedup``: IVF centroid training + ``semdedup`` over ``size``
   in-Spark synthesized vectors (``synth_vectors``);
 - ``media``: ``media_frame_hashes`` + ``media_dup_pairs`` over ``size``
@@ -199,7 +199,7 @@ def build_inputs(op: str, size: int, batch: int, workdir: str, cpus: int) -> Non
 def measure(spark, op: str, size: int, batch: int, workdir: str) -> dict:
     """Run the op's timed span once; → ``n_docs`` (items the throughput
     counts), ``wall_s`` and the op's invariant (+ stage walls and jobs for
-    the pipeline)."""
+    the pipeline, the span's jobs for the probe)."""
     if op == "pipeline":
         from bench_core import run_dedup_pipeline
 
@@ -210,13 +210,19 @@ def measure(spark, op: str, size: int, batch: int, workdir: str) -> dict:
             probe_near_dups,
         )
 
+        from video_duplicate_finder_python_spark.plans.pipeline import StageJobCounter
+
         store = spark.read.parquet(f"{workdir}/store")
         new_docs = spark.read.parquet(f"{workdir}/batch")
+        spark.sparkContext.setJobGroup("probe", "scaling probe sample")
+        jobs = StageJobCounter(spark, first="probe", group="probe")
         t0 = time.monotonic()
         pairs, _, _ = probe_near_dups(store, new_docs, DedupConfig())
         dup = pairs.where("is_dup")
         out = {"n_docs": batch, "store_docs": size, "n_dup_pairs": dup.count()}
         dup.write.format("noop").mode("overwrite").save()
+        jobs.mark("")
+        out["jobs"] = jobs.jobs["probe"]
     elif op == "semdedup":
         from video_duplicate_finder_python_spark.operators.ann import train_ivf_centroids
         from video_duplicate_finder_python_spark.operators.semdedup import semdedup
@@ -312,13 +318,19 @@ def render(samples: list[dict], block: list[dict]) -> str:
     block_eff = summarize(block)["efficiency"] if same_levels else None
     stamp = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
 
+    # ops that record the span's Spark jobs (the probe) show them beside
+    # the wall; samples taken before they were recorded show "-"
+    with_jobs = any("jobs" in s for s in samples)
+
     def row(c: int, label: str) -> str:
         every = ", ".join(f"{s['docs_per_sec']:.1f}" for s in by[c])
+        jobs = f" {best[c].get('jobs', '-')} |" if with_jobs else ""
         return (
-            f"| local[{c}] ({label}) | {best[c]['wall_s']:.1f} | "
+            f"| local[{c}] ({label}) | {best[c]['wall_s']:.1f} |{jobs} "
             f"{best[c]['docs_per_sec']:.1f} | {every} |"
         )
 
+    jobs_head, jobs_rule = (" Spark jobs |", "---|") if with_jobs else ("", "")
     md = f"""# BENCH/BASELINE — scaling-efficiency evidence
 
 Generated {stamp} by `scripts/scaling.py report` from the full disclosed
@@ -334,8 +346,8 @@ levels, each sample a fresh JVM. Every sample produced the identical
 `{sm['invariant']}` ({sm['value']}) — a determinism check at a scale the
 quadratic oracle cannot reach.
 
-| parallelism | wall (s, best) | docs/sec (best) | all samples (docs/sec) |
-|---|---|---|---|
+| parallelism | wall (s, best) |{jobs_head} docs/sec (best) | all samples (docs/sec) |
+|---|---|{jobs_rule}---|---|
 {row(lo, "N")}
 {row(hi, f"{factor:.0f}N")}
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from video_duplicate_finder_python_spark import DedupConfig
+from video_duplicate_finder_python_spark.corpus import generate_corpus
 from video_duplicate_finder_python_spark.functions.signatures import make_shingles_udf
 from video_duplicate_finder_python_spark.operators import incremental_probe
 from video_duplicate_finder_python_spark.operators.incremental_probe import (
@@ -80,12 +81,18 @@ def test_probe_finds_expected_pairs(spark, store):
         c.unpersist()
 
 
-def test_probe_shingles_each_profile_url_once(spark, store, monkeypatch):
+def test_probe_shingles_each_profile_url_once(spark, store, monkeypatch, sql_plans):
     """The verify profiles (the batch plus the matched store docs) are
     shingled in one pass: both sides of the scoring join and the span
     check read one materialized frame, so every profile url goes through
     the shingle UDF exactly once, in one Arrow batch at this size. The
-    fixture's pairs are unchanged, every column of every row."""
+    fixture's pairs are unchanged, every column of every row.
+
+    The same at the streaming workload's size — a 50-page batch whose url
+    column is non-null (the ingest's pages schema) against a 400-page
+    store: the scoring join's two sides read ONE broadcast of the profile
+    frame. With two, both broadcast jobs first-touch the lazy profile cut
+    at once, and the shingle UDF can run twice."""
     sc = spark.sparkContext
     rows, calls = sc.accumulator(0), sc.accumulator(0)
 
@@ -115,6 +122,26 @@ def test_probe_shingles_each_profile_url_once(spark, store, monkeypatch):
     assert rows.value == new_docs.count() + len(store_matches)
     assert calls.value == 1
 
+    pages = generate_corpus(seed=11, n_docs=450).pages[["url", "text"]]
+    big_store = compute_signatures(
+        spark.createDataFrame(pages[:400], "url string, text string"),
+        CFG,
+        keep_cols=["url", "text"],
+    )
+    batch = spark.createDataFrame(pages[400:], "url string not null, text string")
+    rows0, calls0 = rows.value, calls.value
+    with sql_plans() as plans:
+        pairs, overflow, _ = incremental_probe.probe_near_dups(big_store, batch, CFG)
+        got = pairs.collect()
+        assert overflow.count() == 0
+    store_matches = {r.other_url for r in got if not r.is_new_other}
+    assert store_matches and any(r.is_dup for r in got)
+    assert rows.value - rows0 == 50 + len(store_matches)
+    assert calls.value - calls0 == 1
+    # verify's two scoring-join sides project the profiles to _sh_a and
+    # _sh_b; one broadcast of the first feeds both joins
+    assert [n for p in plans for n in p.broadcast_consumers(" AS _sh_")] == [2]
+
 
 def test_overflow_guard(spark, store):
     boiler = _doc(["common", "boiler", "plate", "page"])
@@ -135,18 +162,56 @@ def test_overflow_guard(spark, store):
         c.unpersist()
 
 
-def test_store_side_not_shuffled(spark, store):
-    new_docs = spark.createDataFrame(
-        [("https://new.example/x", _doc(["p", "q", "r", "s"]))],
-        "url string, text string",
-    )
-    pairs, _, caches = probe_near_dups(store, new_docs, CFG)
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
-    # the store->candidates join must be broadcast (batch side built), not
-    # a sort-merge/shuffled-hash join over the store
-    assert "BroadcastHashJoin" in plan
-    for c in caches:
-        c.unpersist()
+# plan nodes where rows stop streaming through: joins and exchanges
+_BOUNDARY = {
+    "Exchange",
+    "BroadcastExchange",
+    "BroadcastHashJoin",
+    "SortMergeJoin",
+    "ShuffledHashJoin",
+    "BroadcastNestedLoopJoin",
+    "CartesianProduct",
+}
+
+
+def test_store_side_not_shuffled(spark, store, sql_plans, tmp_path):
+    """Over every SQL execution the probe runs (its lazy-checkpoint cuts,
+    the pairs collect and the overflow count), the store's rows reach a
+    broadcast hash join, on its streamed side, before any shuffle — the
+    batch side is built, the store is never shuffled. That holds for the
+    store ⋈ batch-keys join (the first join above the store-side
+    explode) as well as for the joins that filter the store rows."""
+    store_dir = str(tmp_path / "store")
+    store.write.parquet(store_dir)
+    new_docs = _fixture_batch(spark, store)
+    with sql_plans() as plans:
+        pairs, overflow, _ = probe_near_dups(spark.read.parquet(store_dir), new_docs, CFG)
+        assert pairs.where("is_dup").count() == 3
+        assert overflow.count() == 0
+
+    scans = key_joins = 0
+    for p in plans:
+        for node in p.named("Scan parquet"):
+            scans += 1
+            joined = exploded = False
+            while node in p.parents:
+                node = p.parents[node][0]
+                name = p.nodes[node][0]
+                if name == "Generate":
+                    exploded = True
+                elif name == "Exchange":
+                    # a shuffle above store rows only once a broadcast
+                    # join has cut them down to the batch's matches
+                    assert joined, p.description
+                    break
+                elif name in _BOUNDARY:
+                    # the store rows stream into a broadcast hash join (a
+                    # broadcast of the store rows themselves fails here)
+                    assert name == "BroadcastHashJoin", (p.description, name)
+                    joined = True
+                    key_joins += exploded
+                    exploded = False
+    assert scans >= 2 and key_joins >= 1
 
 
 def test_probe_batch_job(spark, store, tmp_path):

@@ -45,3 +45,23 @@ def test_report_refuses_divergent_cluster_members(tmp_path):
     assert proc.returncode != 0
     assert "n_cluster_members diverged" in proc.stderr
     assert not (tmp_path / "out.md").exists()
+
+
+def test_report_shows_probe_jobs_beside_wall(tmp_path):
+    """Probe samples record the probe span's Spark jobs; the report shows
+    them between the wall and the throughput of each level's best sample."""
+    samples = tmp_path / "probe.jsonl"
+    samples.write_text(
+        "".join(
+            json.dumps(
+                {"op": "probe", "n_docs": 100, "store_docs": 2000, "n_dup_pairs": 50,
+                 "jobs": jobs, "wall_s": wall, "docs_per_sec": 100 / wall, "cpus": cpus}
+            ) + "\n"
+            for cpus, wall, jobs in ((1, 4.0, 12), (2, 2.5, 12), (2, 2.0, 13))
+        )
+    )
+    proc = _report(tmp_path, samples)
+    assert proc.returncode == 0, proc.stderr
+    assert "| parallelism | wall (s, best) | Spark jobs | docs/sec (best) |" in proc.stdout
+    assert "| local[1] (N) | 4.0 | 12 | 25.0 | 25.0 |" in proc.stdout
+    assert "| local[2] (2N) | 2.0 | 13 | 50.0 | 40.0, 50.0 |" in proc.stdout

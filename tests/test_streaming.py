@@ -441,33 +441,43 @@ def test_vacuum_cadence_leaves_no_dead_generations(spark, tmp_path):
     assert ingest.store.read().count() == 16
 
 
+def _probe_pages_df(spark, rows):
+    return spark.createDataFrame(
+        [
+            (u, None, f"<html><body><p>{t}</p></body></html>".encode(), None, "en")
+            for u, t in rows
+        ],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+
+
+_PROBE_BODY = " ".join(f"tok{i}x{i*3%7}" for i in range(150))
+_PROBE_OTHER = " ".join(f"zz{i}q{i*5%11}" for i in range(150))
+_PROBE_UNIQ = " ".join(f"uu{i}k{i*2%9}" for i in range(150))
+
+
 def test_probe_dups_streaming_dedup(spark, tmp_path):
     """Opt-in streaming dedup (round 6): with ``probe_dups_dir`` set, each
     batch is probed against the pre-batch store and verified dup pairs
-    land in the dir; the default path stays probe-free (O(delta) only)."""
-
-    def pages_df(rows):
-        return spark.createDataFrame(
-            [
-                (u, None, f"<html><body><p>{t}</p></body></html>".encode(), None, "en")
-                for u, t in rows
-            ],
-            "url string, warc_ts timestamp, html binary, text string, lang string",
-        )
-
-    body = " ".join(f"tok{i}x{i*3%7}" for i in range(150))
-    other = " ".join(f"zz{i}q{i*5%11}" for i in range(150))
+    land in the dir; the default path stays probe-free (O(delta) only).
+    ``probe_dup_pairs`` is observed on the dup write, not counted by a
+    job of its own."""
     dups_dir = str(tmp_path / "dups")
     ingest = StreamingSignatureIngest(
         spark, str(tmp_path / "s"), DedupConfig(), n_parts=4, probe_dups_dir=dups_dir
     )
     # batch 0 seeds the store (no probe possible: empty store)
-    ingest.process_batch(pages_df([("https://a/1", body), ("https://a/2", other)]), 0)
+    ingest.process_batch(
+        _probe_pages_df(spark, [("https://a/1", _PROBE_BODY), ("https://a/2", _PROBE_OTHER)]),
+        0,
+    )
     assert "probe_dup_pairs" not in ingest.batch_stats[-1]
 
     # batch 1 re-sends body under a new url + one unique doc
-    uniq = " ".join(f"uu{i}k{i*2%9}" for i in range(150))
-    ingest.process_batch(pages_df([("https://b/1", body), ("https://b/2", uniq)]), 1)
+    ingest.process_batch(
+        _probe_pages_df(spark, [("https://b/1", _PROBE_BODY), ("https://b/2", _PROBE_UNIQ)]),
+        1,
+    )
     assert ingest.batch_stats[-1]["probe_dup_pairs"] == 1
     rows = spark.read.parquet(dups_dir).collect()
     assert len(rows) == 1
@@ -479,3 +489,48 @@ def test_probe_dups_streaming_dedup(spark, tmp_path):
         1,
     )
     assert r.jaccard == 1.0 and r.is_dup
+
+
+def test_probe_dups_observed_in_stream_session(spark, tmp_path, monkeypatch):
+    """The same opt-in dedup driven by a real ``start()`` stream: each
+    micro-batch frame belongs to the stream's cloned session, and the
+    observed dup count must still complete (an Observation only completes
+    when its action runs in the session that registered it) — it is the
+    observed value, not the read-back fallback, that lands in the stats."""
+    from video_duplicate_finder_python_spark.streaming import ingest as ingest_mod
+
+    observed: list = []
+    real = ingest_mod.observed_metrics
+
+    def spy(obs):
+        observed.append(real(obs))
+        return observed[-1]
+
+    monkeypatch.setattr(ingest_mod, "observed_metrics", spy)
+    src = tmp_path / "pages"
+    dups_dir = str(tmp_path / "dups")
+    ingest = StreamingSignatureIngest(
+        spark, str(tmp_path / "s"), DedupConfig(), n_parts=4, probe_dups_dir=dups_dir
+    )
+    _probe_pages_df(
+        spark, [("https://a/1", _PROBE_BODY), ("https://a/2", _PROBE_OTHER)]
+    ).coalesce(1).write.mode("append").parquet(str(src))
+    q = ingest.start(str(src), str(tmp_path / "ckpt"), available_now=True)
+    q.awaitTermination(120)
+    assert [s["batch_id"] for s in ingest.batch_stats] == [0]
+    assert "probe_dup_pairs" not in ingest.batch_stats[-1]
+
+    _probe_pages_df(
+        spark, [("https://b/1", _PROBE_BODY), ("https://b/2", _PROBE_UNIQ)]
+    ).coalesce(1).write.mode("append").parquet(str(src))
+    q = ingest.start(str(src), str(tmp_path / "ckpt"), available_now=True)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert [s["batch_id"] for s in ingest.batch_stats] == [0, 1]
+    assert ingest.batch_stats[-1]["probe_dup_pairs"] == 1
+    # batch 1's probe write was observed (batch 0 had no store to probe)
+    assert observed == [{"rows": 1}]
+    rows = spark.read.parquet(dups_dir).collect()
+    assert [(r.new_url, r.other_url, r.batch_id) for r in rows] == [
+        ("https://b/1", "https://a/1", 1)
+    ]

@@ -36,12 +36,17 @@ does:
   duplicates" is not an answerable question at bounded cost; the caller
   sees the url + match count instead of a silent quadratic explosion
   (within-batch pairs are dropped if EITHER endpoint overflows);
-- exact verification reuses ``verify_candidates`` on ONE profile frame
-  ``(url, text, simhash, shingles)`` for the batch plus the matched store
-  docs (tiny by construction), shingled in one pass and materialized:
-  both sides of the scoring join and the span check's texts read it, so
-  no url is shingled twice and the store is not re-read for texts;
-  within-batch (new×new) duplicates ride the same verify pass.
+- exact verification is the pipeline's verify front end,
+  ``verify_candidates``, in the shape the pipeline uses for small
+  candidate sets: ONE broadcast profile frame ``(url, text, simhash,
+  shingles)`` for the batch plus the matched store docs (tiny by
+  construction), shingled in one pass and materialized. Both sides of
+  the scoring join read one broadcast of it and the span check reads the
+  texts it carries, so no url is shingled twice and the store is not
+  re-read for texts; ``new_url``/``other_url``/``is_new_other`` ride
+  verify as pass-through candidate columns, so no join recovers them
+  afterwards. Within-batch (new×new) duplicates ride the same verify
+  pass.
 
 Nothing is persisted: every reused intermediate is cut with a lazy
 ``localCheckpoint`` (plan-size note below), whose blocks the
@@ -49,18 +54,35 @@ ContextCleaner frees once the frame is unreachable. ``unpersist()`` on
 such a frame is a no-op, so there are no handles for the caller to own.
 
 Plan-size note (r7): the probe's dataflow is a chain of diamonds — the
-candidate tables feed the degree guard, the pair union, the text fetch
-AND (via profiles) both sides of the verify join, and verify branches
-its scored frame four more ways — so composing it all lazily embeds the
+candidate tables feed the degree guard, the pair set and the profile
+fetch, the profiles feed both sides of the verify join, and verify
+branches its scored frame — so composing it all lazily embeds the
 candidate subtree in the final logical plan a combinatorial number of
 times. At sf0.1 the composed plan printed 26k lines and Catalyst
 analysis/planning dominated the wall (construction alone 5.2 s, the
 single action 8.5 s while every candidate computation measured < 0.4 s
 in isolation). The fix is the guide's plan-truncation rule: the SMALL
-intermediates (batch signatures, the merged candidate table, the verify
-profile frame, verify's scored frame) are cut with a lazy
-``localCheckpoint`` whose first action materializes them, after which
-every downstream appearance is a LogicalRDD leaf.
+intermediates (batch signatures, the merged candidate table, the
+overflow set, the candidates it lets through, the verify profile frame,
+verify's scored frame) are cut
+with a lazy ``localCheckpoint``, after which every downstream appearance
+is a LogicalRDD leaf. "Lazy" covers only a cut's final stage: under AQE
+the cut plans its frame at once, and planning executes every exchange
+beneath it (shuffle map stages, broadcasts) before the call returns. So
+most of the probe's Spark jobs run inside ``probe_near_dups``; the final
+stages run when a later job first touches the cut.
+
+Job note: at a few hundred pages every Spark job costs ~0.1 CPU-s of
+driver and JVM work (README "Scale design"), so each remaining job
+carries a data decision. A 50-page batch against a 400-page store
+(perfbench ``ingest-probe``) runs 12 jobs: 8 inside the call (the
+batch-url and batch-key broadcasts, the candidate and degree groupBys,
+the overflow and candidate-url broadcasts, the profile ``REBALANCE``,
+the profile broadcast), 2 for the caller's pairs collect (the span
+``REBALANCE`` and the result) and 2 for ``overflow.count()``. None
+dedups by shuffle: the candidate rows are unique per unordered pair by
+construction, and a repeated build-side key changes no semi or anti
+join.
 
 Python-task note: every Python UDF task pays a fixed start-up cost
 (~0.17 CPU-s measured on pyspark 4.1 / Python 3.11, README "Scale
@@ -68,9 +90,11 @@ design") that dwarfs the probe's kernels at batch sizes, so the Python
 stages are sized by the data, not by the upstream split count: the
 profile frame is shingled once behind an AQE ``REBALANCE`` and the span
 check gets its own (``verify_candidates``). At a 50-page batch the probe
-runs 4 Python tasks — 2 signature + 1 shingle + 1 span — where the
-un-materialized shape ran 14 (the shingle UDF once per scoring-join side
-and per upstream split).
+runs 4 Python tasks — 2 signature + 1 shingle + 1 span. The profile cut
+must reach verify with attributes whose constraints survive a self-join
+(see the union below): otherwise the two scoring-join sides plan two
+broadcasts, two jobs first-touch the cut at once, and a fifth task
+appears.
 """
 
 from __future__ import annotations
@@ -123,11 +147,11 @@ def probe_near_dups(
     # and the batch's NEW text with different scores/sources, fanning the
     # verify join into conflicting duplicate rows. The batch is
     # authoritative for its own urls: store rows they shadow are excluded
-    # from candidates AND profiles (broadcast anti — the store side stays
-    # shuffle-free).
-    store = store.join(
-        F.broadcast(new_docs.select("url").distinct()), "url", "left_anti"
-    )
+    # from candidates (broadcast anti — the store side stays shuffle-free;
+    # a repeated key changes no semi or anti join, so no distinct). The
+    # profile fetch below semi-joins the raw store to candidate urls,
+    # which already exclude them.
+    store_probe = store.join(F.broadcast(new_docs.select("url")), "url", "left_anti")
     sigs_new = compute_signatures(new_docs, cfg, keep_cols=["url", "text"])
     if not substring:
         # drop the CDC fingerprints STRUCTURALLY: nothing reads them, and
@@ -171,7 +195,7 @@ def probe_near_dups(
         ).select(url_out, F.col("_k.src").alias("src"), F.col("_k.key").alias("key"))
 
     keys_new = keyed(sigs_new, "new_url")
-    keys_store = keyed(store, "url")
+    keys_store = keyed(store_probe, "url")
     old_rows = (
         keys_store.join(F.broadcast(keys_new), ["src", "key"])
         .where(F.col("url") != F.col("new_url"))
@@ -182,9 +206,11 @@ def probe_near_dups(
             F.lit(False).alias("is_new_other"),
         )
     )
+    # the within-batch self-join reuses the store join's broadcast of the
+    # batch keys instead of shuffling both sides
     k2 = keys_new.withColumnRenamed("new_url", "other_url")
     new_rows = (
-        keys_new.join(k2, ["src", "key"])
+        keys_new.join(F.broadcast(k2), ["src", "key"])
         .where(F.col("new_url") < F.col("other_url"))
         .select("new_url", "other_url", "src", F.lit(True).alias("is_new_other"))
     )
@@ -195,84 +221,96 @@ def probe_near_dups(
     # groupBy jobs and the plan-truncation compile cost (each lazy
     # localCheckpoint compiles a full physical plan; measured 0.46 s per
     # compile on this host's warm JVM, dominating the probe's build span).
+    # Each row is one unordered pair (store urls are never batch urls, and
+    # within-batch pairs have new_url < other_url), so the rows are unique
+    # per (url_a, url_b) as verify gets them: no dedup shuffle downstream.
     cand_all = (
         old_rows.unionByName(new_rows)
         .groupBy("new_url", "other_url", "is_new_other")
         .agg(F.collect_set("src").alias("sources"))
     )
-    # the candidate table is re-read by the degree guard, the pair union
-    # AND the profile fetch — truncate it too (it is tiny: bounded by
-    # batch size × max_matches_per_doc)
+    # the candidate table is re-read by the degree guard and the pair
+    # set — truncate it too (it is tiny: bounded by batch size ×
+    # max_matches_per_doc)
     cand_all = cand_all.localCheckpoint(eager=False)
-    cand_old = cand_all.where(~F.col("is_new_other")).drop("is_new_other")
-    cand_new = cand_all.where(F.col("is_new_other")).drop("is_new_other")
 
     # boilerplate guard: candidate DEGREE per batch doc across both
     # sides (a within-batch pair counts toward both endpoints) via a
-    # map-side-combinable groupBy — no window anywhere
+    # map-side-combinable groupBy — no window anywhere. Cut, so the
+    # caller's overflow action reads the one computed set.
     degree = (
         cand_all.select("new_url")
-        .unionAll(cand_new.select(F.col("other_url").alias("new_url")))
+        .unionAll(
+            cand_all.where(F.col("is_new_other")).select(
+                F.col("other_url").alias("new_url")
+            )
+        )
         .groupBy("new_url")
         .agg(F.count(F.lit(1)).alias("n_matches"))
     )
-    overflow = degree.where(F.col("n_matches") > max_matches_per_doc)
-    ov_a = F.broadcast(overflow.select("new_url"))
-    ov_b = F.broadcast(overflow.select(F.col("new_url").alias("other_url")))
-    cand_old = cand_old.join(ov_a, "new_url", "left_anti")
-    cand_new = (
-        cand_new.join(ov_a, "new_url", "left_anti")
-        .join(ov_b, "other_url", "left_anti")
+    overflow = degree.where(F.col("n_matches") > max_matches_per_doc).localCheckpoint(
+        eager=False
     )
-
-    cand = cand_old.withColumn("is_new_other", F.lit(False)).unionByName(
-        cand_new.withColumn("is_new_other", F.lit(True))
+    # overflow holds batch urls only, so the other_url side can only hit
+    # within-batch pairs; both anti-joins build the same broadcast. The
+    # result feeds the profile fetch and verify: cut, so the overflow
+    # broadcast runs once, not once per consumer.
+    ov = F.broadcast(overflow.select(F.col("new_url").alias("_ov")))
+    cand = (
+        cand_all.join(ov, F.col("new_url") == F.col("_ov"), "left_anti")
+        .join(ov, F.col("other_url") == F.col("_ov"), "left_anti")
+        .localCheckpoint(eager=False)
     )
 
     # the verify profile frame (url, text, simhash, shingles) for exactly
     # the urls verify will touch: the batch, plus the matched store rows
     # (broadcast left-semi — tiny after the cap), shingled in ONE pass.
-    # Both sides of the scoring join and the span check's texts read it,
-    # so it is cut with a lazy localCheckpoint; the REBALANCE before the
-    # UDF lets AQE size the shingle stage to the bytes the batch and its
-    # matches actually hold (one Python task at a 50-page batch) instead
-    # of one task per upstream split. The exchange sits above the semi-join,
-    # so the store scan keeps its own splits and is never shuffled.
+    # verify reads it as one broadcast for both scoring-join sides, and
+    # the span check reads the texts it carries, so it is cut with a lazy
+    # localCheckpoint; the REBALANCE before the UDF lets AQE size the
+    # shingle stage to the bytes the batch and its matches actually hold
+    # (one Python task at a 50-page batch) instead of one task per
+    # upstream split. The exchange sits above the semi-join, so the store
+    # scan keeps its own splits and is never shuffled.
     matched_old = store.join(
         F.broadcast(
-            cand.where(~F.col("is_new_other"))
-            .select(F.col("other_url").alias("url"))
-            .distinct()
+            cand.where(~F.col("is_new_other")).select(F.col("other_url").alias("url"))
         ),
         "url",
         "left_semi",
     ).select("url", "text", "simhash")
+    # a side with a nullable url leads the union (a parquet store's url
+    # always is, a streamed batch's is not), so the cut's recorded
+    # isnotnull(url) names the attribute the cut outputs and verify's two
+    # scoring-join sides plan one broadcast (verify.py module docstring)
+    first, second = sorted(
+        [matched_old, sigs_new.select("url", "text", "simhash")],
+        key=lambda df: not df.schema["url"].nullable,
+    )
     profiles = (
-        sigs_new.select("url", "text", "simhash")
-        .unionByName(matched_old)
+        first.unionByName(second)
         .hint("rebalance")
         .withColumn("shingles", make_shingles_udf(cfg.shingle_k)(F.col("text")))
         .localCheckpoint(eager=False)
     )
+    if not substring:
+        profiles = profiles.drop("text")
 
-    oriented = cand.select(
-        "new_url",
-        "other_url",
-        "is_new_other",
-        "sources",
-        F.least("new_url", "other_url").alias("url_a"),
-        F.greatest("new_url", "other_url").alias("url_b"),
-    )
-    candidates = oriented.select("url_a", "url_b", "sources").dropDuplicates(
-        ["url_a", "url_b"]
-    )
+    # new_url / other_url / is_new_other ride verify as pass-through
+    # columns, so no join recovers them afterwards
     verified = verify_candidates(
-        candidates,
-        profiles.select("url", "shingles", "simhash"),
+        cand.select(
+            F.least("new_url", "other_url").alias("url_a"),
+            F.greatest("new_url", "other_url").alias("url_b"),
+            "sources",
+            "new_url",
+            "other_url",
+            "is_new_other",
+        ),
+        F.broadcast(profiles),
         cfg,
-        texts=profiles.select("url", "text") if substring else None,
     )
-    pairs = oriented.join(verified.drop("sources"), ["url_a", "url_b"]).select(
+    pairs = verified.select(
         "new_url", "other_url", "is_new_other", "jaccard", "hamming", "lcs_len", "is_dup"
     )
     return pairs, overflow, []

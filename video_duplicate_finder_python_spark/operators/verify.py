@@ -15,19 +15,35 @@ Shape notes (both matter at 100 TB):
   the ~8 KB/doc text transfer and the anchored-common-span pandas UDF
   (functions/fingerprint.py:anchored_common_span_len).
 - a caller whose candidate docs are known to be small (the pipeline
-  when their estimated profile bytes fit the session's broadcast limit)
-  passes profiles WITH a ``text`` column, broadcast: the scoring join
-  then carries each side's text, keeps it only on the rows the span
-  check needs, and the check reads it from there. That drops the
-  failed-url set (a distinct shuffle and its broadcast), the texts scan
-  and the two text broadcasts: Spark jobs that at a few hundred pairs
-  cost ~0.1 CPU-s of driver and JVM work each and carry no data
-  decision (README "Scale design").
+  when their estimated profile bytes fit the session's broadcast limit,
+  and the incremental probe always) passes profiles WITH a ``text``
+  column, broadcast: the scoring join then carries each side's text,
+  keeps it only on the rows the span check needs, and the check reads
+  it from there. That drops the failed-url set (a distinct shuffle and
+  its broadcast), the texts scan and the two text broadcasts: Spark
+  jobs that at a few hundred pairs cost ~0.1 CPU-s of driver and JVM
+  work each and carry no data decision (README "Scale design").
 - either way the span rows pass an AQE ``REBALANCE`` before the UDF, so
   the span stage's task count follows the bytes of text it checks, not
   the scored frame's partition count: a handful of pairs is one Python
   task (each task has a fixed start-up cost, README "Scale design"), a
   large slow set keeps its parallelism.
+- both scoring-join sides project the same profile frame, so a
+  broadcast profile frame is ONE broadcast exchange, reused by the
+  second side: one job builds it, and the profile frame's lazy cut is
+  first touched once (two broadcast jobs racing for it would run its
+  shingle UDF stage twice). The two sides only plan identically when
+  Spark's self-join renaming keeps the frame's constraints: a cut whose
+  recorded ``isnotnull(url)`` names a non-null attribute the cut's
+  output made nullable (a union of a non-null url column with a
+  nullable one) loses that constraint on the renamed side, which then
+  gets an inferred null filter the first side lacks, and the two
+  exchanges no longer match. A caller that unions such columns leads
+  with the nullable one (operators/incremental_probe.py).
+- extra candidate columns (any beyond ``url_a``, ``url_b``,
+  ``sources`` and ``lcs_hint``) pass through to the output, so a caller
+  that needs per-pair context (the probe's orientation) reads it from
+  the verified rows instead of re-joining them.
 - the scored frame is cut with a lazy ``localCheckpoint`` before
   branching, so the fast/slow split costs one execution of the scoring
   join, and what is kept is the scalar-only frame (~tens of bytes/pair,
@@ -90,15 +106,22 @@ def verify_candidates(
     the Jaccard threshold with no hint (the anchored-span check); pass
     None (with text-less profiles) to skip the substring confirmation
     entirely (lcs_len stays null).
-    → ``pairs(url_a, url_b, jaccard, hamming, lcs_len, sources, is_dup)``
+    → ``pairs(url_a, url_b, jaccard, hamming, lcs_len, sources, *extra,
+    is_dup)``, where ``extra`` are the candidates' other columns, passed
+    through unchanged.
     """
     hint_col = (
         F.col("lcs_hint").cast("int")
         if "lcs_hint" in candidates.columns
         else F.lit(None).cast("int")
     )
+    extra = [
+        c
+        for c in candidates.columns
+        if c not in ("url_a", "url_b", "sources", "lcs_hint")
+    ]
     candidates = candidates.select(
-        "url_a", "url_b", "sources", hint_col.alias("_lcs_hint")
+        "url_a", "url_b", "sources", hint_col.alias("_lcs_hint"), *extra
     )
     # profile texts ride the scoring join; without them a separate
     # ``texts`` frame is joined to the slow rows only, further below
@@ -141,6 +164,7 @@ def verify_candidates(
             "_lcs_hint",
             "jaccard",
             "hamming",
+            *extra,
             # the carried texts are kept only where the span check reads
             # them, so the cut below stays scalar-sized for the rest
             *(
@@ -198,7 +222,7 @@ def verify_candidates(
         slow = needed.hint("rebalance").withColumn(
             "lcs_len", span_udf(F.col("_tx_a"), F.col("_tx_b"))
         )
-    cols = ["url_a", "url_b", "jaccard", "hamming", "lcs_len", "sources"]
+    cols = ["url_a", "url_b", "jaccard", "hamming", "lcs_len", "sources", *extra]
     return fast.select(*cols).unionByName(slow.select(*cols)).withColumn(
         "is_dup",
         (F.col("jaccard") >= cfg.jaccard_threshold)

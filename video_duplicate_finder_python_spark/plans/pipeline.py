@@ -631,21 +631,29 @@ class DedupPipeline:
 
 
 class StageJobCounter:
-    """Spark jobs of ``DedupPipeline.JOB_GROUP`` per pipeline stage: pass
-    ``mark`` as ``on_stage_start``. Each ``mark(name)`` closes the running
-    span — its jobs are the group's job ids not seen before, read from the
-    status tracker on the driver, no job — and opens ``name``; ``first``
-    names the span before the first stage (the input digest). Call
-    ``mark`` once more after the run to close the last stage."""
+    """Spark jobs of a job group per span, by default
+    ``DedupPipeline.JOB_GROUP`` per pipeline stage: pass ``mark`` as
+    ``on_stage_start``. Each ``mark(name)`` closes the running span — its
+    jobs are the group's job ids not seen before, read from the status
+    tracker on the driver, no job — and opens ``name``; ``first`` names
+    the span before the first stage (the input digest). Call ``mark`` once
+    more after the run to close the last stage. Any other span (e.g. one
+    probe call) sets its own job group and passes it as ``group``."""
 
-    def __init__(self, spark: SparkSession, first: str = "<input>"):
+    def __init__(
+        self,
+        spark: SparkSession,
+        first: str = "<input>",
+        group: str = DedupPipeline.JOB_GROUP,
+    ):
         self._tracker = spark.sparkContext.statusTracker()
+        self._group = group
         self._seen = self._ids()
         self._current = first
         self.jobs: dict[str, int] = {}
 
     def _ids(self) -> set[int]:
-        return set(self._tracker.getJobIdsForGroup(DedupPipeline.JOB_GROUP))
+        return set(self._tracker.getJobIdsForGroup(self._group))
 
     def mark(self, stage: str) -> None:
         now = self._ids()

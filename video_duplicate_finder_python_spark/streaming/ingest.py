@@ -41,6 +41,7 @@ from ..config import DedupConfig
 from ..functions.text import extract_text_col
 from ..operators.exact import content_hash_col
 from ..operators.signature_stage import compute_signatures
+from ..sources.checkpoint import observed_metrics
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -402,20 +403,29 @@ class StreamingSignatureIngest:
             # within-batch pairs ride the same verify pass. The write is
             # an OVERWRITE of this batch's own partition dir — foreachBatch
             # is at-least-once, so a replayed batch must replace (not
-            # append to) its previous attempt's pairs; and the count comes
-            # from the persisted dup frame, never from re-reading the
-            # (ever-growing) output dir
+            # append to) its previous attempt's pairs; and the count rides
+            # the write as an Observation on the written frame itself (so
+            # the write runs in the session that registered it), never a
+            # count() job of its own or a re-read of the (ever-growing)
+            # output dir
             from ..operators.incremental_probe import probe_near_dups
 
             pairs, _overflow, _ = probe_near_dups(
                 self.store.read(), docs.select("url", "text"), self.cfg
             )
-            dup = pairs.where("is_dup").persist()
-            probe_pairs = dup.count()
-            dup.write.mode("overwrite").parquet(
-                f"{self.probe_dups_dir}/batch_id={int(batch_id)}"
+            observed_dups = Observation()
+            out_dir = f"{self.probe_dups_dir}/batch_id={int(batch_id)}"
+            pairs.where("is_dup").observe(
+                observed_dups, F.count(F.lit(1)).alias("rows")
+            ).write.mode("overwrite").parquet(out_dir)
+            got = observed_metrics(observed_dups)
+            # no result: the executed plan lost the observed node
+            # (observed_metrics); count what was written instead
+            probe_pairs = (
+                got["rows"]
+                if got is not None
+                else self.spark.read.parquet(out_dir).count()
             )
-            dup.unpersist()
         # `not manifest` covers the truncated-store case: clear_all() on a
         # never-written store leaves an empty manifest with no schema file,
         # so the upsert branch would crash on read() → None
