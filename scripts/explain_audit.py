@@ -9,7 +9,7 @@ Checks (exit 1 on violation):
 - verify plan (with a texts frame) contains exactly one span_udf node
   (single-pass LCS), not the round-1 two-branch shape that ran the
   profiles join twice
-- the candidate union's band explode happens without a pre-shuffle
+- the candidate-key explode (all three key sources) happens without a pre-shuffle
   (no Exchange between the signatures scan and Generate)
 
 Usage: python scripts/explain_audit.py [sf_dir]   (default sf0.001)
@@ -71,7 +71,9 @@ def main() -> None:
         ann_probe,
         build_ann_index,
     )
-    from video_duplicate_finder_python_spark.operators.lsh import explode_bands
+    from video_duplicate_finder_python_spark.operators.candidate_keys import (
+        candidate_keys,
+    )
     from video_duplicate_finder_python_spark.operators.signature_stage import (
         compute_signatures,
     )
@@ -191,17 +193,19 @@ def main() -> None:
         verify_plan,
     )
 
-    # 5. band explode runs directly on the scan side (no Exchange before
-    #    Generate in the optimized plan fragment)
-    bands_plan = (
-        explode_bands(sigs, cfg)._jdf.queryExecution().executedPlan().toString()
+    # 5. the candidate-key explode (bands, simhash chunks and CDC
+    #    fingerprints at once) runs directly on the scan side (no Exchange
+    #    before Generate in the optimized plan fragment)
+    keys_plan = (
+        candidate_keys(sigs, cfg, ("minhash", "simhash", "suffix"))
+        ._jdf.queryExecution().executedPlan().toString()
     )
-    gen_pos = bands_plan.find("Generate explode")
-    exch_pos = bands_plan.find("Exchange")
+    gen_pos = keys_plan.find("Generate explode")
+    exch_pos = keys_plan.find("Exchange")
     check(
-        "band explode before any shuffle",
+        "candidate-key explode before any shuffle",
         gen_pos != -1 and (exch_pos == -1 or exch_pos > gen_pos),
-        bands_plan,
+        keys_plan,
     )
 
     # 6. round-5 text extras: pure-JVM plans, no Python UDF anywhere,

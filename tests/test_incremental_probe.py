@@ -15,7 +15,7 @@ from pyspark.sql import types as T
 from video_duplicate_finder_python_spark import DedupConfig
 from video_duplicate_finder_python_spark.corpus import generate_corpus
 from video_duplicate_finder_python_spark.functions.signatures import make_shingles_udf
-from video_duplicate_finder_python_spark.operators import incremental_probe
+from video_duplicate_finder_python_spark.operators import incremental_probe, verify
 from video_duplicate_finder_python_spark.operators.incremental_probe import (
     probe_near_dups,
 )
@@ -107,7 +107,7 @@ def test_probe_shingles_each_profile_url_once(spark, store, monkeypatch, sql_pla
 
         return shingles_udf
 
-    monkeypatch.setattr(incremental_probe, "make_shingles_udf", counting_shingles_udf)
+    monkeypatch.setattr(verify, "make_shingles_udf", counting_shingles_udf)
     new_docs = _fixture_batch(spark, store)
     pairs, _, _ = incremental_probe.probe_near_dups(store, new_docs, CFG)
     got = sorted(tuple(r) for r in pairs.collect())

@@ -18,9 +18,9 @@ from pyspark.sql import types as T
 from video_duplicate_finder_python_spark import DedupConfig, DedupPipeline
 from video_duplicate_finder_python_spark.corpus import pages_spark_df
 from video_duplicate_finder_python_spark.functions.signatures import make_shingles_udf
+from video_duplicate_finder_python_spark.operators import verify
 from video_duplicate_finder_python_spark.operators.incremental_probe import probe_near_dups
 from video_duplicate_finder_python_spark.operators.signature_stage import compute_signatures
-from video_duplicate_finder_python_spark.plans import pipeline as pipeline_mod
 from video_duplicate_finder_python_spark.plans.pipeline import StageJobCounter
 
 # per-stage job ceilings of a durable-dir run on the 240-doc fixture: a
@@ -60,7 +60,7 @@ def test_pipeline_job_budget_and_one_shingle_pass(
 
         return shingles_udf
 
-    monkeypatch.setattr(pipeline_mod, "make_shingles_udf", counting_shingles_udf)
+    monkeypatch.setattr(verify, "make_shingles_udf", counting_shingles_udf)
     pages = pages_spark_df(spark, corpus)
     counter = StageJobCounter(spark)
     with sql_plans() as plans:
@@ -85,6 +85,20 @@ def test_pipeline_job_budget_and_one_shingle_pass(
     assert calls.value == 1
     # both scoring-join sides read one broadcast of the profile frame
     assert [n for p in plans for n in p.broadcast_consumers(" AS _sh_")] == [2]
+
+    # the candidates write scans its one input, the signatures checkpoint,
+    # once: a single explode builds every source's key rows, below the
+    # bucket Exchange
+    (cand,) = [
+        p for p in plans
+        if any("/ck/candidates," in d for n, d in p.nodes.values() if n.startswith("Execute"))
+    ]
+    (node,) = cand.named("Scan parquet")
+    above = []
+    while cand.nodes[node][0] != "Exchange":
+        (node,) = cand.parents[node]
+        above.append(cand.nodes[node][0])
+    assert "Generate" in above, above
 
 
 # one probe_near_dups call on the probe fixture, then the caller's two

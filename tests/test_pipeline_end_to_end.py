@@ -171,7 +171,8 @@ def test_verified_pair_sources_match_signature_collisions(
     """Every verified pair carries exactly the tags of the candidate
     spaces it collides in, and every colliding pair is verified. The tags
     are recomputed in the driver from the durable signatures checkpoint:
-    ``minhash`` = a shared band hash (explode_bands), ``simhash`` = a
+    ``minhash`` = a shared band hash (its own per-band ``xxhash64``
+    expression, independent of the engine's ``candidate_keys``), ``simhash`` = a
     shared 16-bit pigeonhole chunk at Hamming <= simhash_hamming_max,
     ``suffix`` = a shared CDC fingerprint. No bucket may be capped, so a
     missing tag cannot hide behind a skew drop. The durable run must also
@@ -179,9 +180,10 @@ def test_verified_pair_sources_match_signature_collisions(
     from collections import defaultdict
     from itertools import combinations
 
+    from pyspark.sql import functions as F
+
     from video_duplicate_finder_python_spark import DedupPipeline
     from video_duplicate_finder_python_spark.corpus import pages_spark_df
-    from video_duplicate_finder_python_spark.operators.lsh import explode_bands
 
     cfg = DedupConfig()
     res = DedupPipeline(spark, cfg, checkpoint_dir=str(tmp_path)).run(
@@ -192,8 +194,14 @@ def test_verified_pair_sources_match_signature_collisions(
 
     sigs = spark.read.parquet(str(tmp_path / "signatures"))
     buckets: dict[tuple, set] = defaultdict(set)
-    for r in explode_bands(sigs, cfg).collect():
-        buckets[("minhash", r["band_id"], r["band_hash"])].add(r["url"])
+    rows = cfg.rows_per_band
+    bands = [
+        F.xxhash64(F.slice("minhash", b * rows + 1, rows), F.lit(b)).alias(f"b{b}")
+        for b in range(cfg.bands)
+    ]
+    for row in sigs.select("url", *bands).collect():
+        for b in range(cfg.bands):
+            buckets[("minhash", b, row[f"b{b}"])].add(row["url"])
     simhash = {}
     width = cfg.simhash_bits // cfg.simhash_chunks
     for r in sigs.select("url", "simhash", "fingerprints").collect():

@@ -1,17 +1,13 @@
-"""Resumability (stage checkpoints) + incremental anti-join refresh (O3)."""
+"""Resumability: stage checkpoints and their invalidation (O3)."""
 
 from __future__ import annotations
 
 import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
 from video_duplicate_finder_python_spark import DedupConfig, DedupPipeline
 from video_duplicate_finder_python_spark.corpus import generate_corpus, pages_spark_df
-from video_duplicate_finder_python_spark.operators.incremental import (
-    incremental_signatures,
-)
 
 
 @pytest.fixture()
@@ -112,23 +108,3 @@ def test_changed_config_invalidates(spark, ckdir):
     ).run(pages)
     assert not res.metrics["docs"]["cached"]
 
-
-def test_incremental_signatures_computes_only_delta(spark):
-    old = spark.createDataFrame(
-        [("u1", 11, "sig1"), ("u2", 22, "sig2"), ("u3", 33, "sig3")],
-        ["url", "content_hash", "payload"],
-    )
-    # u1 unchanged; u2 content changed; u3 vanished; u4 new
-    docs = spark.createDataFrame(
-        [("u1", 11), ("u2", 99), ("u4", 44)], ["url", "content_hash"]
-    )
-    computed = []
-
-    def compute(delta):
-        computed.extend(sorted(r["url"] for r in delta.collect()))
-        return delta.withColumn("payload", F.lit("fresh"))
-
-    sigs, delta = incremental_signatures(docs, old, compute)
-    rows = {r["url"]: r["payload"] for r in sigs.collect()}
-    assert computed == ["u2", "u4"]          # only changed + new pay for compute
-    assert rows == {"u1": "sig1", "u2": "fresh", "u4": "fresh"}  # u3 GC'd

@@ -228,124 +228,6 @@ def test_store_clear_all_and_cleanup_missing(spark, tmp_path):
     assert store.read().count() == 0
 
 
-def _pages_rows(urls_texts):
-    return [
-        (u, None, f"<html><head><title>x</title></head><body><p>{t}</p></body></html>".encode(),
-         None, "en")
-        for u, t in urls_texts
-    ]
-
-
-def test_windowed_crawl_stats_watermark_drops_late_rows(spark, tmp_path):
-    """Watermarked event-time windows: a row arriving after its window's
-    watermark passed is dropped; finalized windows are emitted exactly
-    once (append mode) with counts that include on-time late data."""
-    from datetime import datetime
-
-    from video_duplicate_finder_python_spark.streaming.ingest import PAGES_SCHEMA
-    from video_duplicate_finder_python_spark.streaming.windowed import (
-        windowed_crawl_stats,
-    )
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ck")
-    cols = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-    def page(url, ts, lang="en"):
-        return (url, datetime.fromisoformat(ts), b"<html><body><p>x</p></body></html>", None, lang)
-
-    emitted: list = []
-
-    def run_pass():
-        stream = spark.readStream.schema(PAGES_SCHEMA).parquet(src)
-        q = (
-            windowed_crawl_stats(stream, window="1 hour", watermark="2 hours")
-            .writeStream.foreachBatch(lambda df, _id: emitted.extend(df.collect()))
-            .outputMode("append").option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-
-    # batch 1: two pages in the 10:00 window, one at 15:00 → watermark 13:00
-    spark.createDataFrame(
-        [page("u1", "2025-01-01 10:10:00"), page("u2", "2025-01-01 10:40:00"),
-         page("u3", "2025-01-01 15:00:00")],
-        cols,
-    ).write.mode("append").parquet(src)
-    run_pass()
-
-    # batch 2: u4 is LATE but its window (10:00) is already past the 13:00
-    # watermark → dropped; u5 advances time further
-    spark.createDataFrame(
-        [page("u4", "2025-01-01 10:50:00"), page("u5", "2025-01-01 20:00:00")],
-        cols,
-    ).write.mode("append").parquet(src)
-    run_pass()
-
-    finalized = {
-        (str(r["window_start"]), r["lang"]): r["n_pages"] for r in emitted
-    }
-    # the 10:00 window was finalized with the two ON-TIME rows; u4 never counted
-    assert finalized[("2025-01-01 10:00:00", "en")] == 2
-    # exactly-once emission: no duplicate (window, lang) rows
-    assert len(finalized) == len(emitted)
-
-
-def test_stateful_duplicate_group_tracking(spark, tmp_path):
-    """applyInPandasWithState duplicate-group tracker: groups keyed by
-    content hash carry (min-url representative, member count) as streaming
-    state; updates are emitted per changed group; state survives a restart
-    from the stream checkpoint (second availableNow pass resumes, a
-    smaller url takes over as representative — the batch pipeline's
-    cluster_id = min(url) invariant, live)."""
-    from video_duplicate_finder_python_spark.streaming.ingest import PAGES_SCHEMA
-    from video_duplicate_finder_python_spark.streaming.stateful import (
-        track_duplicate_groups,
-    )
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ck")
-    schema_cols = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-    spark.createDataFrame(
-        _pages_rows(
-            [("u01", "alpha text body"), ("u02", "alpha text body"),
-             ("u03", "beta text body"), ("u04", "beta text body"),
-             ("u05", "gamma text body"), ("u06", "delta text body")]
-        ),
-        schema_cols,
-    ).write.mode("append").parquet(src)
-
-    def run_pass(sink: list):
-        stream = spark.readStream.schema(PAGES_SCHEMA).parquet(src)
-        q = (
-            track_duplicate_groups(stream, n_shards=4)
-            .writeStream.foreachBatch(lambda df, _id: sink.extend(df.collect()))
-            .outputMode("update").option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-
-    rows1: list = []
-    run_pass(rows1)
-    by_rep1 = {r["rep_url"]: r["n_members"] for r in rows1}
-    assert len(rows1) == 4  # alpha, beta, gamma, delta
-    assert by_rep1 == {"u01": 2, "u03": 2, "u05": 1, "u06": 1}
-
-    # second drop: u00 duplicates alpha with a SMALLER url (rep must flip),
-    # u07 brings new content epsilon
-    spark.createDataFrame(
-        _pages_rows([("u00", "alpha text body"), ("u07", "epsilon text body")]),
-        schema_cols,
-    ).write.mode("append").parquet(src)
-
-    rows2: list = []
-    run_pass(rows2)
-    updates = {r["rep_url"]: r["n_members"] for r in rows2}
-    # only the two touched groups were emitted, counts resumed from state
-    assert updates == {"u00": 3, "u07": 1}
-
-
 def test_vacuum_removes_dead_generation_despite_success_marker(spark, tmp_path):
     """A generation whose every partition has been superseded must be
     removed entirely: Spark's _SUCCESS marker at the generation root does
@@ -479,6 +361,7 @@ def test_probe_dups_streaming_dedup(spark, tmp_path):
         1,
     )
     assert ingest.batch_stats[-1]["probe_dup_pairs"] == 1
+    assert ingest.batch_stats[-1]["probe_overflow_docs"] == 0
     rows = spark.read.parquet(dups_dir).collect()
     assert len(rows) == 1
     r = rows[0]
@@ -489,6 +372,40 @@ def test_probe_dups_streaming_dedup(spark, tmp_path):
         1,
     )
     assert r.jaccard == 1.0 and r.is_dup
+
+
+def test_probe_dups_counts_overflow_docs(spark, tmp_path, monkeypatch):
+    """A batch doc whose candidate degree exceeds the probe's
+    ``max_matches_per_doc`` gets no pair; the streaming dedup counts it in
+    ``probe_overflow_docs`` instead of dropping it silently."""
+    from video_duplicate_finder_python_spark.operators import incremental_probe
+
+    real = incremental_probe.probe_near_dups
+    monkeypatch.setattr(
+        incremental_probe,
+        "probe_near_dups",
+        lambda store, new_docs, cfg: real(store, new_docs, cfg, max_matches_per_doc=1),
+    )
+    ingest = StreamingSignatureIngest(
+        spark, str(tmp_path / "s"), DedupConfig(), n_parts=4,
+        probe_dups_dir=str(tmp_path / "dups"),
+    )
+    ingest.process_batch(
+        _probe_pages_df(spark, [("https://a/1", _PROBE_BODY), ("https://a/2", _PROBE_OTHER)]),
+        0,
+    )
+    # b/1 and b/2 both copy a/1, so each has two candidates (a/1 and the
+    # other): both overflow a cap of 1, and neither gets a pair
+    ingest.process_batch(
+        _probe_pages_df(
+            spark,
+            [("https://b/1", _PROBE_BODY), ("https://b/2", _PROBE_BODY),
+             ("https://b/3", _PROBE_UNIQ)],
+        ),
+        1,
+    )
+    stat = ingest.batch_stats[-1]
+    assert (stat["probe_dup_pairs"], stat["probe_overflow_docs"]) == (0, 2)
 
 
 def test_probe_dups_observed_in_stream_session(spark, tmp_path, monkeypatch):

@@ -10,11 +10,11 @@ duplicate something we already have?" in O(delta) work. This operator
 does:
 
 - signatures for the new batch only (the Arrow kernel, O(delta));
-- **ONE store pass for all candidate sources plus one text fetch** (r7:
-  the per-source band and fingerprint probes shared a merged ``(src,
-  key)`` space — the same construction as the batch pipeline's merged
-  candidates, plans/pipeline.py:_keyed_candidate_rows — so the store's
-  signature columns are scanned and exploded once, not once per source),
+- **ONE store pass for all candidate sources plus one text fetch**: the
+  band and fingerprint probes share one ``(src, key)`` space, read
+  through the batch pipeline's own key function
+  (operators/candidate_keys.py), so the store's signature columns are
+  scanned and exploded once, not once per source;
   every pass shuffle-free on the store side: the batch's keys broadcast
   against the store's exploded view, and the (tiny) candidate output is
   materialized so downstream consumers reuse it; the text fetch is a
@@ -103,9 +103,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
-from ..functions.signatures import make_shingles_udf
+from .candidate_keys import candidate_keys
 from .signature_stage import compute_signatures
-from .verify import verify_candidates
+from .verify import broadcast_profiles, verify_candidates
 
 
 def probe_near_dups(
@@ -164,38 +164,12 @@ def probe_near_dups(
     # downstream plan (see module docstring, plan-size note)
     sigs_new = sigs_new.localCheckpoint(eager=False)
 
-    # --- merged candidate space: ONE (src, key) row set per side, same
-    # construction as the batch pipeline's merged candidates — the store's
-    # signature columns are scanned/exploded once for ALL sources --------
-    r = cfg.rows_per_band
-    key_items = [
-        F.struct(
-            F.lit("minhash").alias("src"),
-            F.xxhash64(F.slice("minhash", b * r + 1, r), F.lit(b)).alias("key"),
-        )
-        for b in range(cfg.bands)
-    ]
-    key_arr = F.array(*key_items)
-    if substring:
-        # cdc_fingerprints emits a distinct set per doc, so the exploded
-        # (url, fp) rows are unique by construction — no dedup needed
-        key_arr = F.concat(
-            key_arr,
-            F.transform(
-                F.col("fingerprints"),
-                lambda fp: F.struct(
-                    F.lit("suffix").alias("src"), fp.alias("key")
-                ),
-            ),
-        )
-
-    def keyed(df: DataFrame, url_out: str) -> DataFrame:
-        return df.select(
-            F.col("url").alias(url_out), F.explode(key_arr).alias("_k")
-        ).select(url_out, F.col("_k.src").alias("src"), F.col("_k.key").alias("key"))
-
-    keys_new = keyed(sigs_new, "new_url")
-    keys_store = keyed(store_probe, "url")
+    # --- merged candidate space: ONE (src, key) row set per side from the
+    # pipeline's key function — the store's signature columns are scanned
+    # and exploded once for ALL sources --------------------------------------
+    sources = ("minhash", "suffix") if substring else ("minhash",)
+    keys_new = candidate_keys(sigs_new, cfg, sources, url_col="new_url")
+    keys_store = candidate_keys(store_probe, cfg, sources)
     old_rows = (
         keys_store.join(F.broadcast(keys_new), ["src", "key"])
         .where(F.col("url") != F.col("new_url"))
@@ -264,14 +238,9 @@ def probe_near_dups(
 
     # the verify profile frame (url, text, simhash, shingles) for exactly
     # the urls verify will touch: the batch, plus the matched store rows
-    # (broadcast left-semi — tiny after the cap), shingled in ONE pass.
-    # verify reads it as one broadcast for both scoring-join sides, and
-    # the span check reads the texts it carries, so it is cut with a lazy
-    # localCheckpoint; the REBALANCE before the UDF lets AQE size the
-    # shingle stage to the bytes the batch and its matches actually hold
-    # (one Python task at a 50-page batch) instead of one task per
-    # upstream split. The exchange sits above the semi-join, so the store
-    # scan keeps its own splits and is never shuffled.
+    # (broadcast left-semi — tiny after the cap), shingled in ONE pass
+    # (verify.broadcast_profiles). Its REBALANCE sits above the semi-join,
+    # so the store scan keeps its own splits and is never shuffled.
     matched_old = store.join(
         F.broadcast(
             cand.where(~F.col("is_new_other")).select(F.col("other_url").alias("url"))
@@ -287,12 +256,7 @@ def probe_near_dups(
         [matched_old, sigs_new.select("url", "text", "simhash")],
         key=lambda df: not df.schema["url"].nullable,
     )
-    profiles = (
-        first.unionByName(second)
-        .hint("rebalance")
-        .withColumn("shingles", make_shingles_udf(cfg.shingle_k)(F.col("text")))
-        .localCheckpoint(eager=False)
-    )
+    profiles = broadcast_profiles(first.unionByName(second), cfg)
     if not substring:
         profiles = profiles.drop("text")
 
@@ -307,7 +271,7 @@ def probe_near_dups(
             "other_url",
             "is_new_other",
         ),
-        F.broadcast(profiles),
+        profiles,
         cfg,
     )
     pairs = verified.select(

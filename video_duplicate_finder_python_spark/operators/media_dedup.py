@@ -14,7 +14,7 @@ reference (both documented deviations, both strictly-more-recall):
 - **Candidate generation** replaces the md5-prefix bucket (which only ever
   groups EXACT combined-hash duplicates, comparator.py:52-63) with
   pigeonhole LSH over each frame's pHash — 4 × 16-bit chunks via the same
-  ``explode_chunks`` + ``bucket_pairs`` machinery the SimHash source uses,
+  chunk math (``explode_chunks``) and ``bucket_pairs`` the SimHash source uses,
   so any two videos sharing a frame position whose pHashes are within
   Hamming distance 3 are *guaranteed* candidates (and exact duplicates
   trivially so). Hot buckets (e.g. a boilerplate first frame shared by

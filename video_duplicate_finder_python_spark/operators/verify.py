@@ -61,6 +61,7 @@ from pyspark.sql import types as T
 
 from ..config import DedupConfig
 from ..functions.fingerprint import anchored_common_span_len
+from ..functions.signatures import make_shingles_udf
 
 
 def _make_span_udf(window: int, mask_bits: int):
@@ -80,6 +81,21 @@ def _make_span_udf(window: int, mask_bits: int):
         )
 
     return span_udf
+
+
+def broadcast_profiles(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """``docs(url, text, simhash)`` — every url of a small candidate set —
+    → the broadcast profile frame ``(url, text, simhash, shingles)`` both
+    scoring-join sides and the span check read (module docstring). One
+    AQE ``REBALANCE`` sizes the shingle stage to the docs' bytes (one
+    Python task at a few hundred docs, not one per upstream split), the
+    shingle UDF runs once, and a lazy ``localCheckpoint`` cuts the frame
+    so its readers share one computation and one plan leaf."""
+    return F.broadcast(
+        docs.hint("rebalance")
+        .withColumn("shingles", make_shingles_udf(cfg.shingle_k)(F.col("text")))
+        .localCheckpoint(eager=False)
+    )
 
 
 def verify_candidates(

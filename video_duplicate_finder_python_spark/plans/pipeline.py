@@ -23,8 +23,10 @@ Stage graph (each node an idempotent checkpoint, see sources/checkpoint.py):
 
 ``cfg.candidate_sources`` selects the pair sources (default: minhash +
 simhash + CDC-substring). The signature-derived sources share one keyed
-row space and one ``bucket_pairs`` shuffle; each pair keeps the tags of
-every source it collided in. The per-group generalized suffix-array pass
+row space, built by one explode over one scan of signatures
+(operators/candidate_keys.py, which the probe reads its keys
+through too), and one ``bucket_pairs`` shuffle; each pair keeps the tags
+of every source it collided in. The per-group generalized suffix-array pass
 (operators/suffix_array.py, SURVEY §7 step 8) is the opt-in 4th source:
 it reads rep_docs directly (it needs text, not signatures), groups by
 ``cfg.suffix_group_expr``, and its pairs carry an exact-LCS hint that
@@ -49,13 +51,12 @@ from ..functions.signatures import make_shingles_udf
 from ..functions.text import extract_text_col
 from ..operators.signature_stage import compute_signatures
 from ..operators.bucket_join import bucket_pairs
+from ..operators.candidate_keys import candidate_keys
 from ..operators.connected_components import connected_components
 from ..operators.exact import exact_edges_from, exact_representatives
-from ..operators.lsh import explode_bands
 from ..operators.shuffle_width import narrowed_width, shuffle_width
-from ..operators.simhash_candidates import explode_simhash_chunks
 from ..operators.suffix_array import suffix_array_candidates
-from ..operators.verify import verify_candidates
+from ..operators.verify import broadcast_profiles, verify_candidates
 from ..sources.checkpoint import CheckpointManager, observed_metrics
 
 
@@ -266,15 +267,14 @@ class DedupPipeline:
         """The verify profiles of every url in a candidate pair.
 
         When they fit a broadcast (``_profiles_fit_broadcast``): ONE
-        profile frame ``(url, text, simhash, shingles)``, the probe's shape
+        profile frame ``(url, text, simhash, shingles)`` from
+        ``verify.broadcast_profiles``, the probe's shape
         (operators/incremental_probe.py) — rep_docs semi-joined to the
         broadcast candidate urls, simhash broadcast-joined from the
-        signatures semi-joined to the same urls, one AQE ``REBALANCE`` (one
-        Python task at a few hundred docs), the shingle UDF once, cut with
-        a lazy ``localCheckpoint``. It is returned broadcast-hinted: both
-        scoring-join sides read the same broadcast and its texts feed the
-        span check (verify carries them only for the pairs that need
-        them), so nothing is shuffled or read twice.
+        signatures semi-joined to the same urls. Both scoring-join sides
+        read the same broadcast and its texts feed the span check (verify
+        carries them only for the pairs that need them), so nothing is
+        shuffled or read twice.
 
         Otherwise ``(url, shingles, simhash)``, deliberately WITHOUT text
         (at 10^5 candidate docs the texts are ~1 GB): verify fetches texts
@@ -291,20 +291,18 @@ class DedupPipeline:
             candidates.select(F.col("url_a").alias("url"))
             .union(candidates.select(F.col("url_b").alias("url")))
         )
-        shingles_udf = make_shingles_udf(self.cfg.shingle_k)
         if self._profiles_fit_broadcast():
             # a semi-join's build side needs no distinct: a url repeated
             # across pairs is one more entry in a small hash relation
             urls_b = F.broadcast(cand_urls)
             sims = signatures.select("url", "simhash").join(urls_b, "url", "left_semi")
-            return F.broadcast(
+            return broadcast_profiles(
                 rep_docs.join(urls_b, "url", "left_semi")
                 .select("url", "text")
-                .join(F.broadcast(sims), "url")
-                .hint("rebalance")
-                .withColumn("shingles", shingles_udf(F.col("text")))
-                .localCheckpoint(eager=False)
+                .join(F.broadcast(sims), "url"),
+                self.cfg,
             )
+        shingles_udf = make_shingles_udf(self.cfg.shingle_k)
         if width is not None:
             urls_b = F.broadcast(cand_urls.repartition(width, "url").distinct())
             cand_docs = rep_docs.join(urls_b, "url", "left_semi").select(
@@ -338,48 +336,6 @@ class DedupPipeline:
         "suffix": "substring",
         "suffix_array": "suffix_array",
     }
-
-    def _keyed_candidate_rows(self, signatures: DataFrame) -> DataFrame | None:
-        """Union of every signature-derived candidate space as
-        ``(url, src, key, sig)`` rows — the bucket-shuffle input. Keys
-        from different spaces live in one long column, separated by the
-        ``src`` tag (which is part of the bucket key downstream):
-        minhash → the band hash (band id already seeds it), simhash →
-        xxhash64(chunk_id, chunk_value), suffix → the CDC fingerprint.
-        ``sig`` carries the 64-bit SimHash for simhash rows (the
-        post-join Hamming filter needs it) and is NULL elsewhere. None
-        when no signature-derived source is enabled."""
-        cfg = self.cfg
-        null_sig = F.lit(None).cast("long")
-        parts = []
-        if "minhash" in cfg.candidate_sources:
-            parts.append(
-                explode_bands(signatures, cfg).select(
-                    "url",
-                    F.lit("minhash").alias("src"),
-                    F.col("band_hash").alias("key"),
-                    null_sig.alias("sig"),
-                )
-            )
-        if "simhash" in cfg.candidate_sources:
-            parts.append(
-                explode_simhash_chunks(signatures, cfg).select(
-                    "url",
-                    F.lit("simhash").alias("src"),
-                    F.xxhash64("chunk_id", "chunk_value").alias("key"),
-                    F.col("simhash").alias("sig"),
-                )
-            )
-        if "suffix" in cfg.candidate_sources:
-            parts.append(
-                signatures.select(
-                    "url",
-                    F.lit("suffix").alias("src"),
-                    F.explode("fingerprints").alias("key"),
-                    null_sig.alias("sig"),
-                )
-            )
-        return reduce(DataFrame.unionByName, parts) if parts else None
 
     def _candidates(
         self, signatures: DataFrame, rep_docs: DataFrame
@@ -415,15 +371,14 @@ class DedupPipeline:
         obs = Observation()
         dropped = sa_dropped = None
         caches: list[DataFrame] = []
-        rows = self._keyed_candidate_rows(signatures)
-        if rows is not None:
+        key_sources = [s for s in cfg.candidate_sources if s != "suffix_array"]
+        if key_sources:
             preds = {
                 f"{self._DROP_LABEL[s]}_dropped_members": F.col("src") == F.lit(s)
-                for s in cfg.candidate_sources
-                if s != "suffix_array"
+                for s in key_sources
             }
             pairs, dropped, caches = bucket_pairs(
-                rows,
+                candidate_keys(signatures, cfg, key_sources),
                 key_cols=["src", "key"],
                 carry_cols=["sig"],
                 keep_keys=["src"],

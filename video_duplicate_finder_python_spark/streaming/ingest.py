@@ -2,9 +2,8 @@
 
 The reference is strictly batch; the lakehouse-scale extension point is a
 stream of page snapshots (new WARC drops landing as parquet files). Each
-micro-batch flows through the same incremental anti-join as the batch path
-(operators/incremental.py): only new/changed urls pay for signature
-computation.
+micro-batch is anti-joined to the store on ``(url, content_hash)``: only
+new/changed urls pay for signature computation.
 
 The store is **hash-partitioned by url** with a manifest (Iceberg snapshot
 in miniature): ``_MANIFEST`` maps each of N url-hash partitions to the
@@ -396,7 +395,7 @@ class StreamingSignatureIngest:
         ).withColumn("content_hash", content_hash_col(F.col("text")))
 
         manifest = self.store.manifest()
-        probe_pairs = None
+        probe_pairs = probe_overflow = None
         if self.probe_dups_dir and manifest:
             # streaming dedup (opt-in, see __init__): probe BEFORE the
             # upsert so the batch is compared to the pre-batch corpus;
@@ -410,7 +409,7 @@ class StreamingSignatureIngest:
             # output dir
             from ..operators.incremental_probe import probe_near_dups
 
-            pairs, _overflow, _ = probe_near_dups(
+            pairs, overflow, _ = probe_near_dups(
                 self.store.read(), docs.select("url", "text"), self.cfg
             )
             observed_dups = Observation()
@@ -426,6 +425,12 @@ class StreamingSignatureIngest:
                 if got is not None
                 else self.spark.read.parquet(out_dir).count()
             )
+            # batch docs above the probe's candidate-degree cap get no
+            # pair: count them, so the boilerplate guard's diversion is
+            # never silent. The rows are batch urls, so collecting them is
+            # batch-sized, and it is one job over the materialized cut
+            # where count() would run a second, aggregating one
+            probe_overflow = len(overflow.collect())
         # `not manifest` covers the truncated-store case: clear_all() on a
         # never-written store leaves an empty manifest with no schema file,
         # so the upsert branch would crash on read() → None
@@ -440,7 +445,7 @@ class StreamingSignatureIngest:
             # upsert semantics, NOT snapshot semantics: a stream micro-batch
             # carries only newly-landed pages, so a url being absent from
             # the batch means "unchanged", not "deleted" (snapshot deletes
-            # are cleanup_missing / the batch incremental_signatures job).
+            # are cleanup_missing).
             # Only the url-hash partitions the batch touches are read and
             # rewritten — O(delta), not O(store).
             touched = [
@@ -483,6 +488,7 @@ class StreamingSignatureIngest:
         }
         if probe_pairs is not None:
             stat["probe_dup_pairs"] = probe_pairs
+            stat["probe_overflow_docs"] = probe_overflow
         n = self.vacuum_every_n_batches
         if n and (len(self.batch_stats) + 1) % n == 0:  # every Nth batch
             stat["vacuumed_parts"] = self.store.vacuum()
