@@ -6,7 +6,7 @@ Checks (exit 1 on violation):
 - pages scan never reads `html` when the query doesn't need it (ReadSchema)
 - ann_probe's only Python UDF is the |queries|-row probe UDF; the index
   side is scanned UDF-free and the probe side is broadcast
-- verify plan (with a texts frame) contains exactly one span_udf node
+- verify plan (profiles carrying text) contains exactly one span_udf node
   (single-pass LCS), not the round-1 two-branch shape that ran the
   profiles join twice
 - the candidate-key explode (all three key sources) happens without a pre-shuffle
@@ -178,10 +178,10 @@ def main() -> None:
     profiles = docs_df.withColumn(
         "shingles", make_shingles_udf(cfg.shingle_k)(F.col("text"))
     ).withColumn("simhash", F.lit(0).cast("long"))
-    # texts must be passed: without them the slow path has no span check,
-    # and a count of span_udf nodes would hold vacuously
+    # the profiles carry docs_df's text: without it the slow path has no
+    # span check, and a count of span_udf nodes would hold vacuously
     verify_plan = (
-        verify_candidates(cands, profiles, cfg, texts=docs_df)
+        verify_candidates(cands, profiles, cfg)
         ._jdf.queryExecution().executedPlan().toString()
     )
     span_nodes = [

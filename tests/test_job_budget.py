@@ -12,6 +12,7 @@ counted the same way, under a job group of the test's own.
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,11 +42,14 @@ BUDGET = {
     "pairs": 6,
     "clusters": 2,
 }
+# the same run's ``pairs`` stage with broadcasts disabled: the profile
+# frame reaches the scoring join through shuffles instead of one
+# broadcast, so the stage's write sits on more AQE query stages
+UNBROADCAST_PAIRS_BUDGET = 9
 
 
-def test_pipeline_job_budget_and_one_shingle_pass(
-    spark, corpus, tmp_path, monkeypatch, sql_plans
-):
+def _count_shingle_calls(spark, monkeypatch):
+    """Wrap verify's shingle UDF: → (rows, calls) accumulators."""
     sc = spark.sparkContext
     rows, calls = sc.accumulator(0), sc.accumulator(0)
 
@@ -61,28 +65,40 @@ def test_pipeline_job_budget_and_one_shingle_pass(
         return shingles_udf
 
     monkeypatch.setattr(verify, "make_shingles_udf", counting_shingles_udf)
-    pages = pages_spark_df(spark, corpus)
-    counter = StageJobCounter(spark)
-    with sql_plans() as plans:
-        res = DedupPipeline(
-            spark,
-            DedupConfig(),
-            checkpoint_dir=str(tmp_path / "ck"),
-            on_stage_start=counter.mark,
-        ).run(pages)
-    counter.mark("")
-    jobs = counter.jobs
-    assert set(jobs) == set(BUDGET)
-    over = {s: (jobs[s], BUDGET[s]) for s in BUDGET if jobs[s] > BUDGET[s]}
-    assert not over, f"stages over their job budget (got, budget): {over}; all: {jobs}"
+    return rows, calls
 
-    # every candidate url is shingled once, in one Arrow batch: both
-    # scoring-join sides and the span check read one profile frame
+
+def _run_counted(spark, corpus, ck):
+    """A durable-dir pipeline run on the fixture → (result, jobs per stage)."""
+    counter = StageJobCounter(spark)
+    res = DedupPipeline(
+        spark, DedupConfig(), checkpoint_dir=ck, on_stage_start=counter.mark
+    ).run(pages_spark_df(spark, corpus))
+    counter.mark("")
+    return res, counter.jobs
+
+
+def _assert_one_shingle_pass(res, rows, calls):
+    """Every candidate url is shingled once, in one Arrow batch: both
+    scoring-join sides and the span check read one profile frame."""
     cands = res.pairs.select("url_a", "url_b").collect()
     cand_urls = {u for r in cands for u in r}
     assert cand_urls
     assert rows.value == len(cand_urls)
     assert calls.value == 1
+
+
+def test_pipeline_job_budget_and_one_shingle_pass(
+    spark, corpus, tmp_path, monkeypatch, sql_plans
+):
+    rows, calls = _count_shingle_calls(spark, monkeypatch)
+    with sql_plans() as plans:
+        res, jobs = _run_counted(spark, corpus, str(tmp_path / "ck"))
+    assert set(jobs) == set(BUDGET)
+    over = {s: (jobs[s], BUDGET[s]) for s in BUDGET if jobs[s] > BUDGET[s]}
+    assert not over, f"stages over their job budget (got, budget): {over}; all: {jobs}"
+
+    _assert_one_shingle_pass(res, rows, calls)
     # both scoring-join sides read one broadcast of the profile frame
     assert [n for p in plans for n in p.broadcast_consumers(" AS _sh_")] == [2]
 
@@ -99,6 +115,30 @@ def test_pipeline_job_budget_and_one_shingle_pass(
         (node,) = cand.parents[node]
         above.append(cand.nodes[node][0])
     assert "Generate" in above, above
+
+
+@pytest.mark.parametrize(
+    "width", ["narrowed", "session"], ids=["narrowed-urls", "shuffled-urls"]
+)
+def test_unbroadcast_profiles_job_budget_and_one_shingle_pass(
+    spark, corpus, tmp_path, monkeypatch, width
+):
+    """With broadcasts disabled the profile frame is not broadcast, yet
+    the ``pairs`` stage keeps the one profile shape, texts included: its
+    shingle pass is verify's, once per candidate url, and no second text
+    fetch adds jobs. At the fixture's session width of 8 the candidate url
+    set is deduped at a data-sized width and broadcast; at a width of 1
+    nothing is narrowed and the url set is deduped by a shuffle."""
+    from test_pipeline_end_to_end import _session_conf
+
+    rows, calls = _count_shingle_calls(spark, monkeypatch)
+    conf = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+    if width == "session":
+        conf["spark.sql.shuffle.partitions"] = "1"
+    with _session_conf(spark, conf):
+        res, jobs = _run_counted(spark, corpus, str(tmp_path / "ck"))
+        assert jobs["pairs"] <= UNBROADCAST_PAIRS_BUDGET, jobs
+        _assert_one_shingle_pass(res, rows, calls)
 
 
 # one probe_near_dups call on the probe fixture, then the caller's two

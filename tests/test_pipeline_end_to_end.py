@@ -283,7 +283,8 @@ def test_forced_drop_counters_identical_across_checkpoint_modes(spark, corpus, t
     the counts, clusters and pair rows are the same whether the stage is
     written to parquet or cut in memory, and in both size regimes: at a
     session width of 1 with broadcasts disabled no shuffle is narrowed
-    and verify fetches texts separately (the corpus-scale shapes). The
+    and the profile frame is shuffled, not broadcast (the corpus-scale
+    shape). The
     counts equal those of the former separate counting job."""
     from video_duplicate_finder_python_spark.corpus import pages_spark_df
 
@@ -368,37 +369,31 @@ def _long_pair_texts(n_pairs: int, words: int) -> list[str]:
     return out
 
 
-def test_long_texts_take_the_text_less_profiles(spark, tmp_path, monkeypatch):
-    """The pipeline broadcasts one profile frame WITH texts only when the
-    candidate docs' estimated profile bytes (2 docs per candidate pair ×
-    the mean text size × 5) fit the session's broadcast limit; a row
-    count alone does not bound it. Three pairs of ~180 KB pages stay far
-    inside the one-task candidate regime, yet at a 1 MB limit (scaled
-    down with the pages to keep the test small: 64 MB pages at the
-    default would do the same) they take the text-less shape, with the
-    same pairs and clusters. The ``text_bytes`` counter the estimate
-    reads is exact in both checkpoint modes."""
+def test_long_texts_skip_the_profile_broadcast(spark, tmp_path, sql_plans):
+    """The pipeline broadcasts its verify profile frame (texts included)
+    only when the candidate docs' estimated profile bytes (2 docs per
+    candidate pair × the mean text size × 5) fit the session's broadcast
+    limit; a row count alone does not bound it. Three pairs of ~180 KB
+    pages stay far inside the one-task candidate regime, yet at a 1 MB
+    limit (scaled down with the pages to keep the test small: 64 MB pages
+    at the default would do the same) the scoring join reads the frame
+    through a shuffle, not a broadcast, with the same pairs and clusters.
+    The ``text_bytes`` counter the estimate reads is exact in both
+    checkpoint modes."""
     from pyspark.sql import functions as F
 
     from video_duplicate_finder_python_spark import DedupPipeline
-    from video_duplicate_finder_python_spark.plans import pipeline as pipeline_mod
 
-    shapes = []
-    verify = pipeline_mod.verify_candidates
-
-    def spy(candidates, cand_profiles, *args, **kwargs):
-        shapes.append("text" in cand_profiles.columns)
-        return verify(candidates, cand_profiles, *args, **kwargs)
-
-    monkeypatch.setattr(pipeline_mod, "verify_candidates", spy)
     pages = _pages(spark, _long_pair_texts(3, 20_000))
     text_bytes = (
         DedupPipeline(spark)._extract(pages).agg(F.sum(F.octet_length("text"))).first()[0]
     )
     assert text_bytes > 6 * 150_000
-    runs = {}
+    runs, profile_reads = {}, {}
     for limit in ("64MB", "1MB"):
-        with _session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": limit}):
+        with _session_conf(
+            spark, {"spark.sql.autoBroadcastJoinThreshold": limit}
+        ), sql_plans() as plans:
             for mode, ck in (("durable", str(tmp_path / limit)), ("memory", None)):
                 res = DedupPipeline(spark, DedupConfig(), checkpoint_dir=ck).run(pages)
                 assert res.metrics["candidates"]["rows_out"] == 3
@@ -407,7 +402,16 @@ def test_long_texts_take_the_text_less_profiles(spark, tmp_path, monkeypatch):
                     sorted(map(tuple, res.clusters.collect())),
                     sorted((*r[:5], tuple(sorted(r["sources"])), r["is_dup"]) for r in res.pairs.collect()),
                 )
-    assert shapes == [True, True, False, False]
+        # the plan nodes the scoring-join sides' profile projections feed
+        profile_reads[limit] = {
+            p.nodes[q][0]
+            for p in plans
+            for i in p.named("Project")
+            if " AS _sh_" in p.nodes[i][1]
+            for q in p.parents[i]
+        }
+    assert profile_reads["64MB"] == {"BroadcastExchange"}
+    assert profile_reads["1MB"] and "BroadcastExchange" not in profile_reads["1MB"]
     first = runs["64MB", "durable"]
     assert len(first[0]) == 6 and all(r[-1] for r in first[1])
     assert all(v == first for v in runs.values())

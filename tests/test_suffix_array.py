@@ -190,7 +190,7 @@ def test_char_cap_keeps_url_ordered_prefix(spark):
 
 
 def test_candidate_adapter_counts_drops(spark):
-    """suffix_array_candidates: (pairs, dropped, cached) source contract —
+    """suffix_array_candidates: (pairs, dropped) source contract —
     pairs carry the exact-LCS hint, and capped members are counted, never
     silent."""
     from video_duplicate_finder_python_spark.config import DedupConfig
@@ -206,8 +206,7 @@ def test_candidate_adapter_counts_drops(spark):
         suffix_group_expr="host",
         suffix_max_docs_per_group=3,
     )
-    pairs, dropped, cached = suffix_array_candidates(df, cfg)
-    assert cached == []
+    pairs, dropped = suffix_array_candidates(df, cfg)
     got = {(r["url_a"], r["url_b"]): r["lcs_hint"] for r in pairs.collect()}
     assert set(got) == {
         ("https://h/00", "https://h/01"),

@@ -1,6 +1,6 @@
-"""verify_candidates edge semantics: partial texts must not drop rows
-(round-2 advice: the slow path inner-joined texts, so a needs_lcs pair
-whose url was missing from the texts frame vanished from the result)."""
+"""verify_candidates edge semantics: a needs-LCS pair whose profile text
+is missing keeps its row, with an unknown (NULL) span, and the span check
+reads its texts from the profile frame."""
 
 from __future__ import annotations
 
@@ -27,33 +27,30 @@ def _profiles(spark, rows):
     return spark.createDataFrame(rows, "url string, shingles array<bigint>, simhash bigint")
 
 
+def _text_profiles(spark, rows):
+    return spark.createDataFrame(
+        rows, "url string, text string, shingles array<bigint>, simhash bigint"
+    )
+
+
 def test_partial_texts_keep_needs_lcs_rows_with_null_lcs(spark):
     cfg = DedupConfig()
     shared = _words(7, 130)  # ~700 chars, non-periodic → CDC cuts inside
-    texts = spark.createDataFrame(
-        [
-            ("a", shared + " " + _words(1, 40)),
-            # "b" deliberately absent from texts
-            ("c", shared + " " + _words(2, 40)),
-            ("d", shared + " " + _words(3, 40)),
-        ],
-        ["url", "text"],
-    )
     candidates = spark.createDataFrame(
         [("a", "b", ["suffix"]), ("c", "d", ["suffix"])],
         "url_a string, url_b string, sources array<string>",
     )
     # disjoint shingle sets → jaccard 0 → both pairs take the slow branch
-    profiles = _profiles(
+    profiles = _text_profiles(
         spark,
         [
-            ("a", [1, 2, 3], 0),
-            ("b", [4, 5, 6], 0),
-            ("c", [7, 8, 9], 0),
-            ("d", [10, 11, 12], 0),
+            ("a", shared + " " + _words(1, 40), [1, 2, 3], 0),
+            ("b", None, [4, 5, 6], 0),  # "b" deliberately has no text
+            ("c", shared + " " + _words(2, 40), [7, 8, 9], 0),
+            ("d", shared + " " + _words(3, 40), [10, 11, 12], 0),
         ],
     )
-    out = verify_candidates(candidates, profiles, cfg, texts=texts)
+    out = verify_candidates(candidates, profiles, cfg)
     rows = {(r["url_a"], r["url_b"]): r for r in out.collect()}
 
     assert set(rows) == {("a", "b"), ("c", "d")}, "no candidate row may vanish"
@@ -66,15 +63,23 @@ def test_partial_texts_keep_needs_lcs_rows_with_null_lcs(spark):
 
 
 def test_no_texts_frame_skips_substring_confirmation(spark):
+    """Profiles without a text column skip the span check: the needs-LCS
+    pair keeps its row with a NULL lcs_len, and is_dup is the Jaccard
+    test's."""
     cfg = DedupConfig()
     candidates = spark.createDataFrame(
-        [("a", "b", ["suffix"])], "url_a string, url_b string, sources array<string>"
+        [("a", "b", ["suffix"]), ("c", "d", ["suffix"])],
+        "url_a string, url_b string, sources array<string>",
     )
-    profiles = _profiles(spark, [("a", [1, 2], 0), ("b", [3, 4], 0)])
-    out = verify_candidates(candidates, profiles, cfg, texts=None)
-    rows = out.collect()
-    assert len(rows) == 1
-    assert rows[0]["lcs_len"] is None and rows[0]["is_dup"] is False
+    profiles = _profiles(
+        spark,
+        [("a", [1, 2], 0), ("b", [3, 4], 0), ("c", [5, 6], 0), ("d", [5, 6], 0)],
+    )
+    out = verify_candidates(candidates, profiles, cfg)
+    rows = {(r["url_a"], r["url_b"]): r for r in out.collect()}
+    assert set(rows) == {("a", "b"), ("c", "d")}
+    assert rows[("a", "b")]["lcs_len"] is None and rows[("a", "b")]["is_dup"] is False
+    assert rows[("c", "d")]["lcs_len"] is None and rows[("c", "d")]["is_dup"] is True
 
 
 def test_lcs_pairs_reach_span_udf_in_one_batch(spark, monkeypatch):
@@ -112,15 +117,10 @@ def test_lcs_pairs_reach_span_udf_in_one_batch(spark, monkeypatch):
         "url_a string, url_b string, sources array<string>",
     ).repartition(n_pairs)
     # disjoint shingle sets → jaccard 0 → every pair needs the LCS check
-    profiles = _profiles(
-        spark, [(u, [k], 0) for k, u in enumerate(sorted(texts))]
+    profiles = _text_profiles(
+        spark, [(u, texts[u], [k], 0) for k, u in enumerate(sorted(texts))]
     ).repartition(n_pairs)
-    out = verify_candidates(
-        candidates,
-        profiles,
-        cfg,
-        texts=spark.createDataFrame(sorted(texts.items()), ["url", "text"]),
-    )
+    out = verify_candidates(candidates, profiles, cfg)
     got = {(r["url_a"], r["url_b"]): (r["lcs_len"], r["is_dup"]) for r in out.collect()}
 
     want = {}

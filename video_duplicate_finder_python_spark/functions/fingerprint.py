@@ -70,6 +70,19 @@ def _rolling_hashes(data: np.ndarray, window: int) -> np.ndarray:
         return acc
 
 
+def _chunk_spans(data: np.ndarray, window: int, mask_bits: int) -> list[tuple[int, int]]:
+    """``(lo, hi)`` byte spans of the content-defined chunks of ``data``,
+    covering it end to end; none when it is shorter than one window."""
+    n = data.shape[0]
+    if n < window:
+        return []
+    mask = np.uint64((1 << mask_bits) - 1)
+    # cut AFTER the window that hit the mask: boundary at i + window
+    cuts = np.flatnonzero((_rolling_hashes(data, window) & mask) == 0) + window
+    bounds = [0, *cuts.tolist(), n]
+    return list(zip(bounds, bounds[1:]))
+
+
 def cdc_fingerprints(
     text: str | None,
     window: int = 48,
@@ -79,34 +92,16 @@ def cdc_fingerprints(
     """Distinct 64-bit fingerprints of the content-defined chunks of ``text``."""
     if text is None:
         return []
-    data = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-    n = data.shape[0]
-    if n < window:
-        return []
-    mask = np.uint64((1 << mask_bits) - 1)
-    hashes = _rolling_hashes(data, window)
-    # cut AFTER the window that hit the mask: boundary at i + window
-    cuts = np.flatnonzero((hashes & mask) == 0) + window
-    bounds = [0, *cuts.tolist(), n]
-    raw = bytes(data)
+    raw = text.encode("utf-8")
+    data = np.frombuffer(raw, dtype=np.uint8)
     fps = {
         int.from_bytes(
             blake2b(raw[lo:hi], digest_size=8).digest(), "big", signed=True
         )
-        for lo, hi in zip(bounds, bounds[1:])
+        for lo, hi in _chunk_spans(data, window, mask_bits)
         if hi - lo >= min_chunk
     }
     return sorted(fps)
-
-
-def _chunk_spans(data: np.ndarray, window: int, mask_bits: int) -> list[tuple[int, int]]:
-    n = data.shape[0]
-    if n < window:
-        return []
-    mask = np.uint64((1 << mask_bits) - 1)
-    cuts = np.flatnonzero((_rolling_hashes(data, window) & mask) == 0) + window
-    bounds = [0, *cuts.tolist(), n]
-    return list(zip(bounds, bounds[1:]))
 
 
 def anchored_common_span_len(

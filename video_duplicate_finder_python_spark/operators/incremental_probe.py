@@ -37,8 +37,8 @@ does:
   sees the url + match count instead of a silent quadratic explosion
   (within-batch pairs are dropped if EITHER endpoint overflows);
 - exact verification is the pipeline's verify front end,
-  ``verify_candidates``, in the shape the pipeline uses for small
-  candidate sets: ONE broadcast profile frame ``(url, text, simhash,
+  ``verify_candidates``, in the shape the pipeline uses when its
+  profiles fit a broadcast: ONE broadcast profile frame ``(url, text, simhash,
   shingles)`` for the batch plus the matched store docs (tiny by
   construction), shingled in one pass and materialized. Both sides of
   the scoring join read one broadcast of it and the span check reads the
@@ -105,7 +105,7 @@ from pyspark.sql import functions as F
 from ..config import DedupConfig
 from .candidate_keys import candidate_keys
 from .signature_stage import compute_signatures
-from .verify import broadcast_profiles, verify_candidates
+from .verify import verify_candidates, verify_profiles
 
 
 def probe_near_dups(
@@ -239,8 +239,9 @@ def probe_near_dups(
     # the verify profile frame (url, text, simhash, shingles) for exactly
     # the urls verify will touch: the batch, plus the matched store rows
     # (broadcast left-semi — tiny after the cap), shingled in ONE pass
-    # (verify.broadcast_profiles). Its REBALANCE sits above the semi-join,
-    # so the store scan keeps its own splits and is never shuffled.
+    # (verify.verify_profiles) and broadcast. Its REBALANCE sits above the
+    # semi-join, so the store scan keeps its own splits and is never
+    # shuffled.
     matched_old = store.join(
         F.broadcast(
             cand.where(~F.col("is_new_other")).select(F.col("other_url").alias("url"))
@@ -256,7 +257,7 @@ def probe_near_dups(
         [matched_old, sigs_new.select("url", "text", "simhash")],
         key=lambda df: not df.schema["url"].nullable,
     )
-    profiles = broadcast_profiles(first.unionByName(second), cfg)
+    profiles = F.broadcast(verify_profiles(first.unionByName(second), cfg))
     if not substring:
         profiles = profiles.drop("text")
 

@@ -410,15 +410,14 @@ def suffix_array_pairs(
     return pairs
 
 
-def suffix_array_candidates(
-    rep_docs: DataFrame, cfg
-) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-    """Pipeline candidate-source adapter (same ``(pairs, dropped, cached)``
-    contract as lsh/simhash/substring): groups ``rep_docs(url, text)`` by
-    ``cfg.suffix_group_expr`` and emits ``(url_a, url_b, lcs_hint)`` — the
-    hint is the operator's exact LCS length, so verify can trust it
-    directly instead of re-deriving the span (the suffix-array walk already
-    *proves* a >= substring_min_len common substring; see _group_pairs)."""
+def suffix_array_candidates(rep_docs: DataFrame, cfg) -> tuple[DataFrame, DataFrame]:
+    """Pipeline candidate source → ``(pairs, dropped)``: groups
+    ``rep_docs(url, text)`` by ``cfg.suffix_group_expr`` and emits
+    ``(url_a, url_b, lcs_hint)`` — the hint is the operator's exact LCS
+    length, so verify can trust it directly instead of re-deriving the
+    span (the suffix-array walk already *proves* a >= substring_min_len
+    common substring; see _group_pairs) — plus the one-row
+    ``dropped_bucket_members`` count of docs the group caps left out."""
     pairs, dropped = _pairs_frames(
         rep_docs,
         F.expr(cfg.suffix_group_expr),
@@ -427,8 +426,4 @@ def suffix_array_candidates(
         max_block_docs=32,
         max_chars_per_group=cfg.suffix_max_chars_per_group,
     )
-    return (
-        pairs.select("url_a", "url_b", F.col("lcs_len").alias("lcs_hint")),
-        dropped,
-        [],
-    )
+    return pairs.select("url_a", "url_b", F.col("lcs_len").alias("lcs_hint")), dropped

@@ -7,23 +7,25 @@ word-shingle Jaccard — computed fully JVM-side from the pre-computed
 shingle-hash arrays (``array_intersect`` / ``array_union``), plus the exact
 64-bit SimHash Hamming distance as ``bit_count(a ^ b)``.
 
-Shape notes (both matter at 100 TB):
-- at scale ``cand_profiles`` carries ONLY ``(url, shingles, simhash)`` —
-  document text never enters the big candidates⋈profiles join. Texts are
-  joined in a second pass restricted to the (tiny) subset of
-  substring-source candidates that FAILED the Jaccard test; only those pay
-  the ~8 KB/doc text transfer and the anchored-common-span pandas UDF
-  (functions/fingerprint.py:anchored_common_span_len).
-- a caller whose candidate docs are known to be small (the pipeline
-  when their estimated profile bytes fit the session's broadcast limit,
-  and the incremental probe always) passes profiles WITH a ``text``
-  column, broadcast: the scoring join then carries each side's text,
-  keeps it only on the rows the span check needs, and the check reads
-  it from there. That drops the failed-url set (a distinct shuffle and
-  its broadcast), the texts scan and the two text broadcasts: Spark
-  jobs that at a few hundred pairs cost ~0.1 CPU-s of driver and JVM
-  work each and carry no data decision (README "Scale design").
-- either way the span rows pass an AQE ``REBALANCE`` before the UDF, so
+Shape notes:
+- ``cand_profiles`` is ONE frame ``(url, text, simhash, shingles)`` for
+  every url of a candidate pair (``verify_profiles``): the pipeline
+  builds it at every candidate-set size, the incremental probe for each
+  batch. Both scoring-join sides read it and its texts feed the span
+  check, so the corpus texts are scanned once. The scoring join carries
+  each side's text and keeps it only on the rows the span check needs
+  (substring-source pairs that FAILED the Jaccard test with no hint);
+  only those pay the anchored-common-span pandas UDF
+  (functions/fingerprint.py:anchored_common_span_len). A separate text
+  fetch for those rows (a distinct shuffle of their urls, a second
+  texts scan, two text broadcasts) measured slower at 50k docs than
+  carrying the text, and each of its Spark jobs carries no data
+  decision (README "Scale design").
+- a caller broadcasts the profile frame when its estimated bytes fit the
+  session's broadcast limit (the pipeline's ``_profiles_fit_broadcast``;
+  the probe always, its batch is small). Without ``text`` (the probe's
+  ``substring=False``) the span check is skipped: ``lcs_len`` stays NULL.
+- the span rows pass an AQE ``REBALANCE`` before the UDF, so
   the span stage's task count follows the bytes of text it checks, not
   the scored frame's partition count: a handful of pairs is one Python
   task (each task has a fixed start-up cost, README "Scale design"), a
@@ -47,7 +49,7 @@ Shape notes (both matter at 100 TB):
 - the scored frame is cut with a lazy ``localCheckpoint`` before
   branching, so the fast/slow split costs one execution of the scoring
   join, and what is kept is the scalar-only frame (~tens of bytes/pair,
-  plus the slow rows' texts when carried), not shingle arrays. Its blocks
+  plus the slow rows' texts), not shingle arrays. Its blocks
   are freed by the ContextCleaner once the frame is unreachable; there is
   no handle to unpersist.
 """
@@ -67,9 +69,9 @@ from ..functions.signatures import make_shingles_udf
 def _make_span_udf(window: int, mask_bits: int):
     @F.pandas_udf(T.IntegerType())
     def span_udf(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
-        # a missing text (caller passed a partial texts frame) yields a
-        # NULL span, not 0 — downstream is_dup then falls back to the
-        # Jaccard test alone instead of silently asserting "no shared span"
+        # a NULL profile text yields a NULL span, not 0 — downstream
+        # is_dup then falls back to the Jaccard test alone instead of
+        # silently asserting "no shared span"
         return pd.Series(
             [
                 None
@@ -83,15 +85,16 @@ def _make_span_udf(window: int, mask_bits: int):
     return span_udf
 
 
-def broadcast_profiles(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """``docs(url, text, simhash)`` — every url of a small candidate set —
-    → the broadcast profile frame ``(url, text, simhash, shingles)`` both
-    scoring-join sides and the span check read (module docstring). One
-    AQE ``REBALANCE`` sizes the shingle stage to the docs' bytes (one
-    Python task at a few hundred docs, not one per upstream split), the
-    shingle UDF runs once, and a lazy ``localCheckpoint`` cuts the frame
-    so its readers share one computation and one plan leaf."""
-    return F.broadcast(
+def verify_profiles(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """``docs(url, text, simhash)`` — every url of a candidate set — →
+    the profile frame ``(url, text, simhash, shingles)`` both scoring-join
+    sides and the span check read (module docstring). One AQE
+    ``REBALANCE`` sizes the shingle stage to the docs' bytes (one Python
+    task at a few hundred docs, not one per upstream split), the shingle
+    UDF runs once, and a lazy ``localCheckpoint`` cuts the frame so its
+    readers share one computation and one plan leaf. The caller decides
+    whether to broadcast it."""
+    return (
         docs.hint("rebalance")
         .withColumn("shingles", make_shingles_udf(cfg.shingle_k)(F.col("text")))
         .localCheckpoint(eager=False)
@@ -99,10 +102,7 @@ def broadcast_profiles(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
 
 
 def verify_candidates(
-    candidates: DataFrame,
-    cand_profiles: DataFrame,
-    cfg: DedupConfig,
-    texts: DataFrame | None = None,
+    candidates: DataFrame, cand_profiles: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
     """Score every candidate pair; flag duplicates.
 
@@ -112,16 +112,15 @@ def verify_candidates(
     pairs whose shared span it has walked), so those pairs skip the
     anchored-span recomputation entirely: the hint IS their ``lcs_len``.
     ``cand_profiles(url, shingles, simhash[, text])`` — profiles for (at
-    least) every url appearing in a candidate pair; shingles are
-    recomputed for just the candidate url set upstream (candidates are a
-    tiny fraction of the corpus, so that is far cheaper than persisting
-    full shingle arrays through the signature checkpoint). With a
-    ``text`` column the anchored-span check reads its texts from the
-    profiles and ``texts`` is ignored (module docstring).
-    ``texts(url, text)`` — consulted ONLY for substring-source pairs below
-    the Jaccard threshold with no hint (the anchored-span check); pass
-    None (with text-less profiles) to skip the substring confirmation
-    entirely (lcs_len stays null).
+    least) every url appearing in a candidate pair (``verify_profiles``);
+    shingles are recomputed for just the candidate url set upstream
+    (candidates are a tiny fraction of the corpus, so that is far cheaper
+    than persisting full shingle arrays through the signature
+    checkpoint). The anchored-span check reads its texts from the
+    profiles, for substring-source pairs below the Jaccard threshold with
+    no hint; a NULL text gives a NULL ``lcs_len``, and profiles without
+    a ``text`` column skip the substring confirmation entirely (every
+    ``lcs_len`` without a hint stays NULL).
     → ``pairs(url_a, url_b, jaccard, hamming, lcs_len, sources, *extra,
     is_dup)``, where ``extra`` are the candidates' other columns, passed
     through unchanged.
@@ -139,8 +138,7 @@ def verify_candidates(
     candidates = candidates.select(
         "url_a", "url_b", "sources", hint_col.alias("_lcs_hint"), *extra
     )
-    # profile texts ride the scoring join; without them a separate
-    # ``texts`` frame is joined to the slow rows only, further below
+    # profile texts ride the scoring join to the span check
     carried = "text" in cand_profiles.columns
 
     def side(s: str) -> DataFrame:
@@ -190,8 +188,7 @@ def verify_candidates(
             ),
         )
         # scalars only (plus the slow rows' texts when carried); branched
-        # below into the fast and slow sets (and, without carried texts,
-        # the failed-url projections). A lazy localCheckpoint caches
+        # below into the fast and slow sets. A lazy localCheckpoint caches
         # it like the old persist did AND truncates the subtree out of the
         # downstream plan — the scoring join's lineage otherwise
         # re-appears once per branch in the final logical plan, and for
@@ -204,40 +201,14 @@ def verify_candidates(
 
     fast = scored.where(~needs_lcs).withColumn("lcs_len", F.col("_lcs_hint"))
     needed = scored.where(needs_lcs)
-    if not carried and texts is None:
-        slow = needed.withColumn("lcs_len", F.lit(None).cast("int"))
-    else:
-        if not carried:
-            # ONE streamed scan of the corpus texts, semi-filtered by the
-            # (tiny, broadcast) failed-substring url set — broadcast
-            # left-semi is a supported build-right plan, unlike
-            # broadcasting the preserved side of an outer join, so the
-            # corpus text is never shuffled for a handful of pairs. The
-            # result is at most 2·|needed| rows, so the two per-side joins
-            # below are broadcast-trivially small.
-            need_urls = (
-                needed.select(F.col("url_a").alias("url"))
-                .union(needed.select(F.col("url_b").alias("url")))
-                .distinct()
-            )
-            t_small = texts.join(F.broadcast(need_urls), "url", "left_semi")
-            tx_a = t_small.select(
-                F.col("url").alias("url_a"), F.col("text").alias("_tx_a")
-            )
-            tx_b = t_small.select(
-                F.col("url").alias("url_b"), F.col("text").alias("_tx_b")
-            )
-            # LEFT joins preserve every needs_lcs pair: a pair whose url is
-            # absent from `texts` keeps its row with a NULL text → NULL
-            # lcs_len, instead of vanishing from the result entirely
-            needed = needed.join(F.broadcast(tx_a), "url_a", "left").join(
-                F.broadcast(tx_b), "url_b", "left"
-            )
+    if carried:
         span_udf = _make_span_udf(cfg.cdc_window, cfg.cdc_mask_bits)
         # the REBALANCE sizes the span stage by text bytes (module docstring)
         slow = needed.hint("rebalance").withColumn(
             "lcs_len", span_udf(F.col("_tx_a"), F.col("_tx_b"))
         )
+    else:
+        slow = needed.withColumn("lcs_len", F.lit(None).cast("int"))
     cols = ["url_a", "url_b", "jaccard", "hamming", "lcs_len", "sources", *extra]
     return fast.select(*cols).unionByName(slow.select(*cols)).withColumn(
         "is_dup",

@@ -47,7 +47,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
-from ..functions.signatures import make_shingles_udf
 from ..functions.text import extract_text_col
 from ..operators.signature_stage import compute_signatures
 from ..operators.bucket_join import bucket_pairs
@@ -56,7 +55,7 @@ from ..operators.connected_components import connected_components
 from ..operators.exact import exact_edges_from, exact_representatives
 from ..operators.shuffle_width import narrowed_width, shuffle_width
 from ..operators.suffix_array import suffix_array_candidates
-from ..operators.verify import broadcast_profiles, verify_candidates
+from ..operators.verify import verify_candidates, verify_profiles
 from ..sources.checkpoint import CheckpointManager, observed_metrics
 
 
@@ -258,73 +257,49 @@ class DedupPipeline:
         return min(2 * cands, docs) * 5 * text_bytes / docs <= limit
 
     def _cand_profiles(
-        self,
-        candidates: DataFrame,
-        rep_docs: DataFrame,
-        signatures: DataFrame,
-        width: int | None = None,
+        self, candidates: DataFrame, rep_docs: DataFrame, signatures: DataFrame
     ) -> DataFrame:
-        """The verify profiles of every url in a candidate pair.
+        """The verify profiles ``(url, text, simhash, shingles)`` of every
+        url in a candidate pair, at every candidate-set size: rep_docs'
+        texts and the signatures' simhashes, each semi-joined to the
+        candidate url set, through ``verify.verify_profiles`` (the probe's
+        shape, operators/incremental_probe.py). Both scoring-join sides
+        read the frame and its texts feed the span check (verify carries
+        them only for the pairs that need them), so rep_docs is scanned
+        once.
 
-        When they fit a broadcast (``_profiles_fit_broadcast``): ONE
-        profile frame ``(url, text, simhash, shingles)`` from
-        ``verify.broadcast_profiles``, the probe's shape
-        (operators/incremental_probe.py) — rep_docs semi-joined to the
-        broadcast candidate urls, simhash broadcast-joined from the
-        signatures semi-joined to the same urls. Both scoring-join sides
-        read the same broadcast and its texts feed the span check (verify
-        carries them only for the pairs that need them), so nothing is
-        shuffled or read twice.
-
-        Otherwise ``(url, shingles, simhash)``, deliberately WITHOUT text
-        (at 10^5 candidate docs the texts are ~1 GB): verify fetches texts
-        separately for the small substring-confirmation branch only.
-        ``width`` (from the materialized candidates row count, the
-        ``narrowed_width`` rule): when the candidate set is provably small,
-        the url-set dedup and the profile joins run at a data-sized width,
-        and the semi-joins against the corpus-sized rep_docs/signatures
-        broadcast the url set so the corpus side is never shuffled for it
-        (measured at 50k docs/local[2], 7,320 candidates: pairs 9.6 s
-        against 12.7 s for the shuffled shape). ``width=None``
-        (unknown/large) keeps the shuffled shape."""
+        The url set's size picks how it meets the corpus-sized inputs:
+        when the profiles fit a broadcast (``_profiles_fit_broadcast``)
+        the raw url set is broadcast and so is the profile frame; when the
+        candidate set is provably small (the ``narrowed_width`` rule on
+        the materialized candidates row count) the url set is deduped at
+        a data-sized width and broadcast, so the corpus side is never
+        shuffled for it; otherwise (unknown or large) it is deduped at
+        the session width and the semi-joins shuffle."""
         cand_urls = (
             candidates.select(F.col("url_a").alias("url"))
             .union(candidates.select(F.col("url_b").alias("url")))
         )
-        if self._profiles_fit_broadcast():
+        fit = self._profiles_fit_broadcast()
+        width = narrowed_width(self.spark, self._known_rows("candidates"), 2000)
+        if fit:
             # a semi-join's build side needs no distinct: a url repeated
             # across pairs is one more entry in a small hash relation
-            urls_b = F.broadcast(cand_urls)
-            sims = signatures.select("url", "simhash").join(urls_b, "url", "left_semi")
-            return broadcast_profiles(
-                rep_docs.join(urls_b, "url", "left_semi")
-                .select("url", "text")
-                .join(F.broadcast(sims), "url"),
-                self.cfg,
-            )
-        shingles_udf = make_shingles_udf(self.cfg.shingle_k)
-        if width is not None:
-            urls_b = F.broadcast(cand_urls.repartition(width, "url").distinct())
-            cand_docs = rep_docs.join(urls_b, "url", "left_semi").select(
-                "url", "text"
-            )
-            sig_small = signatures.select("url", "simhash").join(
-                urls_b, "url", "left_semi"
-            )
-            return (
-                cand_docs.withColumn("shingles", shingles_udf(F.col("text")))
-                .drop("text")
-                .repartition(width, "url")
-                .join(sig_small.repartition(width, "url"), "url")
-            )
-        cand_docs = rep_docs.join(cand_urls.distinct(), "url", "left_semi").select(
-            "url", "text"
+            urls = F.broadcast(cand_urls)
+        elif width is not None:
+            urls = F.broadcast(cand_urls.repartition(width, "url").distinct())
+        else:
+            urls = cand_urls.distinct()
+        sims = signatures.select("url", "simhash").join(urls, "url", "left_semi")
+        if fit or width is not None:
+            # a broadcast url set's simhashes are as few: broadcast them
+            # too, so no text is shuffled before the profile REBALANCE
+            sims = F.broadcast(sims)
+        profiles = verify_profiles(
+            rep_docs.join(urls, "url", "left_semi").select("url", "text").join(sims, "url"),
+            self.cfg,
         )
-        return (
-            cand_docs.withColumn("shingles", shingles_udf(F.col("text")))
-            .drop("text")
-            .join(signatures.select("url", "simhash"), "url")
-        )
+        return F.broadcast(profiles) if fit else profiles
 
     # candidate-source tag → drop-counter label. "suffix" is the
     # corpus-wide CDC-fingerprint source; "suffix_array" the opt-in
@@ -403,7 +378,7 @@ class DedupPipeline:
                 )
             )
         if "suffix_array" in cfg.candidate_sources:
-            sa_pairs, sa_dropped, sa_caches = suffix_array_candidates(rep_docs, cfg)
+            sa_pairs, sa_dropped = suffix_array_candidates(rep_docs, cfg)
             tagged.append(
                 sa_pairs.select(
                     "url_a",
@@ -412,7 +387,6 @@ class DedupPipeline:
                     F.col("lcs_hint").cast("int").alias("lcs_hint"),
                 )
             )
-            caches.extend(sa_caches)
         union = reduce(DataFrame.unionByName, tagged)
         # the cross-source dedup groupBy: at a known-small input, pin its
         # exchange to the same data-derived width as the bucket shuffle
@@ -546,12 +520,8 @@ class DedupPipeline:
         fp_pairs = self._fp("pairs", fp_cands, fp_exact)
 
         def build_pairs() -> DataFrame:
-            width = narrowed_width(self.spark, self._known_rows("candidates"), 2000)
             return verify_candidates(
-                candidates,
-                self._cand_profiles(candidates, rep_docs, signatures, width),
-                cfg,
-                texts=rep_docs.select("url", "text"),
+                candidates, self._cand_profiles(candidates, rep_docs, signatures), cfg
             )
 
         pairs = self._stage(

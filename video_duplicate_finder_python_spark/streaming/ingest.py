@@ -171,12 +171,6 @@ class SignatureStore:
             {"parts": parts, "n_parts": self.n_parts, "rows": rows},
         )
 
-    def part_path(self, part: int) -> str | None:
-        m = self.manifest()
-        if m is None or str(part) not in m:
-            return None
-        return self._spark_uri(m[str(part)])
-
     # -- schema (stored once so empty partitions stay readable) ---------------
     def _schema(self) -> T.StructType | None:
         doc = self._read_json(self._join("_SCHEMA.json"))
