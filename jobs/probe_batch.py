@@ -64,6 +64,7 @@ def main(argv: list[str] | None = None) -> None:
         probe_near_dups,
     )
     from video_duplicate_finder_python_spark.sources.pages import read_pages
+    from video_duplicate_finder_python_spark.sources.storage import Storage
 
     spark = SparkSession.builder.appName("vdf-probe").getOrCreate()
     spark.sparkContext.setJobGroup("vdf-probe", "incremental near-dup probe", True)
@@ -84,21 +85,25 @@ def main(argv: list[str] | None = None) -> None:
     )
     out = pairs if args.keep_all_scored else pairs.where("is_dup")
     out.write.mode("overwrite").parquet(args.output)
-    written = spark.read.parquet(args.output)
-    rows_written = written.count()
+    # written rows from the output's parquet footers: no Spark job
+    rows_written = sum(Storage(args.output).footer_rows())
     # "pairs" always means VERIFIED dup pairs, regardless of
     # --keep-all-scored (which only widens what lands in --output)
     n_pairs = (
-        written.where("is_dup").count() if args.keep_all_scored else rows_written
+        spark.read.schema(out.schema).parquet(args.output).where("is_dup").count()
+        if args.keep_all_scored
+        else rows_written
     )
     # the overflow count is reported UNCONDITIONALLY — diverted
     # boilerplate docs must never be silent (operator contract), with or
     # without an --overflow-output sink
     if args.overflow_output:
         overflow.write.mode("overwrite").parquet(args.overflow_output)
-        n_overflow = spark.read.parquet(args.overflow_output).count()
+        n_overflow = sum(Storage(args.overflow_output).footer_rows())
     else:
-        n_overflow = overflow.count()
+        # the rows are batch urls: collecting them is one job over the
+        # materialized cut, where count() would run a second one
+        n_overflow = len(overflow.collect())
 
     print(
         "VDF_PROBE_SUMMARY "

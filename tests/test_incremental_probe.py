@@ -256,6 +256,8 @@ def test_probe_batch_job(spark, store, tmp_path):
     )
     summary = json.loads(line.split(" ", 1)[1])
     assert summary["pairs"] == 1
+    assert summary["rows_written"] == 1
+    assert summary["overflow_docs"] == 0
     rows = spark.read.parquet(out).collect()
     assert rows[0].new_url == "https://new.example/exact"
     assert rows[0].other_url == "https://old.example/0"

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import shutil
+from pathlib import Path
 
 import pytest
 
@@ -108,3 +109,68 @@ def test_changed_config_invalidates(spark, ckdir):
     ).run(pages)
     assert not res.metrics["docs"]["cached"]
 
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
+
+
+def test_durable_run_on_a_uri_checkpoint_dir(spark, tmp_path):
+    """``--checkpoint-dir s3://…`` is the documented deployment: a
+    checkpoint dir given as a URI (here ``file://``) runs every stage,
+    resumes every stage cached, and gives the in-memory run's output."""
+    pages = pages_spark_df(spark, generate_corpus(seed=5, n_docs=60))
+    uri = (tmp_path / "ck").as_uri()
+    assert uri.startswith("file:///")
+
+    res1 = DedupPipeline(spark, DedupConfig(), checkpoint_dir=uri).run(pages)
+    assert len(res1.metrics) == 7
+    assert not any(m["cached"] for m in res1.metrics.values())
+    res2 = DedupPipeline(spark, DedupConfig(), checkpoint_dir=uri).run(pages)
+    assert all(m["cached"] for m in res2.metrics.values()), res2.metrics
+    for name, m in res1.metrics.items():
+        assert res2.metrics[name]["rows_out"] == m["rows_out"], name
+
+    mem = DedupPipeline(spark, DedupConfig()).run(pages)
+    assert mem.metrics["clusters"]["rows_out"] > 0
+    for res in (res1, res2):
+        assert _rows(res.clusters) == _rows(mem.clusters)
+        assert _rows(res.pairs) == _rows(mem.pairs)
+
+
+def test_crash_between_stage_write_and_its_meta_recomputes(spark, ckdir, monkeypatch):
+    """A run that dies after a stage's parquet overwrite but before its
+    ``_metrics.json`` must not leave the previous run's meta describing
+    the new rows: the overwrite deleted the old meta with the old data,
+    so the next run recomputes that stage."""
+    from video_duplicate_finder_python_spark.sources.storage import Storage
+
+    pages = pages_spark_df(spark, generate_corpus(seed=5, n_docs=60))
+    cfg_a, cfg_b = DedupConfig(), DedupConfig(jaccard_threshold=0.5)
+    res_a = DedupPipeline(spark, cfg_a, checkpoint_dir=ckdir).run(pages)
+    pairs_a, clusters_a = _rows(res_a.pairs), _rows(res_a.clusters)
+
+    write_json = Storage.write_json
+
+    def crash_on_pairs_meta(self, rel, doc):
+        if rel == "pairs/_metrics.json":
+            raise OSError("injected crash before the pairs meta")
+        write_json(self, rel, doc)
+
+    monkeypatch.setattr(Storage, "write_json", crash_on_pairs_meta)
+    with pytest.raises(OSError, match="injected crash"):
+        DedupPipeline(spark, cfg_b, checkpoint_dir=ckdir).run(pages)
+    monkeypatch.undo()
+    # config B's rows are on disk with no meta; they differ from A's
+    assert _rows(spark.read.parquet(f"{ckdir}/pairs")) != pairs_a
+
+    res = DedupPipeline(spark, cfg_a, checkpoint_dir=ckdir).run(pages)
+    assert not res.metrics["pairs"]["cached"]
+    assert _rows(res.pairs) == pairs_a
+    assert _rows(res.clusters) == clusters_a
+
+    # a torn meta reads as no meta: that stage recomputes
+    (Path(ckdir) / "clusters" / "_metrics.json").write_text('{"fingerprint": ')
+    res = DedupPipeline(spark, cfg_a, checkpoint_dir=ckdir).run(pages)
+    assert res.metrics["pairs"]["cached"] and not res.metrics["clusters"]["cached"]
+    assert _rows(res.clusters) == clusters_a

@@ -68,7 +68,9 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
             str(REPO / "jobs" / "run_dedup.py"),
             "--input", str(inp),
             "--output", str(out),
-            "--checkpoint-dir", str(ckpt),
+            # a URI, as the documented s3:// form is: the stage metas and
+            # footer counts must work beside Spark on a scheme-qualified dir
+            "--checkpoint-dir", ckpt.as_uri(),
             "--retention-output", str(tmp_path / "retention"),
             # round-6 (VERDICT r5 #7): the opt-in 4th candidate source runs
             # through the packaged artifact too — host-grouped generalized
@@ -90,6 +92,7 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     assert summary_lines, proc.stdout[-2000:]
     summary = json.loads(summary_lines[-1][len("VDF_DEDUP_SUMMARY "):])
     assert summary["stages"]["clusters"]["rows"] > 0
+    assert (ckpt / "clusters" / "_metrics.json").exists()
 
     # 4. the job's output parquet must be the exact oracle clustering
     import duckdb

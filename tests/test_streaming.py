@@ -8,12 +8,18 @@ from __future__ import annotations
 import hashlib
 from pathlib import Path
 
+import pytest
+
 from video_duplicate_finder_python_spark import DedupConfig
 from video_duplicate_finder_python_spark.corpus import generate_corpus, pages_spark_df
 from video_duplicate_finder_python_spark.streaming.ingest import (
     SignatureStore,
     StreamingSignatureIngest,
 )
+
+
+def _root(store: SignatureStore) -> Path:
+    return Path(store.storage.root)
 
 
 def _file_digests(base: Path, manifest: dict[str, str]) -> dict[str, dict[str, str]]:
@@ -45,7 +51,7 @@ def test_streaming_ingest_incremental(spark, tmp_path):
     store = SignatureStore(spark, store_dir)
     first_rows = store.read().count()
     assert first_rows > 0
-    digests_before = _file_digests(store.base, store.manifest())
+    digests_before = _file_digests(_root(store), store.manifest())
 
     # land more pages; second availableNow pass picks up only the new files
     pages.where("url not like '%/page/1%'").write.mode("append").parquet(src)
@@ -85,10 +91,10 @@ def test_upsert_touches_only_delta_partitions(spark, tmp_path):
     )
     ingest.process_batch(pages_df([f"https://x/{i}" for i in range(60)]), 0)
     store = ingest.store
-    before = _file_digests(store.base, store.manifest())
+    before = _file_digests(_root(store), store.manifest())
 
     ingest.process_batch(pages_df(["https://new/a", "https://new/b"]), 1)
-    after = _file_digests(store.base, store.manifest())
+    after = _file_digests(_root(store), store.manifest())
     changed = {p for p in before if before[p] != after.get(p)}
     assert len(changed) <= 2, changed
     assert ingest.batch_stats[-1]["touched_parts"] <= 2
@@ -114,7 +120,7 @@ def test_store_delete_urls_rewrites_only_touched_parts(spark, tmp_path):
     store = SignatureStore(spark, str(tmp_path / "s"), n_parts=8)
     df = spark.createDataFrame([(f"u{i}", i) for i in range(50)], ["url", "payload"])
     store.swap_in(df)
-    before = _file_digests(store.base, store.manifest())
+    before = _file_digests(_root(store), store.manifest())
 
     removed = store.delete_urls(["u3", "u17"])
     assert removed == 2
@@ -123,7 +129,7 @@ def test_store_delete_urls_rewrites_only_touched_parts(spark, tmp_path):
     assert len(remaining) == 48
 
     # partitions not containing u3/u17 keep their exact files
-    after = _file_digests(store.base, store.manifest())
+    after = _file_digests(_root(store), store.manifest())
     changed = {p for p in before if before[p] != after.get(p)}
     assert 1 <= len(changed) <= 2  # u3 and u17 hash into at most 2 parts
     # rerunning the delete is a no-op (idempotent, reference-style)
@@ -167,14 +173,14 @@ def test_vacuum_removes_unreferenced_generations(spark, tmp_path):
     store.swap_in(df)
     store.delete_urls(["u1"])   # supersedes one partition's generation
     store.delete_urls(["u2"])
-    n_gens_before = len(list(store.base.glob("gen-*")))
+    n_gens_before = len(list(_root(store).glob("gen-*")))
     assert n_gens_before >= 3
 
     removed = store.vacuum()
     assert removed >= 1
     on_disk = {
         f"{g.name}/{p.name}"
-        for g in store.base.glob("gen-*")
+        for g in _root(store).glob("gen-*")
         for p in g.glob("_part=*")
     }
     assert on_disk == set(store.manifest().values())
@@ -237,15 +243,15 @@ def test_vacuum_removes_dead_generation_despite_success_marker(spark, tmp_path):
     store = SignatureStore(spark, str(tmp_path / "s"), n_parts=2)
     df = spark.createDataFrame([(f"u{i}", i) for i in range(10)], ["url", "payload"])
     store.swap_in(df)
-    gen1 = {(store.base / rel).parent.name for rel in store.manifest().values()}
+    gen1 = {(_root(store) / rel).parent.name for rel in store.manifest().values()}
     assert len(gen1) == 1
-    assert (store.base / next(iter(gen1)) / "_SUCCESS").exists()
+    assert (_root(store) / next(iter(gen1)) / "_SUCCESS").exists()
 
     # swap_in again: every partition of gen1 is superseded at once
     store.swap_in(df)
     removed = store.vacuum()
     assert removed == 2
-    remaining_gens = {g.name for g in store.base.glob("gen-*")}
+    remaining_gens = {g.name for g in _root(store).glob("gen-*")}
     assert gen1.isdisjoint(remaining_gens)  # dead gen dir gone, marker and all
     assert store.read().count() == 10
 
@@ -266,7 +272,7 @@ def test_part_rows_backfills_legacy_manifest_compute_on_read(spark, tmp_path):
     assert sum(true_rows.values()) == 20
 
     # simulate a legacy manifest: strip the rows key entirely
-    mpath = store.base / SignatureStore.MANIFEST
+    mpath = _root(store) / SignatureStore.MANIFEST
     doc = json.loads(mpath.read_text())
     del doc["rows"]
     mpath.write_text(json.dumps(doc))
@@ -317,10 +323,52 @@ def test_vacuum_cadence_leaves_no_dead_generations(spark, tmp_path):
     live = set(ingest.store.manifest().values())
     on_disk = {
         f"{p.parent.name}/{p.name}"
-        for p in ingest.store.base.glob("gen-*/_part=*")
+        for p in _root(ingest.store).glob("gen-*/_part=*")
     }
     assert on_disk == live
     assert ingest.store.read().count() == 16
+
+
+def test_store_on_a_file_uri(spark, tmp_path):
+    """The store's URI branch: on a ``file://`` base dir a full load, an
+    upsert, reads, footer row counts and vacuum all work, with Spark
+    reading the URI and the metadata going through pyarrow.fs."""
+    uri = (tmp_path / "s").as_uri()
+    assert uri.startswith("file:///")
+    ingest = StreamingSignatureIngest(spark, uri, DedupConfig(), n_parts=4)
+    ingest.process_batch(
+        _probe_pages_df(spark, [(f"https://a/{i}", f"alpha text {i}") for i in range(8)]), 0
+    )
+    ingest.process_batch(
+        _probe_pages_df(
+            spark,
+            [("https://a/0", "alpha text 0 updated"), ("https://b/0", "beta text 0")],
+        ),
+        1,
+    )
+    store = SignatureStore(spark, uri)
+    assert store.n_parts == 4
+    assert store.storage.uri().startswith("file:")
+    assert [s["store_rows"] for s in ingest.batch_stats] == [8, 9]
+    assert ingest.batch_stats[1]["delta_rows"] == 2
+    got = {r["url"]: r["text"] for r in store.read().collect()}
+    assert len(got) == 9 and got["https://a/0"] == "alpha text 0 updated"
+    # the manifest's counts are the partitions' footer counts
+    rows = store.part_rows()
+    assert sum(rows.values()) == 9
+    assert rows == {
+        p: sum(store.storage.footer_rows(rel)) for p, rel in store.manifest().items()
+    }
+    # the upsert superseded the touched partitions of the first generation
+    assert store.vacuum() == ingest.batch_stats[1]["touched_parts"]
+    on_disk = {f"{p.parent.name}/{p.name}" for p in _root(store).glob("gen-*/_part=*")}
+    assert on_disk == set(store.manifest().values())
+    assert store.read().count() == 9
+    # a corrupt manifest raises: it never reads as "no store", which would
+    # make the next batch replace the whole store
+    (_root(store) / SignatureStore.MANIFEST).write_text('{"parts": ')
+    with pytest.raises(ValueError):
+        SignatureStore(spark, uri)
 
 
 def _probe_pages_df(spark, rows):

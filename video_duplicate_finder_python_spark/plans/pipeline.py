@@ -448,7 +448,7 @@ class DedupPipeline:
         self._cancelled = False
         if input_token is not None:
             token = input_token
-        elif self.ckpt.base_dir is None:
+        elif self.ckpt.storage is None:
             # ephemeral (localCheckpoint) mode persists nothing, so there is
             # no stale checkpoint the digest could invalidate — skip the
             # full-corpus digest scan (one whole pages pass per run)

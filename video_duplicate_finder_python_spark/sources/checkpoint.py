@@ -17,16 +17,16 @@ written stage is read back with the schema it was just written with
 (``spark.read.schema(...)``), and a cached stage with the schema stored in
 its ``_metrics.json``: ``spark.read.parquet`` without a schema runs a
 footer-inference Spark job (~0.1 CPU-s warm) per read. Row counts come
-from the parquet footers (no job), and the stage's ``counters`` callback
-runs AFTER the write, so a counter read from an ``Observation`` on the
-stage's own dataflow (the candidates stage's drop counts) is filled by the
-write instead of costing a job of its own. A meta written without the
+from the parquet footers through sources/storage.py (no job, on a local
+dir or a URI), and the stage's ``counters`` callback runs AFTER the
+write, so a counter read from an ``Observation`` on the stage's own
+dataflow (the candidates stage's drop counts) is filled by the write
+instead of costing a job of its own. A meta written without the
 schema field (older checkpoints) falls back to inference.
 """
 
 from __future__ import annotations
 
-import json
 import time
 from dataclasses import asdict, dataclass, field
 from pathlib import Path
@@ -35,6 +35,8 @@ from typing import Callable
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import StructType
+
+from .storage import Storage
 
 
 @dataclass
@@ -67,6 +69,7 @@ def observed_metrics(obs: Observation) -> dict | None:
 class CheckpointManager:
     """Idempotent, fingerprint-invalidated parquet stage checkpoints.
 
+    ``base_dir`` is a local path or a URI (``file://``, ``s3a://``, ...);
     ``base_dir=None`` disables persistence: stages are materialized with
     ``localCheckpoint`` (still truncates lineage and yields counters) —
     the in-memory mode tests and small jobs use.
@@ -74,52 +77,17 @@ class CheckpointManager:
 
     def __init__(self, spark: SparkSession, base_dir: str | Path | None = None):
         self.spark = spark
-        self.base_dir = Path(base_dir) if base_dir is not None else None
+        self.storage = Storage(base_dir) if base_dir is not None else None
         self.metrics: dict[str, StageMetrics] = {}
 
     # -- internals ---------------------------------------------------------
-    def _meta_path(self, name: str) -> Path:
-        assert self.base_dir is not None
-        return self.base_dir / name / "_metrics.json"
-
     def _read_meta(self, name: str) -> dict | None:
-        p = self._meta_path(name)
-        if not p.exists():
-            return None
+        """The stage's meta, or None: a missing, torn or unreadable
+        ``_metrics.json`` means recompute."""
         try:
-            return json.loads(p.read_text())
-        except (json.JSONDecodeError, OSError):
+            return self.storage.read_json(f"{name}/_metrics.json")
+        except (ValueError, OSError):
             return None
-
-    @staticmethod
-    def _footer_partition_counts(path: str) -> tuple[int, list[dict]]:
-        """Per-partition row counts + total from the parquet footers of the
-        freshly-written checkpoint — pure driver-side metadata reads, zero
-        Spark jobs (each ``part-*`` file is one write-task's partition).
-        The round-1 shape ran a count() job plus a groupBy(partition_id)
-        job per stage; those two extra actions per stage were the largest
-        chunk of the serial residue that held scaling efficiency under the
-        0.8 bar. On Iceberg the manifest row counts provide the same
-        numbers, also without a scan."""
-        import pyarrow.parquet as pq
-
-        parts = []
-        total = 0
-        for i, f in enumerate(sorted(Path(path).glob("part-*"))):
-            n = pq.ParquetFile(f).metadata.num_rows
-            total += n
-            parts.append({"id": i, "rows": int(n)})
-        return total, parts
-
-    def _partition_counts(self, path: str, out: DataFrame) -> tuple[int, list[dict]]:
-        """Footer counts for local checkpoints; for a non-local ``base_dir``
-        (hdfs://, s3a:// — the real deployment) pathlib can't see the
-        files, so fall back to one Spark count() job over the just-written
-        (page-cached) checkpoint ``out``. On Iceberg the manifest row
-        counts replace both branches."""
-        if Path(path).exists():
-            return self._footer_partition_counts(path)
-        return out.count(), []
 
     def _read(self, path: str, schema: StructType | None) -> DataFrame:
         reader = self.spark.read
@@ -138,9 +106,9 @@ class CheckpointManager:
     ) -> DataFrame:
         """Return the stage's DataFrame, recomputing only on fingerprint miss."""
         lineage = lineage or []
-        if self.base_dir is not None:
+        if self.storage is not None:
             meta = self._read_meta(name)
-            path = str(self.base_dir / name)
+            path = self.storage.uri(name)
             if meta is not None and meta.get("fingerprint") == fingerprint:
                 schema = meta.get("schema")
                 df = self._read(path, StructType.fromJson(schema) if schema else None)
@@ -159,7 +127,7 @@ class CheckpointManager:
         t0 = time.monotonic()
         df = build()
 
-        if self.base_dir is None:
+        if self.storage is None:
             # lazy checkpoint + count: materialization and row counting in
             # ONE job (eager localCheckpoint followed by count() was two
             # driver-blocking actions per stage — serial scaling residue)
@@ -167,10 +135,12 @@ class CheckpointManager:
             rows = out.count()
             parts = []
         else:
-            path = str(self.base_dir / name)
+            path = self.storage.uri(name)
             df.write.mode("overwrite").parquet(path)
             out = self._read(path, df.schema)
-            rows, parts = self._partition_counts(path, out)
+            counts = self.storage.footer_rows(name)
+            rows = sum(counts)
+            parts = [{"id": i, "rows": n} for i, n in enumerate(counts)]
         # after the write: observed counters are complete only once the
         # action over the stage's dataflow has run
         extra = counters() if counters is not None else {}
@@ -187,9 +157,11 @@ class CheckpointManager:
             counters=extra,
         )
         self.metrics[name] = m
-        if self.base_dir is not None:
+        if self.storage is not None:
+            # inside the stage dir: the next overwrite deletes it with the
+            # old rows, so a crash before the new meta means recompute
             meta = {**asdict(m), "schema": df.schema.jsonValue()}
-            self._meta_path(name).write_text(json.dumps(meta, indent=1))
+            self.storage.write_json(f"{name}/_metrics.json", meta)
         return out
 
     def metrics_summary(self) -> dict[str, dict]:

@@ -28,9 +28,7 @@ ingest.
 
 from __future__ import annotations
 
-import json
 import time
-from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +39,7 @@ from ..functions.text import extract_text_col
 from ..operators.exact import content_hash_col
 from ..operators.signature_stage import compute_signatures
 from ..sources.checkpoint import observed_metrics
+from ..sources.storage import Storage
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -66,78 +65,35 @@ class SignatureStore:
     rely on.
 
     All metadata IO (manifest, schema, parquet footer row counts, GC
-    listing) goes through ``pyarrow.fs``, so the store works unchanged on a
-    remote ``s3://``/``hdfs://`` base dir — the stated real deployment —
-    not just local paths (the round-3 shape read footers via local pathlib
-    only, which on a remote store silently recorded 0 rows per partition).
-    On real Iceberg the seam in sources/iceberg.py replaces this machinery.
+    listing) goes through the storage seam (sources/storage.py, the one
+    stage checkpoints use), so the store works unchanged on a ``file://``,
+    ``s3://`` or ``hdfs://`` base dir, not just a local path. On real
+    Iceberg the seam in sources/iceberg.py replaces this machinery.
     """
 
     MANIFEST = "_MANIFEST"
+    SCHEMA = "_SCHEMA.json"
 
     def __init__(self, spark: SparkSession, base_dir: str, n_parts: int = 16):
-        from pyarrow import fs as pafs
-
         self.spark = spark
-        self.base_uri = str(base_dir)
-        if "://" in self.base_uri:
-            # pyarrow speaks s3://, not Hadoop's s3a:// alias
-            self.fs, self.base_path = pafs.FileSystem.from_uri(
-                self.base_uri.replace("s3a://", "s3://", 1)
-            )
-            self.base = None  # no local Path view of a remote store
-        else:
-            self.fs = pafs.LocalFileSystem()
-            self.base = Path(base_dir)
-            # absolute path: pyarrow's LocalFileSystem and Spark resolve
-            # relative paths against different working directories
-            self.base_path = str(self.base.resolve())
-            self.base_uri = self.base_path
-        self.fs.create_dir(self.base_path, recursive=True)
+        self.storage = Storage(base_dir)
+        self.storage.fs.create_dir(self.storage.root, recursive=True)
         # an existing store's physical layout wins: n_parts decides which
         # partition a url hashes into, so opening with a different value
         # would silently corrupt the store (wrong pruning, stale duplicate
         # rows after upsert, deletes that miss rows). Adopt the persisted
         # value; the requested one only applies to a fresh store.
-        stored = self._read_manifest_file()
+        stored = self.storage.read_json(self.MANIFEST)
         if stored is not None and "n_parts" in stored:
             self.n_parts = int(stored["n_parts"])
         else:
             self.n_parts = n_parts
 
-    # -- fs helpers ----------------------------------------------------------
-    def _join(self, *rel: str) -> str:
-        return "/".join([self.base_path.rstrip("/"), *rel])
-
-    def _spark_uri(self, *rel: str) -> str:
-        """Path as Spark should see it (original scheme, e.g. s3a://)."""
-        return "/".join([self.base_uri.rstrip("/"), *rel])
-
-    def _read_json(self, path: str) -> dict | None:
-        from pyarrow import fs as pafs
-
-        if self.fs.get_file_info(path).type == pafs.FileType.NotFound:
-            return None
-        with self.fs.open_input_stream(path) as f:
-            return json.loads(f.read().decode())
-
-    def _write_json_atomic(self, path: str, doc: dict) -> None:
-        tmp = path + ".tmp"
-        with self.fs.open_output_stream(tmp) as f:
-            f.write(json.dumps(doc).encode())
-        # atomic on local/HDFS rename; copy+delete on S3 (readers there
-        # should use the Iceberg seam for true snapshot isolation)
-        self.fs.move(tmp, path)
-
     # -- manifest ------------------------------------------------------------
-    def _manifest_path(self) -> str:
-        return self._join(self.MANIFEST)
-
-    def _read_manifest_file(self) -> dict | None:
-        return self._read_json(self._manifest_path())
-
+    # read strictly: a corrupt _MANIFEST raises instead of reading as "no
+    # store", which would make process_batch swap_in one batch over it
     def manifest(self) -> dict[str, str] | None:
-        doc = self._read_manifest_file()
+        doc = self.storage.read_json(self.MANIFEST)
         return None if doc is None else doc["parts"]
 
     def part_rows(self) -> dict[str, int]:
@@ -152,37 +108,28 @@ class SignatureStore:
         counts persist the next time a write path calls
         ``_write_manifest`` (every upsert/swap does), which already
         assumes the store's single-writer contract."""
-        doc = self._read_manifest_file()
+        doc = self.storage.read_json(self.MANIFEST)
         if doc is None:
             return {}
         parts = doc.get("parts", {})
         rows = {k: int(v) for k, v in doc.get("rows", {}).items()}
         for p in parts:
             if p not in rows:
-                rows[p] = self._dir_footer_rows(self._join(parts[p]))
+                rows[p] = sum(self.storage.footer_rows(parts[p]))
         return rows
 
     def row_count(self) -> int:
         return sum(self.part_rows().values())
 
     def _write_manifest(self, parts: dict[str, str], rows: dict[str, int]) -> None:
-        self._write_json_atomic(
-            self._manifest_path(),
-            {"parts": parts, "n_parts": self.n_parts, "rows": rows},
+        self.storage.write_json(
+            self.MANIFEST, {"parts": parts, "n_parts": self.n_parts, "rows": rows}
         )
 
     # -- schema (stored once so empty partitions stay readable) ---------------
     def _schema(self) -> T.StructType | None:
-        doc = self._read_json(self._join("_SCHEMA.json"))
+        doc = self.storage.read_json(self.SCHEMA)
         return None if doc is None else T.StructType.fromJson(doc)
-
-    def _store_schema(self, df: DataFrame) -> None:
-        from pyarrow import fs as pafs
-
-        p = self._join("_SCHEMA.json")
-        if self.fs.get_file_info(p).type == pafs.FileType.NotFound:
-            with self.fs.open_output_stream(p) as f:
-                f.write(json.dumps(df.schema.jsonValue()).encode())
 
     # -- read ----------------------------------------------------------------
     def read(self, parts: list[int] | None = None) -> DataFrame | None:
@@ -198,7 +145,7 @@ class SignatureStore:
         # an object store (no real directories), and Spark errors on a
         # missing input path
         paths = [
-            self._spark_uri(m[p]) for p in wanted if p in m and rows.get(p, -1) != 0
+            self.storage.uri(m[p]) for p in wanted if p in m and rows.get(p, -1) != 0
         ]
         if not paths:
             return self.spark.createDataFrame([], schema)
@@ -207,23 +154,6 @@ class SignatureStore:
         return self.spark.read.schema(schema).parquet(*paths)
 
     # -- write ---------------------------------------------------------------
-    def _dir_footer_rows(self, dir_path: str) -> int:
-        """Row count of one partition dir from its parquet footers —
-        driver-side metadata reads via ``pyarrow.fs``, zero Spark jobs,
-        local or remote (the round-3 pathlib version saw nothing on
-        hdfs:///s3a:// and silently recorded 0)."""
-        import pyarrow.parquet as pq
-        from pyarrow import fs as pafs
-
-        sel = pafs.FileSelector(dir_path, allow_not_found=True)
-        total = 0
-        for info in self.fs.get_file_info(sel):
-            name = info.base_name
-            if info.is_file and name.startswith("part-") and name.endswith(".parquet"):
-                with self.fs.open_input_file(info.path) as f:
-                    total += pq.ParquetFile(f).metadata.num_rows
-        return total
-
     def _write_parts(
         self, df: DataFrame, parts: list[int]
     ) -> tuple[dict[str, str], dict[str, int]]:
@@ -232,26 +162,27 @@ class SignatureStore:
         entries and per-partition row counts for the written partitions.
         One Spark job (partitionBy); the counts come from the freshly
         written parquet footers (driver-side metadata reads, no extra
-        job — same technique as CheckpointManager._footer_partition_counts)."""
+        job — the storage seam's footer counts, as stage checkpoints use)."""
         gen = f"gen-{time.time_ns()}"
-        self._store_schema(df)
+        if self._schema() is None:
+            self.storage.write_json(self.SCHEMA, df.schema.jsonValue())
         (
             df.withColumn("_part", _part_col(self.n_parts))
             .write.mode("overwrite")
             .partitionBy("_part")
-            .parquet(self._spark_uri(gen))
+            .parquet(self.storage.uri(gen))
         )
         entries: dict[str, str] = {}
         rows: dict[str, int] = {}
         for p in parts:
             rel = f"{gen}/_part={p}"
-            n = self._dir_footer_rows(self._join(rel))
+            n = sum(self.storage.footer_rows(rel))
             if n == 0:
                 # a partition can legitimately become empty (all urls
                 # deleted); keep the manifest entry (read() skips rows==0)
                 # and materialize the dir where the fs has real dirs so a
                 # plain listing matches the manifest
-                self.fs.create_dir(self._join(rel), recursive=True)
+                self.storage.fs.create_dir(self.storage.path(rel), recursive=True)
             entries[str(p)] = rel
             rows[str(p)] = n
         return entries, rows
@@ -324,15 +255,16 @@ class SignatureStore:
         partition dirs removed."""
         from pyarrow import fs as pafs
 
+        fs = self.storage.fs
         live = set((self.manifest() or {}).values())
         removed = 0
-        root = self.fs.get_file_info(
-            pafs.FileSelector(self.base_path, allow_not_found=True)
+        root = fs.get_file_info(
+            pafs.FileSelector(self.storage.root, allow_not_found=True)
         )
         for gen in root:
             if not gen.base_name.startswith("gen-"):
                 continue
-            entries = self.fs.get_file_info(
+            entries = fs.get_file_info(
                 pafs.FileSelector(gen.path, allow_not_found=True)
             )
             parts_left = 0
@@ -340,12 +272,12 @@ class SignatureStore:
                 if not e.base_name.startswith("_part="):
                     continue  # _SUCCESS, .*.crc and friends are markers
                 if f"{gen.base_name}/{e.base_name}" not in live:
-                    self.fs.delete_dir(e.path)
+                    fs.delete_dir(e.path)
                     removed += 1
                 else:
                     parts_left += 1
             if parts_left == 0:
-                self.fs.delete_dir(gen.path)
+                fs.delete_dir(gen.path)
         return removed
 
 
