@@ -208,10 +208,10 @@ def test_no_full_store_scan_per_micro_batch(spark, tmp_path):
     full_reads = []
     orig_read = ingest.store.read
 
-    def spy_read(parts=None):
+    def spy_read(parts=None, snap=None):
         if parts is None:
             full_reads.append(True)
-        return orig_read(parts)
+        return orig_read(parts, snap)
 
     ingest.store.read = spy_read
     ingest.process_batch(pages_df(["https://new/a"]), 1)
@@ -369,6 +369,47 @@ def test_store_on_a_file_uri(spark, tmp_path):
     (_root(store) / SignatureStore.MANIFEST).write_text('{"parts": ')
     with pytest.raises(ValueError):
         SignatureStore(spark, uri)
+
+
+def test_upsert_batch_reads_store_metadata_once(spark, tmp_path, monkeypatch):
+    """One upsert micro-batch reads ``_MANIFEST`` and ``_SCHEMA.json`` at
+    most once each (every read is a GET round trip on an object store),
+    with the streaming probe on or off, and its ``store_rows`` is the
+    count of the manifest it wrote. A corrupt manifest still fails the
+    batch instead of reading as "no store"."""
+    from video_duplicate_finder_python_spark.sources.storage import Storage
+
+    reads: list[str] = []
+    stock = Storage.read_json
+
+    def spy(self, rel):
+        reads.append(rel)
+        return stock(self, rel)
+
+    pages = [(f"https://a/{i}", f"alpha text {i} " + _PROBE_UNIQ) for i in range(20)]
+    for probe_dir in (None, str(tmp_path / "dups")):
+        base = tmp_path / ("probe" if probe_dir else "plain")
+        ingest = StreamingSignatureIngest(
+            spark, str(base), DedupConfig(), n_parts=4, probe_dups_dir=probe_dir
+        )
+        ingest.process_batch(_probe_pages_df(spark, pages), 0)
+        monkeypatch.setattr(Storage, "read_json", spy)
+        reads.clear()
+        ingest.process_batch(
+            _probe_pages_df(
+                spark, [("https://a/0", "alpha text 0 updated"), ("https://b/0", _PROBE_BODY)]
+            ),
+            1,
+        )
+        monkeypatch.setattr(Storage, "read_json", stock)
+        assert reads.count(SignatureStore.MANIFEST) <= 1, reads
+        assert reads.count(SignatureStore.SCHEMA) <= 1, reads
+        assert ingest.batch_stats[-1]["store_rows"] == 21
+        assert ingest.store.row_count() == 21
+
+    (base / SignatureStore.MANIFEST).write_text('{"parts": ')
+    with pytest.raises(ValueError):
+        ingest.process_batch(_probe_pages_df(spark, [("https://c/0", "gamma")]), 2)
 
 
 def _probe_pages_df(spark, rows):

@@ -85,9 +85,10 @@ construction, and a repeated build-side key changes no semi or anti
 join.
 
 Python-task note: every Python UDF task pays a fixed start-up cost
-(~0.17 CPU-s measured on pyspark 4.1 / Python 3.11, README "Scale
-design") that dwarfs the probe's kernels at batch sizes, so the Python
-stages are sized by the data, not by the upstream split count: the
+(~0.04 CPU-s on pyspark 4.1 / Python 3.11 with the engine's zip re-read
+guard, 0.12-0.29 without it, README "Scale design") that still rivals
+the probe's kernels at batch sizes, so the Python stages are sized by
+the data, not by the upstream split count: the
 profile frame is shingled once behind an AQE ``REBALANCE`` and the span
 check gets its own (``verify_candidates``). At a 50-page batch the probe
 runs 4 Python tasks — 2 signature + 1 shingle + 1 span. The profile cut

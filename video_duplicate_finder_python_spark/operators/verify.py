@@ -28,8 +28,10 @@ Shape notes:
 - the span rows pass an AQE ``REBALANCE`` before the UDF, so
   the span stage's task count follows the bytes of text it checks, not
   the scored frame's partition count: a handful of pairs is one Python
-  task (each task has a fixed start-up cost, README "Scale design"), a
-  large slow set keeps its parallelism.
+  task (each task has a fixed start-up cost, ~0.04 CPU-s once
+  ``session.skip_unchanged_zip_rereads`` stops the per-task zip
+  directory re-reads, README "Scale design"), a large slow set keeps its
+  parallelism.
 - both scoring-join sides project the same profile frame, so a
   broadcast profile frame is ONE broadcast exchange, reused by the
   second side: one job builds it, and the profile frame's lazy cut is

@@ -29,6 +29,7 @@ ingest.
 from __future__ import annotations
 
 import time
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -54,6 +55,17 @@ PAGES_SCHEMA = T.StructType(
 
 def _part_col(n_parts: int):
     return F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
+
+
+class StoreSnapshot(NamedTuple):
+    """The store's metadata as one read of ``_MANIFEST`` and one of
+    ``_SCHEMA.json`` left it: partition id → generation path (None: no
+    store yet), per-partition row counts, and the row schema (None: never
+    written)."""
+
+    parts: dict[str, str] | None
+    rows: dict[str, int]
+    schema: T.StructType | None
 
 
 class SignatureStore:
@@ -96,6 +108,20 @@ class SignatureStore:
         doc = self.storage.read_json(self.MANIFEST)
         return None if doc is None else doc["parts"]
 
+    def snapshot(self) -> StoreSnapshot:
+        """Manifest, row counts and schema (stored once, so partitions
+        emptied by deletes stay readable) from one read of each file. A
+        write path carries it from its first read to the manifest it
+        writes (single-writer contract), so a batch reads each file once:
+        every read is a GET round trip on an object store."""
+        doc = self.storage.read_json(self.MANIFEST)
+        schema = self.storage.read_json(self.SCHEMA)
+        return StoreSnapshot(
+            None if doc is None else doc["parts"],
+            self._rows(doc),
+            None if schema is None else T.StructType.fromJson(schema),
+        )
+
     def part_rows(self) -> dict[str, int]:
         """Per-partition row counts, maintained from parquet footers at
         write time — ``row_count()`` is a driver-side dict sum, never a
@@ -108,7 +134,9 @@ class SignatureStore:
         counts persist the next time a write path calls
         ``_write_manifest`` (every upsert/swap does), which already
         assumes the store's single-writer contract."""
-        doc = self.storage.read_json(self.MANIFEST)
+        return self._rows(self.storage.read_json(self.MANIFEST))
+
+    def _rows(self, doc: dict | None) -> dict[str, int]:
         if doc is None:
             return {}
         parts = doc.get("parts", {})
@@ -121,25 +149,24 @@ class SignatureStore:
     def row_count(self) -> int:
         return sum(self.part_rows().values())
 
-    def _write_manifest(self, parts: dict[str, str], rows: dict[str, int]) -> None:
+    def _write_manifest(
+        self, parts: dict[str, str], rows: dict[str, int]
+    ) -> dict[str, int]:
         self.storage.write_json(
             self.MANIFEST, {"parts": parts, "n_parts": self.n_parts, "rows": rows}
         )
-
-    # -- schema (stored once so empty partitions stay readable) ---------------
-    def _schema(self) -> T.StructType | None:
-        doc = self.storage.read_json(self.SCHEMA)
-        return None if doc is None else T.StructType.fromJson(doc)
+        return rows
 
     # -- read ----------------------------------------------------------------
-    def read(self, parts: list[int] | None = None) -> DataFrame | None:
+    def read(
+        self, parts: list[int] | None = None, snap: StoreSnapshot | None = None
+    ) -> DataFrame | None:
         """Read the whole store, or only the given url-hash partitions
-        (partition pruning — a point/delta lookup never scans the store)."""
-        m = self.manifest()
-        schema = self._schema()
+        (partition pruning — a point/delta lookup never scans the store),
+        as of ``snap`` (default: a fresh snapshot)."""
+        m, rows, schema = snap or self.snapshot()
         if m is None or schema is None:
             return None
-        rows = self.part_rows()
         wanted = [str(p) for p in parts] if parts is not None else sorted(m)
         # skip partitions known empty: their "directory" need not exist on
         # an object store (no real directories), and Spark errors on a
@@ -155,7 +182,7 @@ class SignatureStore:
 
     # -- write ---------------------------------------------------------------
     def _write_parts(
-        self, df: DataFrame, parts: list[int]
+        self, df: DataFrame, parts: list[int], has_schema: bool
     ) -> tuple[dict[str, str], dict[str, int]]:
         """Write ``df`` (rows belonging to ``parts`` only) as one new
         generation, one subdirectory per partition; returns the manifest
@@ -164,7 +191,7 @@ class SignatureStore:
         written parquet footers (driver-side metadata reads, no extra
         job — the storage seam's footer counts, as stage checkpoints use)."""
         gen = f"gen-{time.time_ns()}"
-        if self._schema() is None:
+        if not has_schema:
             self.storage.write_json(self.SCHEMA, df.schema.jsonValue())
         (
             df.withColumn("_part", _part_col(self.n_parts))
@@ -187,40 +214,46 @@ class SignatureStore:
             rows[str(p)] = n
         return entries, rows
 
-    def swap_in(self, df: DataFrame) -> None:
-        """Full-store (re)load: write every partition, flip the manifest."""
-        entries, rows = self._write_parts(df, list(range(self.n_parts)))
-        self._write_manifest(entries, rows)
+    def swap_in(
+        self, df: DataFrame, snap: StoreSnapshot | None = None
+    ) -> dict[str, int]:
+        """Full-store (re)load: write every partition, flip the manifest.
+        Returns the per-partition row counts it wrote."""
+        snap = snap or self.snapshot()
+        entries, rows = self._write_parts(
+            df, list(range(self.n_parts)), snap.schema is not None
+        )
+        return self._write_manifest(entries, rows)
 
-    def upsert_parts(self, df: DataFrame, parts: list[int]) -> None:
+    def upsert_parts(
+        self, df: DataFrame, parts: list[int], snap: StoreSnapshot | None = None
+    ) -> dict[str, int]:
         """Replace only ``parts`` with ``df``'s rows; all other partitions
-        keep their current files untouched."""
+        keep their current files untouched. ``snap`` is the store as
+        ``df`` was read from it. Returns the per-partition row counts."""
+        snap = snap or self.snapshot()
         if not parts:
-            return
-        m = self.manifest() or {}
-        rows = self.part_rows()
-        new_entries, new_rows = self._write_parts(df, parts)
-        m.update(new_entries)
-        rows.update(new_rows)
-        self._write_manifest(m, rows)
+            return snap.rows
+        new_entries, new_rows = self._write_parts(df, parts, snap.schema is not None)
+        m = {**(snap.parts or {}), **new_entries}
+        return self._write_manifest(m, {**snap.rows, **new_rows})
 
     # -- deletes (reference database.py:275-313) -------------------------------
     def delete_urls(self, urls: list[str]) -> int:
         """Targeted delete (`_remove_file` analog). Rewrites only the
         partitions the urls hash into; returns rows removed (derived from
         the manifest row counts — no count() jobs)."""
-        m = self.manifest()
-        if m is None or not urls:
+        snap = self.snapshot()
+        if snap.parts is None or not urls:
             return 0
         urls_df = self.spark.createDataFrame([(u,) for u in urls], ["url"])
         parts = [
             int(r["p"])
             for r in urls_df.select(_part_col(self.n_parts).alias("p")).distinct().collect()
         ]
-        before = self.row_count()
-        kept = self.read(parts).join(F.broadcast(urls_df), "url", "left_anti")
-        self.upsert_parts(kept, parts)
-        return before - self.row_count()
+        kept = self.read(parts, snap).join(F.broadcast(urls_df), "url", "left_anti")
+        rows = self.upsert_parts(kept, parts, snap)
+        return sum(snap.rows.values()) - sum(rows.values())
 
     def clear_all(self) -> None:
         """Truncate (`clear_all` analog): flip to an empty manifest —
@@ -232,13 +265,13 @@ class SignatureStore:
         """GC rows whose url vanished from the source snapshot
         (`cleanup_missing_files` analog). Full-store semi-join rewrite —
         inherently a full pass, like the reference's full-table iteration."""
-        old = self.read()
+        snap = self.snapshot()
+        old = self.read(snap=snap)
         if old is None:
             return 0
-        before = self.row_count()
         kept = old.join(existing_urls.select("url"), "url", "left_semi")
-        self.swap_in(kept)
-        return before - self.row_count()
+        rows = self.swap_in(kept, snap)
+        return sum(snap.rows.values()) - sum(rows.values())
 
     # -- garbage collection ----------------------------------------------------
     def vacuum(self) -> int:
@@ -320,7 +353,9 @@ class StreamingSignatureIngest:
             "url", extract_text_col(F.col("html")).alias("text")
         ).withColumn("content_hash", content_hash_col(F.col("text")))
 
-        manifest = self.store.manifest()
+        # the store's metadata, read once and carried to the upsert
+        snap = self.store.snapshot()
+        manifest = snap.parts
         probe_pairs = probe_overflow = None
         if self.probe_dups_dir and manifest:
             # streaming dedup (opt-in, see __init__): probe BEFORE the
@@ -336,7 +371,7 @@ class StreamingSignatureIngest:
             from ..operators.incremental_probe import probe_near_dups
 
             pairs, overflow, _ = probe_near_dups(
-                self.store.read(), docs.select("url", "text"), self.cfg
+                self.store.read(snap=snap), docs.select("url", "text"), self.cfg
             )
             observed_dups = Observation()
             out_dir = f"{self.probe_dups_dir}/batch_id={int(batch_id)}"
@@ -364,7 +399,7 @@ class StreamingSignatureIngest:
             sigs = compute_signatures(
                 docs, self.cfg, keep_cols=["url", "content_hash", "text"]
             )
-            self.store.swap_in(sigs)
+            rows = self.store.swap_in(sigs, snap)
             delta_count = None
             touched: list[int] = list(range(self.store.n_parts))
         else:
@@ -380,7 +415,7 @@ class StreamingSignatureIngest:
                 .distinct()
                 .collect()
             ]
-            old_touched = self.store.read(touched)
+            old_touched = self.store.read(touched, snap)
             keys = ["url", "content_hash"]
             delta = docs.join(old_touched.select(*keys), keys, "left_anti")
             kept = old_touched.join(delta.select("url"), "url", "left_anti")
@@ -397,18 +432,18 @@ class StreamingSignatureIngest:
                 self.cfg,
                 keep_cols=["url", "content_hash", "text"],
             )
-            self.store.upsert_parts(fresh.unionByName(kept), touched)
+            rows = self.store.upsert_parts(fresh.unionByName(kept), touched, snap)
             # an empty batch touches no partition, so nothing was written
             # and nothing observed
             delta_count = observed.get["rows"] if touched else 0
 
         stat = {
             "batch_id": int(batch_id),
-            # manifest row counts (maintained from parquet footers at write
-            # time) — a driver-side dict sum; the previous shape ran a
-            # full-store read().count() Spark job per micro-batch, an
-            # O(store) cost that undercut the O(delta) upsert
-            "store_rows": self.store.row_count(),
+            # the row counts of the manifest just written (maintained from
+            # parquet footers at write time): a driver-side dict sum, never
+            # a Spark job over the store, which would undercut the O(delta)
+            # upsert
+            "store_rows": sum(rows.values()),
             "delta_rows": delta_count,
             "touched_parts": len(touched),
         }
